@@ -13,7 +13,11 @@ own harness exactly the way the real driver does):
    ``TypeError: unhashable type`` here just like they do in the driver,
    so ArrayType/MapType leaks are caught locally before commit.
 
-Run from /root/repo before every commit: ``python scripts/driver_sim.py``
+This module is the repo's only verification code: the pytest suite
+builds its session with ``plain_session`` and checks every result with
+``frame_diff`` over ``duck_views``.
+
+Run from the repo root before every commit: ``python scripts/driver_sim.py``
 (optionally pass query ids to restrict).
 """
 
@@ -89,25 +93,16 @@ def main() -> int:
     only = sys.argv[1:] or None
     # Plain session: exactly what the grading driver hands to queries().
     stress = SF01 != "/root/testdata/sf0.01"
-    builder = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("driver-sim")
-        .config("spark.ui.enabled", "false")
+    # Stress mode (sf0.1+ sweeps) needs a real heap: a plain-1g session
+    # dies at the GC-heavy keys and poisons the JVM for everything after
+    # (r12 closing incident). The driver-faithful sf0.01 path stays a
+    # PLAIN session — the real driver runs there.
+    spark = plain_session(
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g") if stress else None
     )
     if stress:
-        # Stress mode (sf0.1+ sweeps) needs a real heap: a plain-1g
-        # session dies at the GC-heavy keys and poisons the JVM for
-        # everything after (r12 closing incident). The driver-faithful
-        # sf0.01 path stays a PLAIN session — the real driver runs there.
-        builder = builder.config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-    spark = builder.getOrCreate()
-    if stress:
-        # driver.memory only applies at JVM launch; getOrCreate() may
-        # have silently reused an existing under-sized session — refuse
-        # EARLY instead of dying mid-sweep.
+        # getOrCreate() may have silently reused an existing under-sized
+        # session — refuse EARLY instead of dying mid-sweep.
         from sqlengine_spark.session import require_heap
 
         require_heap(spark, 7.0, f"driver_sim stress sweep at {SF01}")
@@ -117,11 +112,7 @@ def main() -> int:
     print(f"t1 entry: rows={n} ({time.time() - t0:.1f}s)")
     assert n > 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF01}/{t}.parquet')"
-        )
+    con = duck_views(SF01)
     qs, oracles = mod.queries(), mod.oracle_sql()
     fails = []
     n_run = 0
@@ -130,32 +121,16 @@ def main() -> int:
             continue
         n_run += 1
         try:
-            sdf = qs[name](spark, SF01)
-            spdf = sdf.toPandas()
+            spdf = qs[name](spark, SF01).toPandas()
             if name not in oracles:
                 # rows-only: the driver still canonicalizes (so array
                 # leaks fail even here) and records the row count.
                 canon_df(spdf)
                 print(f"  {name}: rows-only rows={len(spdf)} OK")
                 continue
-            dpdf = con.execute(oracles[name]).df()
-            if sorted(spdf.columns) != sorted(dpdf.columns):
-                fails.append(
-                    (name, f"cols {sorted(spdf.columns)} != {sorted(dpdf.columns)}")
-                )
-                continue
-            if len(spdf) != len(dpdf):
-                fails.append((name, f"rowcount {len(spdf)} != {len(dpdf)}"))
-                continue
-            s_c, d_c = canon_df(spdf), canon_df(dpdf)
-            if not s_c.equals(d_c):
-                neq = (s_c != d_c).any(axis=1)
-                i = int(neq.idxmax())
-                fails.append(
-                    (name,
-                     f"values differ, e.g. row {i}: "
-                     f"{list(s_c.iloc[i])} != {list(d_c.iloc[i])}")
-                )
+            why = frame_diff(spdf, con.execute(oracles[name]).df())
+            if why:
+                fails.append((name, why))
             else:
                 print(f"  {name}: MATCH rows={len(spdf)}")
         except Exception as e:  # noqa: BLE001 — report, keep going
@@ -167,6 +142,53 @@ def main() -> int:
         return 1
     print(f"\nALL MATCH ({n_run} queries)")
     return 0
+
+
+def plain_session(driver_memory: str | None = None) -> SparkSession:
+    """The session the grading driver hands to ``queries()``: Spark's
+    defaults (1 GiB heap, none of ``get_spark()``'s configs) on
+    ``local[$SPARK_GRAFT_CPUS]``. ``driver_memory`` is for stress sweeps
+    above the driver's scale only; it takes effect at JVM launch."""
+    builder = (
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        .appName("driver-sim")
+        .config("spark.ui.enabled", "false")
+    )
+    if driver_memory:
+        builder = builder.config("spark.driver.memory", driver_memory)
+    return builder.getOrCreate()
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table found in ``sf_dir``.
+    ``<table>.parquet`` is either one file (the fixtures) or a
+    directory of part files (a table staged with a Spark write)."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def frame_diff(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """The driver's per-query check: same column names, same row count,
+    equal ``canon_df`` forms. Returns None on a match, else the reason,
+    with the first differing canonical row."""
+    if sorted(got.columns) != sorted(want.columns):
+        return f"cols {sorted(got.columns)} != {sorted(want.columns)}"
+    if len(got) != len(want):
+        return f"rowcount {len(got)} != {len(want)}"
+    g, w = canon_df(got), canon_df(want)
+    # Zero rows carry no values; only their (engine-specific) dtypes
+    # could differ, and the driver hashes values.
+    if len(g) == 0 or g.equals(w):
+        return None
+    i = int((g != w).any(axis=1).idxmax())
+    return f"values differ, e.g. row {i}: {list(g.iloc[i])} != {list(w.iloc[i])}"
 
 
 if __name__ == "__main__":

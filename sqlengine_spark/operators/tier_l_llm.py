@@ -1888,9 +1888,10 @@ def l_topic_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair space is VOCABULARY-bounded, not corpus-bounded —
     the per-doc positional fan-out emits C(|distinct tokens per doc|,
     2) pairs which partial-aggregate map-side into at most C(|V|, 2)
-    groups; df and N broadcast. At web scale the vocabulary is first
-    capped to the top-V tokens by df (one ranked filter before the
-    fan-out) — same plan, bounded V; pairs never cross documents.
+    groups; df joins plain (AQE broadcasts it when small), N
+    broadcast. At web scale the vocabulary is first capped to the
+    top-V tokens by df (one ranked filter before the fan-out) — same
+    plan, bounded V; pairs never cross documents.
 
     R15 rewrite (guide §2.3/§2.4; the r14 before-plan executed the
     token explode FIVE times — pairs a/b self-join, da, db, n_total):
@@ -1910,7 +1911,8 @@ def l_topic_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges are vocabulary-bounded.
     """
     d = table(spark, sf_dir, "documents")
-    arr_d = d.select(
+    # NULL doc_ids pair with nothing, as in the oracle's a.doc_id = b.doc_id
+    arr_d = d.filter(F.col("doc_id").isNotNull()).select(
         F.array_sort(F.array_distinct(F.split("text", " "))).alias("arr")
     )
     lhs = arr_d.select(

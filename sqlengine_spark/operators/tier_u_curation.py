@@ -339,10 +339,11 @@ def l_dup_ngram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("occ").alias("total_8grams"),
         F.count("*").alias("distinct_8grams"),
     )
-    docs = base.groupBy("source").agg(
+    docs = base.groupBy(F.col("source").alias("src")).agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
-    return docs.join(per_src, "source").select(
+    # null-safe: the oracle's GROUP BY source keeps a NULL-source group
+    return docs.join(per_src, docs.src.eqNullSafe(per_src.source)).select(
         "source",
         "n_docs",
         "total_8grams",

@@ -1,102 +1,85 @@
-"""Shared fixtures: one SparkSession per test session + a DuckDB oracle
-compare loop replicating the driver's t2 check (SURVEY §5.2).
+"""Shared fixtures and the oracle compare, all taken from
+``scripts/driver_sim.py`` so the suite checks results exactly the way
+the grading driver does (SURVEY §5.2):
 
-The compare is deliberately strict — row count, column names (sorted),
-and exact value equality on canonicalized rows — so any driver
-hash-mismatch is reproducible locally.
+- ``spark`` is driver_sim's plain session (Spark defaults, 1 GiB heap,
+  none of ``get_spark()``'s configs), the kind the driver passes in;
+- every result compare goes through ``driver_sim.frame_diff``: same
+  column names, same row count, equal ``canon_df`` forms.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
+import contextlib
 import os
+import shutil
 import sys
+import tempfile
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.driver_sim import duck_views, frame_diff, plain_session  # noqa: E402
 from sqlengine_spark.registry import all_oracles, all_queries  # noqa: E402
-from sqlengine_spark.session import TABLES, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_DIR_SMALL = "/root/testdata/sf0.001"
+# Schemas of the fixture tables that tests stage with their own rows.
+DOCS = "doc_id long, text string, lang string, source string, n_chars long"
+EVENTS = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("sqlengine_spark_tests")
-    yield s
+    return plain_session()
 
 
-@pytest.fixture(scope="session")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+def assert_same(sdf, want):
+    """A Spark DataFrame against an expected pandas frame."""
+    why = frame_diff(sdf.toPandas(), want)
+    assert why is None, why
 
 
-def _canon(v):
-    """Canonicalize one cell for cross-engine equality."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # Queries round floats themselves (SURVEY §5.4 R1); this guard only
-        # absorbs representation noise far below those rounding levels.
-        return round(v, 9)
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
-    return v
+def oracle_df(sf_dir: str, sql: str):
+    """Run ``sql`` on DuckDB views over the tables in ``sf_dir``."""
+    con = duck_views(sf_dir)
+    try:
+        return con.execute(sql).df()
+    finally:
+        con.close()
 
 
-def canon_rows(cols, rows):
-    """Order-insensitive canonical form: sort columns by name, then rows."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_canon(r[i]) for i in order) for r in rows]
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return [cols[i] for i in order], out
+def assert_matches_oracle(spark, qid: str, sf_dir: str = SF_DIR):
+    """queries()[qid] on Spark against oracle_sql()[qid] on DuckDB over
+    the same tables; returns the oracle's frame."""
+    spdf = all_queries()[qid](spark, sf_dir).toPandas()
+    want = oracle_df(sf_dir, all_oracles()[qid])
+    why = frame_diff(spdf, want)
+    assert why is None, f"{qid}: {why}"
+    return want
 
 
-def assert_matches_oracle(spark, duck, qid: str, sf_dir: str = SF_DIR):
-    """Run queries()[qid] on Spark and oracle_sql()[qid] on DuckDB and
-    compare row count, column names, and canonicalized values."""
-    q = all_queries()[qid]
-    sdf = q(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = list(sdf.columns)
+def docs_match_oracle(spark, qid: str, rows):
+    """``assert_matches_oracle`` on ``rows`` staged as the documents
+    table (``DOCS`` schema); returns the oracle's frame."""
+    with staged(spark, "documents", rows, DOCS) as d:
+        return assert_matches_oracle(spark, qid, d)
 
-    sql = all_oracles()[qid]
-    res = duck.execute(sql)
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
 
-    assert sorted(scols) == sorted(dcols), (
-        f"{qid}: column mismatch spark={sorted(scols)} duckdb={sorted(dcols)}"
-    )
-    assert len(srows) == len(drows), (
-        f"{qid}: row count mismatch spark={len(srows)} duckdb={len(drows)}"
-    )
-    _, s_canon = canon_rows(scols, srows)
-    _, d_canon = canon_rows(dcols, drows)
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_canon, d_canon)) if a != b
-    ]
-    assert not mismatches, (
-        f"{qid}: {len(mismatches)} row mismatches; first 3: {mismatches[:3]}"
-    )
+@contextlib.contextmanager
+def staged(spark, table: str, rows, schema: str):
+    """Write ``rows`` as ``<tmp>/<table>.parquet`` so the registered
+    operators (which read through session.table) run on them
+    unmodified; yields the directory and removes it afterwards."""
+    d = tempfile.mkdtemp(prefix=f"sqlengine_{table}_")
+    try:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/{table}.parquet")
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

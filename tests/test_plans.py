@@ -3,11 +3,16 @@ produces the scale-critical physical plans — pushdown, pruning, top-k,
 partial aggregation. These guard the 100 TB story, not correctness.
 """
 
+import functools
+
 from sqlengine_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
 
+@functools.cache
 def _plan(spark, qid):
+    """Formatted plan of queries()[qid], built once per session and
+    shared by the targeted tests and the repo-wide ``plan_sweep``."""
     df = all_queries()[qid](spark, SF_DIR)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return df._jdf.queryExecution().explainString(mode)

@@ -9,14 +9,26 @@ Runs at sf0.001 so each example is sub-second.
 from __future__ import annotations
 
 import duckdb
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from scripts.driver_sim import duck_views
 from sqlengine_spark.functions import dround
+from sqlengine_spark.registry import all_queries
 from sqlengine_spark.session import table
-from tests.conftest import SF_DIR_SMALL, canon_rows
+from tests.conftest import (
+    DOCS,
+    EVENTS,
+    SF_DIR_SMALL,
+    assert_matches_oracle,
+    assert_same,
+    docs_match_oracle,
+    oracle_df,
+    staged,
+)
 
 NUM_COLS = {
     "l_quantity": (1.0, 50.0),
@@ -29,11 +41,7 @@ OPS = ["<", ">=", "<=", ">"]
 
 @pytest.fixture(scope="module")
 def duck_small():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{SF_DIR_SMALL}/lineitem.parquet')"
-    )
+    con = duck_views(SF_DIR_SMALL)
     yield con
     con.close()
 
@@ -85,13 +93,7 @@ def test_random_filter_group_agg(spark, duck_small, preds, keys, acol):
                MIN({acol}) AS mn, MAX({acol}) AS mx
         FROM lineitem {where} GROUP BY {', '.join(keys)}
     """
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_small.execute(sql)
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
+    assert_same(sdf, duck_small.execute(sql).df())
 
 
 # Data-domain grid points where filter thresholds are most dangerous:
@@ -149,25 +151,7 @@ def test_boundary_ulp_thresholds(spark, duck_small, col, idx, ulps, op):
         FROM lineitem WHERE {col} {op} CAST('{thr!r}' AS DOUBLE)
         GROUP BY l_returnflag
     """
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_small.execute(sql)
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
-
-
-@pytest.fixture(scope="module")
-def duck_joins():
-    con = duckdb.connect()
-    for t in ("customer", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR_SMALL}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    assert_same(sdf, duck_small.execute(sql).df())
 
 
 JOIN_KINDS = {
@@ -187,7 +171,7 @@ JOIN_KINDS = {
     frac=st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
     seg=st.sampled_from(["BUILDING", "MACHINERY", "HOUSEHOLD"]),
 )
-def test_random_join_shapes(spark, duck_joins, kind, frac, seg):
+def test_random_join_shapes(spark, duck_small, kind, frac, seg):
     """Random join type x random pre-join filters: Spark and DuckDB must
     agree on matched AND null-padded rows."""
     thr = 900.0 + frac * 99100.0
@@ -204,13 +188,7 @@ def test_random_join_shapes(spark, duck_joins, kind, frac, seg):
               WHERE o_totalprice >= CAST('{thr!r}' AS DOUBLE)) o
           ON c.c_custkey = o.o_custkey
     """
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_joins.execute(sql)
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
+    assert_same(sdf, duck_small.execute(sql).df())
 
 
 @settings(
@@ -223,7 +201,7 @@ def test_random_join_shapes(spark, duck_joins, kind, frac, seg):
     desc=st.booleans(),
     agg=st.sampled_from(["SUM", "AVG", "MIN", "MAX", "COUNT"]),
 )
-def test_random_window_frames(spark, duck_joins, k, desc, agg):
+def test_random_window_frames(spark, duck_small, k, desc, agg):
     """Random ROWS frame size x sort direction x aggregate over a
     per-customer window: frame boundary semantics must agree."""
     from pyspark.sql import Window as W
@@ -250,13 +228,7 @@ def test_random_window_frames(spark, duck_joins, k, desc, agg):
                      * 100, 0) / 100 AS v
         FROM orders
     """
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_joins.execute(sql)
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
+    assert_same(sdf, duck_small.execute(sql).df())
 
 
 # ---------------------------------------------------------------------------
@@ -275,18 +247,14 @@ corpora = st.lists(
 )
 
 
-def _stage_corpus(spark, docs):
-    """Write a random corpus as <tmp>/documents.parquet so the REAL
-    registered tier-L pipelines (which read via session.table) run on
-    it unmodified."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sqlengine_prop_corpus_")
-    spark.createDataFrame(
+def _corpus(spark, docs):
+    """Stage a random token-list corpus as the documents table."""
+    return staged(
+        spark,
+        "documents",
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
         "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    return d
+    )
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -296,23 +264,8 @@ def test_random_corpus_prefix_jaccard_equals_naive(spark, docs):
     naive all-postings inverted-index SQL on ANY corpus — this is the
     prefix-filter completeness theorem under randomized attack (small
     vocab => heavy stopword skew, the adversarial case)."""
-    from sqlengine_spark.registry import all_oracles, all_queries
-
-    sf_dir = _stage_corpus(spark, docs)
-    sdf = all_queries()["l_simjoin_jaccard"](spark, sf_dir)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    res = con.execute(all_oracles()["l_simjoin_jaccard"])
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    con.close()
-    srows = [tuple(r) for r in sdf.collect()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
+    with _corpus(spark, docs) as sf_dir:
+        assert_matches_oracle(spark, "l_simjoin_jaccard", sf_dir)
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -320,42 +273,32 @@ def test_random_corpus_prefix_jaccard_equals_naive(spark, docs):
 def test_random_corpus_tfidf_scores_agree(spark, docs):
     """tf x ln(N/df) per (doc, term), dround(4), must agree cross-engine
     on random corpora (formula pin: natural log, dynamic N)."""
-    sf_dir = _stage_corpus(spark, docs)
-    d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-    tf = tok.groupBy("doc_id", "t").agg(F.count("*").alias("tf"))
-    df_ = tok.groupBy("t").agg(F.count_distinct("doc_id").alias("df"))
-    n = d.count()
-    sdf = tf.join(F.broadcast(df_), "t").select(
-        "doc_id",
-        F.col("t").alias("term"),
-        dround(F.col("tf") * F.log(F.lit(float(n)) / F.col("df")), 4).alias("tfidf"),
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    res = con.execute(
-        """
-        WITH tok AS (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
-        ),
-        tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM tok GROUP BY doc_id, t),
-        df AS (SELECT t, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY t),
-        n AS (SELECT COUNT(*) AS n FROM documents)
-        SELECT tf.doc_id, tf.t AS term,
-               ROUND(tf.tf * ln(n.n * 1.0 / df.df) * 1e4, 0) / 1e4 + 0 AS tfidf
-        FROM tf JOIN df ON tf.t = df.t, n
-        """
-    )
-    dcols = [d_[0] for d_ in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    con.close()
-    srows = [tuple(r) for r in sdf.collect()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
+    with _corpus(spark, docs) as sf_dir:
+        d = table(spark, sf_dir, "documents")
+        tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
+        tf = tok.groupBy("doc_id", "t").agg(F.count("*").alias("tf"))
+        df_ = tok.groupBy("t").agg(F.count_distinct("doc_id").alias("df"))
+        n = d.count()
+        sdf = tf.join(F.broadcast(df_), "t").select(
+            "doc_id",
+            F.col("t").alias("term"),
+            dround(F.col("tf") * F.log(F.lit(float(n)) / F.col("df")), 4).alias("tfidf"),
+        )
+        want = oracle_df(
+            sf_dir,
+            """
+            WITH tok AS (
+                SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
+            ),
+            tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM tok GROUP BY doc_id, t),
+            df AS (SELECT t, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY t),
+            n AS (SELECT COUNT(*) AS n FROM documents)
+            SELECT tf.doc_id, tf.t AS term,
+                   ROUND(tf.tf * ln(n.n * 1.0 / df.df) * 1e4, 0) / 1e4 + 0 AS tfidf
+            FROM tf JOIN df ON tf.t = df.t, n
+            """,
+        )
+        assert_same(sdf, want)
 
 
 unit_vectors = st.lists(
@@ -392,8 +335,6 @@ def test_vdot_bit_identical_to_duckdb_ordered_sum(spark, vecs):
         .select("va", "vb", vdot(F.col("ea"), F.col("eb")).alias("sim"))
         .collect()
     }
-    import pandas as pd
-
     con = duckdb.connect()
     con.register("vecs", pd.DataFrame({"vec_id": range(len(vecs)), "embedding": vecs}))
     res = con.execute(
@@ -436,8 +377,6 @@ def test_window_sum_round_first_derivation(spark, half_groups, avg_cents, noise,
     / count, 2)) must agree cross-engine on every prefix, including
     the boundary one, for positive and negated (sign-straddling,
     rule 5b) sequences alike."""
-    import duckdb as _duck
-
     m = 2 * half_groups
     target = half_groups * (2 * avg_cents + 1)  # = m * (avg_cents + 0.5)
     cents = [noise[i % len(noise)] for i in range(m)]
@@ -458,10 +397,10 @@ def test_window_sum_round_first_derivation(spark, half_groups, avg_cents, noise,
         dround(run_sum / F.count("*").over(w), 2).alias("running_avg"),
     )
 
-    con = _duck.connect()
+    con = duckdb.connect()
     con.execute("CREATE TABLE t (grp INT, i INT, amt DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    res = con.execute(
+    want = con.execute(
         """
         SELECT grp, i,
                ROUND(SUM(amt) OVER w * 100, 0) / 100 + 0 AS running_total,
@@ -469,14 +408,9 @@ def test_window_sum_round_first_derivation(spark, half_groups, avg_cents, noise,
                      / COUNT(*) OVER w * 100, 0) / 100 + 0 AS running_avg
         FROM t WINDOW w AS (PARTITION BY grp ORDER BY i)
         """
-    )
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
+    ).df()
     con.close()
-    srows = [tuple(r) for r in sdf.collect()]
-    _, s_canon = canon_rows(list(sdf.columns), srows)
-    _, d_canon = canon_rows(dcols, drows)
-    assert s_canon == d_canon
+    assert_same(sdf, want)
 
 
 # ---------------------------------------------------------------------------
@@ -538,50 +472,18 @@ def _jaccard_corpus(draw, force_fallback: bool):
 )
 @given(data=st.data())
 def test_jaccard_hi_both_branches_match_oracle(spark, force_fallback, data):
-    import os
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_oracles, all_queries
-
     texts = data.draw(_jaccard_corpus(force_fallback))
-    base = tempfile.mkdtemp(prefix="sqlengine_jacprop_")
-    try:
-        pdf = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)],
-            schema="doc_id long, text string",
-        )
-        pdf.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "documents.parquet")
-        )
-        # branch precondition: the generator must actually straddle the
-        # bound (tau=0.97 -> fallback iff n_max >= 34)
-        n_max = max(len(set(t.split(" "))) for t in texts)
-        assert (n_max >= 34) == force_fallback
-
-        result = all_queries()["l_simjoin_jaccard_hi"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'documents.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()["l_simjoin_jaccard_hi"])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        assert got == want
-        if force_fallback:
-            # the planted subset pair is a non-identical >= 0.97 match:
-            # the fallback must have found at least one J < 1.0 pair
-            assert any(r[-1] != "1.0" for r in want) or any(
-                "0.97" in str(r) for r in want
-            )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    # branch precondition: the generator must actually straddle the
+    # bound (tau=0.97 -> fallback iff n_max >= 34)
+    n_max = max(len(set(t.split(" "))) for t in texts)
+    assert (n_max >= 34) == force_fallback
+    rows = list(enumerate(texts))
+    with staged(spark, "documents", rows, "doc_id long, text string") as d:
+        want = assert_matches_oracle(spark, "l_simjoin_jaccard_hi", d)
+    if force_fallback:
+        # the planted subset pair is a non-identical >= 0.97 match
+        # (J = 33/34): the fallback must have found a J < 1.0 pair
+        assert (want["jaccard"] < 1.0).any(), want
 
 
 # ---------------------------------------------------------------------------
@@ -604,12 +506,6 @@ def test_jaccard_hi_both_branches_match_oracle(spark, force_fallback, data):
 )
 @given(data=st.data())
 def test_dsir_weight_matches_oracle_on_random_corpora(spark, data):
-    import os
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_oracles, all_queries
-
     vocab = [f"w{i}" for i in range(12)]
     n_docs = data.draw(st.integers(min_value=3, max_value=10))
     rows = []
@@ -621,29 +517,9 @@ def test_dsir_weight_matches_oracle_on_random_corpora(spark, data):
         ]
         src = data.draw(st.sampled_from(["src0", "src1", "src2"]))
         rows.append((i, " ".join(words), src))
-    base = tempfile.mkdtemp(prefix="sqlengine_dsirprop_")
-    try:
-        spark.createDataFrame(
-            rows, schema="doc_id long, text string, source string"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "documents.parquet")
-        )
-        result = all_queries()["l_dsir_weight"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'documents.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()["l_dsir_weight"])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    schema = "doc_id long, text string, source string"
+    with staged(spark, "documents", rows, schema) as d:
+        assert_matches_oracle(spark, "l_dsir_weight", d)
 
 
 # ---------------------------------------------------------------------------
@@ -653,42 +529,6 @@ def test_dsir_weight_matches_oracle_on_random_corpora(spark, data):
 # fingerprint; the 30-word passage chunking) and the Spark answer must
 # hash-equal the DuckDB oracle on every example.
 # ---------------------------------------------------------------------------
-
-
-def _roundtrip_documents(spark, rows, qid):
-    """Write generated documents rows, run queries()[qid] on them, run
-    the registered oracle on the same parquet, return (got, want)."""
-    import os
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_oracles, all_queries
-
-    base = tempfile.mkdtemp(prefix=f"sqlengine_{qid}_prop_")
-    try:
-        spark.createDataFrame(
-            rows,
-            schema="doc_id long, text string, lang string, "
-            "source string, n_chars long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "documents.parquet")
-        )
-        result = all_queries()[qid](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'documents.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()[qid])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        return got, want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @settings(
@@ -731,8 +571,7 @@ def test_dedup_prefix_boundary_matches_oracle(spark, data):
                 (doc_id, text, "en", "src0", len(text))
             )
             doc_id += 1
-    got, want = _roundtrip_documents(spark, rows, "l_dedup_prefix")
-    assert got == want
+    docs_match_oracle(spark, "l_dedup_prefix", rows)
 
 
 @settings(
@@ -784,14 +623,11 @@ def test_dedup_passage_boundary_matches_oracle(spark, data):
     full = [
         (i, t, "en", "src0", len(t)) for i, t in rows
     ]
-    got, want = _roundtrip_documents(spark, full, "l_dedup_passage")
-    assert got == want
+    want = docs_match_oracle(spark, "l_dedup_passage", full)
     # semantic pins on the oracle answer itself: doc 1's planted block
     # IS flagged, doc 2's shifted copy is not flagged AS that block
-    cols, rws = want
-    by_doc = {int(r[cols.index("doc_id")]): r for r in rws}
-    dup_ix = cols.index("n_dup_passages")
-    assert int(by_doc[1][dup_ix]) >= 1, "aligned re-occurrence missed"
+    n_dup = want.set_index("doc_id")["n_dup_passages"]
+    assert n_dup[1] >= 1, "aligned re-occurrence missed"
 
 
 @settings(
@@ -838,14 +674,11 @@ def test_dedup_substring_boundary_matches_oracle(spark, data):
         rows.append((did, " ".join(words(n))))
         did += 1
     full = [(i, t, "en", "src0", len(t)) for i, t in rows]
-    got, want = _roundtrip_documents(spark, full, "l_dedup_substring")
-    assert got == want
+    want = docs_match_oracle(spark, "l_dedup_substring", full)
     # semantic pin: the differently-aligned planted block IS caught
-    cols, rws = want
-    by_doc = {int(r[cols.index("doc_id")]): r for r in rws}
-    dup_ix = cols.index("n_dup_windows")
-    assert int(by_doc[0][dup_ix]) >= 1
-    assert int(by_doc[1][dup_ix]) >= 1
+    n_dup = want.set_index("doc_id")["n_dup_windows"]
+    assert n_dup[0] >= 1
+    assert n_dup[1] >= 1
 
 
 @settings(
@@ -877,8 +710,7 @@ def test_chunk_cdc_boundary_matches_oracle(spark, data):
         if data.draw(st.booleans()):
             rows.append((did, txt, "en", "src0", len(txt)))  # identical twin
             did += 1
-    got, want = _roundtrip_documents(spark, rows, "l_chunk_cdc")
-    assert got == want
+    docs_match_oracle(spark, "l_chunk_cdc", rows)
 
 
 @settings(
@@ -908,8 +740,7 @@ def test_logreg_train_matches_oracle_on_random_corpora(spark, data):
         )
         lang = data.draw(st.sampled_from(["en", "de", "en", "zh"]))
         rows.append((did, txt, lang, "src0", len(txt)))
-    got, want = _roundtrip_documents(spark, rows, "l_ml_logreg_train")
-    assert got == want
+    docs_match_oracle(spark, "l_ml_logreg_train", rows)
 
 
 @settings(
@@ -929,11 +760,6 @@ def test_theilsen_matches_oracle_on_random_streams(spark, data):
     interpolation), and multiple events per day (the order-immune
     integer-cent sum)."""
     import datetime as dt
-    import os
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_oracles, all_queries
 
     POOL = [0.005, -0.005, 1.015, 33.333, -12.345, 0.1 + 0.2, 50.0,
             -0.004999, 2.675]
@@ -958,32 +784,9 @@ def test_theilsen_matches_oracle_on_random_streams(spark, data):
                 eid += 1
     if not rows:
         rows.append((0, dt.datetime(2026, 3, 1), 0, "click", 1.0, "{}"))
-    base = tempfile.mkdtemp(prefix="sqlengine_theilsen_prop_")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.createDataFrame(
-            rows,
-            schema="event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "events.parquet")
-        )
-        result = all_queries()["m_ts_theilsen"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW events AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'events.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()["m_ts_theilsen"])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with staged(spark, "events", rows, EVENTS) as d:
+        assert_matches_oracle(spark, "m_ts_theilsen", d)
 
 
 @settings(
@@ -1004,12 +807,7 @@ def test_semdedup_matches_oracle_on_random_embeddings(spark, data):
     near the 0.35 threshold. The 1e-12 grid rounding must keep both
     engines' argmax and threshold decisions identical on every
     example."""
-    import os
-    import shutil
-    import tempfile
-
     from sqlengine_spark.operators.tier_l_llm import SEMDEDUP_K
-    from sqlengine_spark.registry import all_oracles, all_queries
 
     n_vec = data.draw(st.integers(SEMDEDUP_K, SEMDEDUP_K + 8))
     vecs = []
@@ -1030,29 +828,9 @@ def test_semdedup_matches_oracle_on_random_embeddings(spark, data):
                 for _ in range(64)
             ]
         vecs.append((vid, vec, vid % 3))
-    base = tempfile.mkdtemp(prefix="sqlengine_semdedup_prop_")
-    try:
-        spark.createDataFrame(
-            vecs, schema="vec_id long, embedding array<float>, label int"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "embeddings.parquet")
-        )
-        result = all_queries()["l_dedup_semantic"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW embeddings AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'embeddings.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()["l_dedup_semantic"])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    schema = "vec_id long, embedding array<float>, label int"
+    with staged(spark, "embeddings", vecs, schema) as d:
+        assert_matches_oracle(spark, "l_dedup_semantic", d)
 
 
 # ---------------------------------------------------------------------------
@@ -1071,15 +849,13 @@ labelled_corpora = st.lists(
 )
 
 
-def _stage_labelled_corpus(spark, docs):
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sqlengine_prop_nb_")
-    spark.createDataFrame(
+def _labelled_corpus(spark, docs):
+    return staged(
+        spark,
+        "documents",
         [(i, " ".join(toks), lang) for i, (lang, toks) in enumerate(docs)],
         "doc_id long, text string, lang string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    return d
+    )
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -1089,30 +865,13 @@ def test_random_corpus_naive_bayes_agrees_cross_engine(spark, docs):
     on ANY labelled corpus — including the adversarial splits Hypothesis
     finds (classes present only in test, empty train halves, all-unseen
     test vocabularies, exact integer score ties broken by lang ASC)."""
-    from sqlengine_spark.registry import all_oracles, all_queries
-
-    sf_dir = _stage_labelled_corpus(spark, docs)
-    sdf = all_queries()["l_ml_naive_bayes"](spark, sf_dir)
-    got = canon_rows(list(sdf.columns), [tuple(r) for r in sdf.collect()])
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-        )
-        cur = con.execute(all_oracles()["l_ml_naive_bayes"])
-        cols = [d[0] for d in cur.description]
-        want = canon_rows(cols, [tuple(r) for r in cur.fetchall()])
-    finally:
-        con.close()
-    assert got == want
+    with _labelled_corpus(spark, docs) as sf_dir:
+        assert_matches_oracle(spark, "l_ml_naive_bayes", sf_dir)
 
 
 def test_separable_corpus_naive_bayes_perfect_diagonal(spark):
     """On a corpus whose classes use disjoint vocabularies the
     classifier must be exact: confusion matrix purely diagonal."""
-    from sqlengine_spark.registry import all_queries
-
     docs = []
     vocab = {
         "xx": ["alpha", "beta", "gamma"],
@@ -1124,11 +883,8 @@ def test_separable_corpus_naive_bayes_perfect_diagonal(spark):
         for k in range(8):  # 4 train (even ids) + 4 test (odd ids)
             docs.append((lang, [words[(k + j) % 3] for j in range(4)]))
             i += 1
-    sf_dir = _stage_labelled_corpus(spark, docs)
-    rows = (
-        all_queries()["l_ml_naive_bayes"](spark, sf_dir)
-        .collect()
-    )
+    with _labelled_corpus(spark, docs) as sf_dir:
+        rows = all_queries()["l_ml_naive_bayes"](spark, sf_dir).collect()
     assert rows, "separable corpus must produce predictions"
     assert all(r["true_lang"] == r["pred_lang"] for r in rows), rows
     assert sum(r["n"] for r in rows) == 12  # 4 test docs x 3 classes
@@ -1142,23 +898,8 @@ def test_random_corpus_simhash_banding_is_lossless(spark, docs):
     <= 2 over 3 disjoint 6-bit bands => some band matches exactly)
     under randomized attack. Small vocab => heavy fingerprint
     collisions, the adversarial case for pair dedup."""
-    from sqlengine_spark.registry import all_oracles, all_queries
-
-    sf_dir = _stage_corpus(spark, docs)
-    sdf = all_queries()["l_simhash_hamming_join"](spark, sf_dir)
-    got = canon_rows(list(sdf.columns), [tuple(r) for r in sdf.collect()])
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-        )
-        cur = con.execute(all_oracles()["l_simhash_hamming_join"])
-        cols = [d[0] for d in cur.description]
-        want = canon_rows(cols, [tuple(r) for r in cur.fetchall()])
-    finally:
-        con.close()
-    assert got == want
+    with _corpus(spark, docs) as sf_dir:
+        assert_matches_oracle(spark, "l_simhash_hamming_join", sf_dir)
 
 
 @settings(
@@ -1177,11 +918,6 @@ def test_holt_matches_oracle_on_random_streams(spark, data):
     guard), cent-boundary values, and multi-event days (order-immune
     integer-cent sums feeding the recurrence)."""
     import datetime as dt
-    import os
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_oracles, all_queries
 
     POOL = [0.005, -0.005, 1.015, 33.333, -12.345, 50.0, -0.004999]
     rows = []
@@ -1195,34 +931,11 @@ def test_holt_matches_oracle_on_random_streams(spark, data):
                  v, "{}")
             )
             eid += 1
-    base = tempfile.mkdtemp(prefix="sqlengine_holt_prop_")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.createDataFrame(
-            rows,
-            schema="event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "events.parquet")
-        )
-        result = all_queries()["m_ts_holt"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        if n_days < 2:
-            assert got[1] == []  # sub-anchor series: zero rows, both engines
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW events AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'events.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()["m_ts_holt"])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with staged(spark, "events", rows, EVENTS) as d:
+        want = assert_matches_oracle(spark, "m_ts_holt", d)
+    if n_days < 2:
+        assert want.empty  # sub-anchor series: zero rows, both engines
 
 
 @settings(
@@ -1240,12 +953,7 @@ def test_rouge_matches_bruteforce_on_random_docs(spark, data):
     per pair — identical docs (F1=1), disjoint docs (F1=0),
     single-token sides (the rouge2 zero-denominator CASE guard), and
     repeated tokens (the CLIPPED min(tf_c, tf_r), not set overlap)."""
-    import os
-    import shutil
-    import tempfile
     from collections import Counter
-
-    from sqlengine_spark.registry import all_queries
 
     VOCAB = ["aa", "bb", "cc"]
     n_pairs = data.draw(st.integers(1, 4))
@@ -1254,45 +962,31 @@ def test_rouge_matches_bruteforce_on_random_docs(spark, data):
         n_tok = data.draw(st.integers(1, 6))
         toks = [VOCAB[data.draw(st.integers(0, 2))] for _ in range(n_tok)]
         docs.append((i, " ".join(toks), "en", "src0", len(" ".join(toks))))
-    base = tempfile.mkdtemp(prefix="sqlengine_rouge_prop_")
-    try:
-        spark.createDataFrame(
-            docs,
-            schema="doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "documents.parquet")
+
+    def grams(toks, n):
+        return Counter(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+
+    want_rows = []
+    by_id = {d[0]: d[1] for d in docs}
+    for p in range(n_pairs):
+        c = by_id[2 * p].split(" ")
+        r = by_id[2 * p + 1].split(" ")
+        g1c, g1r = grams(c, 1), grams(r, 1)
+        g2c, g2r = grams(c, 2), grams(r, 2)
+        ov1 = sum(min(n, g1r[g]) for g, n in g1c.items())
+        ov2 = sum(min(n, g2r[g]) for g, n in g2c.items())
+        lc, lr = len(c), len(r)
+        l2c, l2r = sum(g2c.values()), sum(g2r.values())
+        want_rows.append(
+            (
+                p, lc, lr, ov1, 2 * ov1 / (lc + lr),
+                l2c, l2r, ov2,
+                0.0 if l2c + l2r == 0 else 2 * ov2 / (l2c + l2r),
+            )
         )
-        result = all_queries()["l_eval_rouge"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-
-        def grams(toks, n):
-            return Counter(
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            )
-
-        want_rows = []
-        by_id = {d[0]: d[1] for d in docs}
-        for p in range(n_pairs):
-            c = by_id[2 * p].split(" ")
-            r = by_id[2 * p + 1].split(" ")
-            g1c, g1r = grams(c, 1), grams(r, 1)
-            g2c, g2r = grams(c, 2), grams(r, 2)
-            ov1 = sum(min(n, g1r[g]) for g, n in g1c.items())
-            ov2 = sum(min(n, g2r[g]) for g, n in g2c.items())
-            lc, lr = len(c), len(r)
-            l2c, l2r = sum(g2c.values()), sum(g2r.values())
-            want_rows.append(
-                (
-                    p, lc, lr, ov1, 2 * ov1 / (lc + lr),
-                    l2c, l2r, ov2,
-                    0.0 if l2c + l2r == 0 else 2 * ov2 / (l2c + l2r),
-                )
-            )
-        want = canon_rows(list(result.columns), want_rows)
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with staged(spark, "documents", docs, DOCS) as d:
+        result = all_queries()["l_eval_rouge"](spark, d)
+        assert_same(result, pd.DataFrame(want_rows, columns=result.columns))
 
 
 @settings(
@@ -1310,12 +1004,7 @@ def test_path_regex_matches_python_re_on_random_streams(spark, data):
     timestamp TIES (the tiebreak), single-event users, and users whose
     path matches several patterns at once."""
     import datetime as dt
-    import os
     import re
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_queries
 
     TYPES = ["view", "click", "purchase", "signup", "error"]
     rows = []
@@ -1329,40 +1018,28 @@ def test_path_regex_matches_python_re_on_random_streams(spark, data):
                 (eid, t, u, TYPES[data.draw(st.integers(0, 4))], 1.0, "{}")
             )
             eid += 1
-    base = tempfile.mkdtemp(prefix="sqlengine_pathre_prop_")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.createDataFrame(
-            rows,
-            schema="event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "events.parquet")
+    paths = {}
+    for e_id, t, u, ty, _v, _p in sorted(rows, key=lambda x: (x[2], x[1], x[0])):
+        paths.setdefault(u, []).append(ty[0])
+    paths = {u: "".join(p) for u, p in paths.items()}
+    tot = len(paths)
+    pats = [
+        ("converted_v_c_p", "v.*c.*p"),
+        ("error_before_purchase", "e.*p"),
+        ("signup_first", "^s"),
+        ("never_purchased", "^[^p]*$"),
+    ]
+    want_rows = [
+        (name, n, n / tot)
+        for name, n in (
+            (name, sum(1 for p in paths.values() if re.search(rx, p)))
+            for name, rx in pats
         )
-        result = all_queries()["m_path_regex"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        paths = {}
-        for e_id, t, u, ty, _v, _p in sorted(rows, key=lambda x: (x[2], x[1], x[0])):
-            paths.setdefault(u, []).append(ty[0])
-        paths = {u: "".join(p) for u, p in paths.items()}
-        tot = len(paths)
-        pats = [
-            ("converted_v_c_p", "v.*c.*p"),
-            ("error_before_purchase", "e.*p"),
-            ("signup_first", "^s"),
-            ("never_purchased", "^[^p]*$"),
-        ]
-        want_rows = [
-            (name, n, n / tot)
-            for name, n in (
-                (name, sum(1 for p in paths.values() if re.search(rx, p)))
-                for name, rx in pats
-            )
-        ]
-        want = canon_rows(list(result.columns), want_rows)
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    ]
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with staged(spark, "events", rows, EVENTS) as d:
+        result = all_queries()["m_path_regex"](spark, d)
+        assert_same(result, pd.DataFrame(want_rows, columns=result.columns))
 
 
 @settings(
@@ -1382,12 +1059,6 @@ def test_bpe_train_matches_oracle_on_random_corpora(spark, data):
     output is another merge's input, argmax ties (broken by (a, b)
     string order in both engines), and single-character words (no
     pairs)."""
-    import os
-    import shutil
-    import tempfile
-
-    from sqlengine_spark.registry import all_oracles, all_queries
-
     WORDS = ["aaaa", "aa", "a", "abab", "baba", "aab", "bba", "abc",
              "cab", "aaab"]
     docs = []
@@ -1399,28 +1070,4 @@ def test_bpe_train_matches_oracle_on_random_corpora(spark, data):
             for _ in range(n_words)
         )
         docs.append((i, text, "en", "src0", len(text)))
-    base = tempfile.mkdtemp(prefix="sqlengine_bpe_prop_")
-    try:
-        spark.createDataFrame(
-            docs,
-            schema="doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "documents.parquet")
-        )
-        result = all_queries()["l_bpe_train"](spark, base)
-        got = canon_rows(result.columns, result.collect())
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(base, 'documents.parquet')}/*.parquet')"
-            )
-            cur = con.execute(all_oracles()["l_bpe_train"])
-            cols = [d[0] for d in cur.description]
-            want = canon_rows(cols, cur.fetchall())
-        finally:
-            con.close()
-        assert got == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    docs_match_oracle(spark, "l_bpe_train", docs)

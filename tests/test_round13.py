@@ -7,11 +7,20 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
+
 from sqlengine_spark.registry import all_queries
 from tests.conftest import SF_DIR_SMALL
 
 
-def test_session_timeout_matches_python_sessionization(spark):
+@pytest.fixture(scope="module")
+def session_timeout_rows(spark):
+    """One collected sf0.001 j_stream_session_timeout run, shared: the
+    stream costs tens of seconds per run."""
+    return all_queries()["j_stream_session_timeout"](spark, SF_DIR_SMALL).collect()
+
+
+def test_session_timeout_matches_python_sessionization(spark, session_timeout_rows):
     """The streaming session set (in-band closes + timer-fired trailing
     flushes) must equal a driver-side Python sessionization of the raw
     events — start/end/count per session, exact microsecond
@@ -42,22 +51,17 @@ def test_session_timeout_matches_python_sessionization(spark):
         expect.add((uid, start, last, n))
     got = {
         (r["user_id"], r["s_start"], r["s_end"], r["n_events"])
-        for r in all_queries()["j_stream_session_timeout"](
-            spark, SF_DIR_SMALL
-        ).collect()
+        for r in session_timeout_rows
     }
     assert got == expect
 
 
-def test_session_timeout_sessions_are_maximal(spark):
+def test_session_timeout_sessions_are_maximal(session_timeout_rows):
     """No two emitted sessions of one user may be mergeable: for every
     consecutive session pair, next.start - prev.end >= 30 min (i.e. the
     timeout actually separated them)."""
-    rows = all_queries()["j_stream_session_timeout"](
-        spark, SF_DIR_SMALL
-    ).collect()
     per_user: dict = {}
-    for r in rows:
+    for r in session_timeout_rows:
         per_user.setdefault(r["user_id"], []).append(
             (r["s_start"], r["s_end"])
         )

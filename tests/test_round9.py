@@ -7,15 +7,12 @@ normalization, MinHash exact-duplicate detection)."""
 
 from __future__ import annotations
 
-import tempfile
-
-import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from sqlengine_spark.registry import all_oracles, all_queries
-from tests.conftest import SF_DIR, canon_rows
+from sqlengine_spark.registry import all_queries
+from tests.conftest import DOCS, SF_DIR, docs_match_oracle, staged
 
 VOCAB = ["aa", "bb", "cc", "dd", "ee", "ff"]
 LANGS = ["xx", "yy", "zz"]
@@ -30,32 +27,6 @@ labelled_corpora9 = st.lists(
 )
 
 
-def _stage_docs(spark, rows):
-    """rows: list of (doc_id, text, lang, source, n_chars)."""
-    d = tempfile.mkdtemp(prefix="sqlengine_prop_r9_")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    return d
-
-
-def _assert_cross_engine(spark, qid, sf_dir):
-    sdf = all_queries()[qid](spark, sf_dir)
-    got = canon_rows(list(sdf.columns), [tuple(r) for r in sdf.collect()])
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-        )
-        cur = con.execute(all_oracles()[qid])
-        cols = [d[0] for d in cur.description]
-        want = canon_rows(cols, [tuple(r) for r in cur.fetchall()])
-    finally:
-        con.close()
-    assert got == want
-
-
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(docs=labelled_corpora9)
 def test_random_corpus_langid_agrees_cross_engine(spark, docs):
@@ -66,7 +37,7 @@ def test_random_corpus_langid_agrees_cross_engine(spark, docs):
         (i, " ".join(toks), lang, "s0", len(" ".join(toks)))
         for i, (lang, toks) in enumerate(docs)
     ]
-    _assert_cross_engine(spark, "l_text_langid", _stage_docs(spark, rows))
+    docs_match_oracle(spark, "l_text_langid", rows)
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -79,9 +50,7 @@ def test_random_corpus_minhash_calibration_agrees_cross_engine(spark, docs):
         (i, " ".join(toks), lang, "s0", len(" ".join(toks)))
         for i, (lang, toks) in enumerate(docs)
     ]
-    _assert_cross_engine(
-        spark, "l_minhash_calibration", _stage_docs(spark, rows)
-    )
+    docs_match_oracle(spark, "l_minhash_calibration", rows)
 
 
 def test_minhash_calibration_detects_exact_duplicates(spark):
@@ -94,12 +63,11 @@ def test_minhash_calibration_detects_exact_duplicates(spark):
         (1, text, "xx", "s0", len(text)),
         (2, "ff ee dd cc bb aa ff ee", "xx", "s0", 23),
     ]
-    out = {
-        (r["doc_a"], r["doc_b"]): (r["est_j"], r["exact_j"])
-        for r in all_queries()["l_minhash_calibration"](
-            spark, _stage_docs(spark, rows)
-        ).collect()
-    }
+    with staged(spark, "documents", rows, DOCS) as d:
+        out = {
+            (r["doc_a"], r["doc_b"]): (r["est_j"], r["exact_j"])
+            for r in all_queries()["l_minhash_calibration"](spark, d).collect()
+        }
     assert (0, 1) in out
     assert out[(0, 1)] == (1.0, 1.0)
 
@@ -121,10 +89,8 @@ def test_random_bt_leaderboard_agrees_cross_engine(spark, rows):
     the driver-side Python MM iteration (sorted sequential sums) and
     the oracle's ordered-aggregate folds must stay bit-identical
     through 5 iterations of renormalized 12-dp state."""
-    staged = [
-        (i, "t", "xx", src, n) for i, (src, n) in enumerate(rows)
-    ]
-    _assert_cross_engine(spark, "l_bt_leaderboard", _stage_docs(spark, staged))
+    staged_rows = [(i, "t", "xx", src, n) for i, (src, n) in enumerate(rows)]
+    docs_match_oracle(spark, "l_bt_leaderboard", staged_rows)
 
 
 def test_bt_leaderboard_ranks_dominant_source_first(spark):
@@ -136,9 +102,8 @@ def test_bt_leaderboard_ranks_dominant_source_first(spark):
         for k in range(5):
             rows.append((i, "t", "xx", src, base + k))
             i += 1
-    out = all_queries()["l_bt_leaderboard"](
-        spark, _stage_docs(spark, rows)
-    ).collect()
+    with staged(spark, "documents", rows, DOCS) as d:
+        out = all_queries()["l_bt_leaderboard"](spark, d).collect()
     by_rank = sorted(out, key=lambda r: r["rank"])
     assert [r["source"] for r in by_rank] == ["big", "mid", "low"]
     assert by_rank[0]["bt_score"] > by_rank[-1]["bt_score"]

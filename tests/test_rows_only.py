@@ -6,11 +6,7 @@ tolerance of exact answers (SURVEY §2 tier A/D rows-only notes).
 from pyspark.sql import functions as F
 
 from sqlengine_spark.registry import all_queries
-from tests.conftest import SF_DIR, canon_rows
-
-
-def _rows(df):
-    return canon_rows(df.columns, [tuple(r) for r in df.collect()])[1]
+from tests.conftest import SF_DIR, assert_same
 
 
 def test_csv_roundtrip_equals_source(spark):
@@ -18,14 +14,14 @@ def test_csv_roundtrip_equals_source(spark):
     back = q["a_scan_csv_roundtrip"](spark, SF_DIR)
     src = spark.read.parquet(f"{SF_DIR}/nation.parquet")
     assert back.schema == src.schema
-    assert _rows(back) == _rows(src)
+    assert_same(back, src.toPandas())
 
 
 def test_json_roundtrip_equals_source(spark):
     q = all_queries()
     back = q["a_scan_json_roundtrip"](spark, SF_DIR)
     src = spark.read.parquet(f"{SF_DIR}/region.parquet")
-    assert _rows(back) == _rows(src)
+    assert_same(back, src.toPandas())
 
 
 def test_orc_roundtrip_equals_source(spark):
@@ -33,7 +29,7 @@ def test_orc_roundtrip_equals_source(spark):
     back = q["a_scan_orc_roundtrip"](spark, SF_DIR)
     src = spark.read.parquet(f"{SF_DIR}/supplier.parquet")
     assert back.schema == src.schema
-    assert _rows(back) == _rows(src)
+    assert_same(back, src.toPandas())
 
 
 def test_partitioned_sink_readback(spark):
@@ -44,7 +40,7 @@ def test_partitioned_sink_readback(spark):
         .filter(F.col("o_orderstatus") == "F")
         .select(*back.columns)
     )
-    assert _rows(back) == _rows(src)
+    assert_same(back, src.toPandas())
 
 
 def test_approx_distinct_within_5pct(spark):
