@@ -179,9 +179,10 @@ def _burn(_arg: int = 0) -> float:
     return time.perf_counter() - t0 if x else 0.0
 
 
-def host_probe(n_tasks: int = 32) -> dict:
+def host_probe(n_tasks: int | None = None) -> dict:
     """Burn-probe the host BEFORE Spark starts: one single-task run,
-    then ``n_tasks`` in parallel; effective cores = n_tasks x single /
+    then ``n_tasks`` (default: the cores this process may run on, as in
+    ``get_spark()``) in parallel; effective cores = n_tasks x single /
     parallel-wall. Round 9's 52.45-vs-29.58 s same-code spread needed
     BASELINE.md forensics to adjudicate because the artifact carried no
     host context (r9 verdict item 2) — every BENCH_rN.json now embeds
@@ -190,6 +191,7 @@ def host_probe(n_tasks: int = 32) -> dict:
     swung 13-19 effective cores behind 32 vCPUs, CLAUDE.md rule 12g)."""
     import multiprocessing as mp
 
+    n_tasks = n_tasks or len(os.sched_getaffinity(0))
     single = min(_burn() for _ in range(2))  # best-of-2 kills first-run noise
     # fork, not spawn: spawn re-imports this module (and so pyspark) in
     # every child, which is itself CPU work that would pollute the
@@ -230,8 +232,11 @@ def main() -> int:
     # as the suite opener vs 0.46 s steady-state. The timed pass then
     # measures every query against the same steady-state JVM, which
     # is the regime a long-lived cluster session actually runs in.
+    # The warm-up also fills Spark's generated-class cache, which
+    # get_spark() sizes for this suite's ~635 classes: at Spark's
+    # default of 100 the timed pass recompiled 692-697 of them.
     for qid in HEADLINE:
-        qs[qid](spark, SF_DIR).toPandas()  # JIT, code cache, file listing
+        qs[qid](spark, SF_DIR).toPandas()  # JIT, generated classes, file listing
     for qid in HEADLINE:
         fn = qs[qid]
         t0 = time.perf_counter()

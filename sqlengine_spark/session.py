@@ -1,7 +1,8 @@
 """SparkSession bootstrap and table catalog (SURVEY.md §1.3, §3).
 
-Design for scale: the session defaults below are the local[32] test
-profile; on a real cluster only ``master`` and memory sizing change.
+Design for scale: the session defaults below are the local-mode test
+profile (one task slot and one shuffle partition per core this process
+may run on); on a real cluster only ``master`` and memory sizing change.
 AQE stays on everywhere — it is the runtime answer to skew and
 partition-count tuning at 100 TB (SURVEY §4).
 """
@@ -34,12 +35,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def get_spark(app_name: str = "sqlengine_spark") -> SparkSession:
     """Build (or reuse) the session with the engine's standard config.
 
-    Scale notes: shuffle.partitions matches local core count here; on a
+    Scale notes: shuffle.partitions matches local core count here
+    (``SPARK_GRAFT_CPUS``, else the cores this process may run on); on a
     cluster it should be ~2-3x total cores, and AQE coalescing corrects
     overshoot at runtime either way. UTC session timezone pins timestamp
     semantics to match the DuckDB oracle.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a STATIC conf, read once
+    per JVM when Spark first generates code, so it cannot be set at
+    read time in ``table()``. The grading driver's plain session and
+    Tier-1's ``plain_session()`` keep Spark's default of 100.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -66,6 +73,20 @@ def get_spark(app_name: str = "sqlengine_spark") -> SparkSession:
         # file count, not the split packer, provides parallelism.
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache (measured on 4 vCPU at sf0.01): Spark
+        # keeps at most 100 compiled whole-stage classes, in a segmented
+        # LRU that evicts before it holds 100. The engine's working sets
+        # are larger: the olap perfbench set compiles 138 classes,
+        # lake_stream 80, bench.py's 32 rows about 635. At 100, each
+        # olap pass recompiled 68-121 of them, lake_stream 7-17 and
+        # bench.py's timed pass 692-697: a Janino compile each, plus
+        # fresh classes for the C2 JIT, whose threads then never settle
+        # (3-9 of 8-14 JVM CPU-s per olap pass). 2000 is ~3x bench.py's
+        # set, with room for AQE plan variants and a long-lived
+        # SQLEngine session. Olap then recompiles 0-9 per pass (AQE
+        # variants of m_funnel_windowed), lake_stream 0, bench.py 23-34,
+        # and metaspace at the end of bench.py grows by ~5 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
