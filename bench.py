@@ -179,16 +179,23 @@ def _burn(_arg: int = 0) -> float:
     return time.perf_counter() - t0 if x else 0.0
 
 
+def _timed_burst(pool, n_tasks: int) -> float:
+    t0 = time.perf_counter()
+    pool.map(_burn, range(n_tasks))
+    return time.perf_counter() - t0
+
+
 def host_probe(n_tasks: int | None = None) -> dict:
     """Burn-probe the host BEFORE Spark starts: one single-task run,
     then ``n_tasks`` (default: the cores this process may run on, as in
-    ``get_spark()``) in parallel; effective cores = n_tasks x single /
-    parallel-wall. Round 9's 52.45-vs-29.58 s same-code spread needed
-    BASELINE.md forensics to adjudicate because the artifact carried no
-    host context (r9 verdict item 2) — every BENCH_rN.json now embeds
-    the probe so cross-round totals are self-adjudicating: compare
-    totals only between runs whose effective_cores agree (this VM has
-    swung 13-19 effective cores behind 32 vCPUs, CLAUDE.md rule 12g)."""
+    ``get_spark()``) in parallel, best of 3 bursts; effective cores =
+    n_tasks x single / parallel-wall. Round 9's 52.45-vs-29.58 s
+    same-code spread needed BASELINE.md forensics to adjudicate because
+    the artifact carried no host context (r9 verdict item 2) — every
+    BENCH_rN.json now embeds the probe so cross-round totals are
+    self-adjudicating: compare totals only between runs whose
+    effective_cores agree (this VM has swung 13-19 effective cores
+    behind 32 vCPUs, CLAUDE.md rule 12g)."""
     import multiprocessing as mp
 
     n_tasks = n_tasks or len(os.sched_getaffinity(0))
@@ -197,10 +204,10 @@ def host_probe(n_tasks: int | None = None) -> dict:
     # every child, which is itself CPU work that would pollute the
     # probe; the probe runs BEFORE the JVM starts, so fork is safe.
     ctx = mp.get_context("fork")
-    t0 = time.perf_counter()
     with ctx.Pool(n_tasks) as pool:
-        pool.map(_burn, range(n_tasks))
-    wall = time.perf_counter() - t0
+        # best-of-3 bursts: with one task per core a single straggler
+        # sets a burst's wall (4 tasks read 1.4 and 3.7 back to back)
+        wall = min(_timed_burst(pool, n_tasks) for _ in range(3))
     return {
         "single_task_sec": round(single, 3),
         "effective_cores": round(min(n_tasks * single / wall, n_tasks), 1),

@@ -12,6 +12,9 @@ own harness exactly the way the real driver does):
    (``sort_values`` over all columns) — list/map cells raise
    ``TypeError: unhashable type`` here just like they do in the driver,
    so ArrayType/MapType leaks are caught locally before commit.
+3. Keys run in ``queries()`` dict order in one session, as the driver
+   runs them, so a state leak from one query into the next shows up in
+   the order the driver would see it.
 
 This module is the repo's only verification code: the pytest suite
 builds its session with ``plain_session`` and checks every result with
@@ -116,7 +119,7 @@ def main() -> int:
     qs, oracles = mod.queries(), mod.oracle_sql()
     fails = []
     n_run = 0
-    for name in sorted(qs):
+    for name in qs:
         if (only and name not in only) or name in SKIP:
             continue
         n_run += 1

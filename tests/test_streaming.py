@@ -17,6 +17,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from sqlengine_spark.operators.tier_j_streaming import pinned_stream_partitions
 from sqlengine_spark.registry import all_queries
 from sqlengine_spark.session import table
 from tests.conftest import SF_DIR_SMALL
@@ -29,6 +30,16 @@ def stream_dirs():
     os.makedirs(src)
     yield base, src, os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.fixture()
+def stream_partitions(spark):
+    """Run a raw stateful stream at the operators' pin of 8 shuffle
+    partitions instead of the plain session's 200: each micro-batch
+    schedules one state-store task per partition, so at 200 these
+    sf0.001 streams spent most of their time in empty tasks."""
+    with pinned_stream_partitions(spark):
+        yield
 
 
 def _feed(base, src, query, chunks):
@@ -73,6 +84,7 @@ def _events(spark):
     return ev.withColumn("ts_s", F.unix_timestamp("ts"))
 
 
+@pytest.mark.usefixtures("stream_partitions")
 def test_tumbling_stream_equals_batch(spark, stream_dirs):
     """Streaming a finite input must converge to the batch answer."""
     base, src, ckpt = stream_dirs
@@ -113,6 +125,7 @@ def test_tumbling_stream_equals_batch(spark, stream_dirs):
     assert got == want
 
 
+@pytest.mark.usefixtures("stream_partitions")
 def test_stream_dedup_drops_cross_batch_duplicates(spark, stream_dirs):
     """dropDuplicates state persists across micro-batches: a second
     batch that replays earlier event_ids adds nothing."""
@@ -169,6 +182,7 @@ def test_watermark_drops_late_row(spark):
         assert cnt == clean[h], (h, cnt, clean[h])
 
 
+@pytest.mark.usefixtures("stream_partitions")
 def test_stateful_running_counts(spark, stream_dirs):
     """Custom keyed state via applyInPandasWithState: per-user running
     counts emitted every micro-batch (update mode). Asserts per-batch
