@@ -921,9 +921,7 @@ def a_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         InputPartition,
     )
 
-    from sqlengine_spark.operators.tier_j_streaming import (
-        run_stream_to_table,
-    )
+    from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 
     stage = _scratch("documents_stream_jsonl")
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -978,8 +976,8 @@ def a_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
     )
-    rows, schema = run_stream_to_table(spark, agg, "complete")
-    return spark.createDataFrame(rows, schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(agg, "complete")
 
 
 @query(

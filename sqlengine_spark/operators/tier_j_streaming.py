@@ -1,14 +1,19 @@
 """Tier J — streaming over `events` (SURVEY.md §2 tier J).
 
-Two-sided strategy (SURVEY §5.2/§5.3): the AGGREGATION SEMANTICS are
-verified here as batch queries with DuckDB oracles — streaming a finite
-file and collecting the final result must equal the batch answer — while
-the STREAMING-ONLY behaviors (micro-batches, watermark late-drop,
-keyed state) run under the Structured Streaming harness in
-tests/test_streaming.py. ``j_watermark_late_drop`` is the exception: its
-queries() entry runs a REAL incremental stream (2 ordered micro-batches
-with an injected late row) so the driver exercises the streaming engine
-itself; it is rows-only by nature.
+Two-sided strategy (SURVEY §5.2/§5.3): each aggregation has a batch
+form and an INCREMENTAL ``*_stream`` twin that runs on the Structured
+Streaming engine, and both hash-match the same DuckDB oracle —
+streaming a finite input to completion must equal the batch answer.
+The streaming-only behaviors (watermark late-drop and finalization,
+within-watermark dedup, keyed state and timeouts, state-store reads)
+run as real multi-batch streams too; ``j_watermark_late_drop`` is
+rows-only by nature.
+
+Every finite stream in the engine, here and in the other tiers, runs
+through one harness, ``FiniteStream``: it pins the state partitions,
+owns the source and checkpoint directories, starts a memory or
+``foreachBatch`` sink, lands the input waves atomically one drain at a
+time, and always stops the query, drops the sink and cleans up.
 
 Scale notes: windowed aggregation in Structured Streaming shuffles on
 (window, key) exactly like the batch form; state per window-key lives in
@@ -20,11 +25,10 @@ accumulates forever.
 from __future__ import annotations
 
 import atexit
-import contextlib
 import os
 import shutil
 import tempfile
-import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,42 +50,116 @@ EVENTS_STREAM_SCHEMA = (
 _EVENTS_STAGE: dict[str, str] = {}
 
 
-def _pin_partitions(spark: SparkSession, n: int = 8) -> str | None:
-    """Set the shuffle-partition pin; returns the previous value for
-    ``_restore_partitions`` (inline-harness form of the context
-    manager below — pairs with a surrounding try/finally)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return prev
+class FiniteStream:
+    """The one harness that drives a finite Structured Streaming query
+    to completion. Every finite stream in the engine and its tests runs
+    through it, so the policy lives here once::
 
+        with FiniteStream(spark) as fs:
+            stream = spark.readStream.schema(...).parquet(fs.src)...
+            out = fs.run(stream, "append", waves=(first, second))
 
-def _restore_partitions(spark: SparkSession, prev: str | None) -> None:
-    if prev is None:
-        spark.conf.unset("spark.sql.shuffle.partitions")
-    else:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Entering pins ``spark.sql.shuffle.partitions`` to 8 and creates the
+    source directory ``src`` (for wave-fed streams) and the checkpoint
+    directory ``ckpt``. ``run`` starts the query on a uniquely named
+    memory sink, or on ``foreach_batch``, then either feeds ``waves`` in
+    order, draining after each one, or drains what is already there
+    (``availableNow``: awaits the self-terminating run). It returns the
+    memory sink's rows as a DataFrame, or None for ``foreachBatch``.
+    ``run`` stops the query once it has drained. Leaving always stops
+    it, drops the sink view (a memory sink holds every output row in
+    the driver until then), restores the partition setting and removes
+    ``src`` and ``ckpt``; ``ckpt`` stays readable inside the block
+    (j_statestore_audit reads its state).
 
-
-@contextlib.contextmanager
-def pinned_stream_partitions(spark: SparkSession, n: int = 8):
-    """Pin ``spark.sql.shuffle.partitions`` for the lifetime of a
-    finite streaming harness run, restoring the caller's value after.
-
-    Stateful streaming operators materialize one state-store partition
-    per shuffle partition PER MICRO-BATCH — under the grading driver's
-    plain session that is 200 state partitions × N batches of task
-    scheduling for group cardinalities of a few thousand rows, pure
-    overhead (round-5 verdict item 5). Paired-interleaved at sf0.1 on
-    j_tumbling_1h_stream: 32 parts 1.353 s → 8 parts 0.886 s median
-    (4 parts within noise of 8). The pin is harness-local sizing, not
-    semantics: on a production cluster the state partition count is
-    sized to executors × cores, and this helper is the knob.
+    The partition pin (rule 11b): stateful streaming operators
+    materialize one state-store partition per shuffle partition PER
+    MICRO-BATCH, so the plain session's 200 is 200 state partitions x
+    N batches of task scheduling for a few thousand keys. Paired
+    interleaved at sf0.1 on j_tumbling_1h_stream: 32 parts 1.353 s ->
+    8 parts 0.886 s median (4 within noise of 8). It is sizing, not
+    semantics: a cluster sizes state partitions to executors x cores.
+    Per-stream choices (partition count, ``noDataMicroBatches``) belong
+    in this class, not at the call sites.
     """
-    prev = _pin_partitions(spark, n)
-    try:
-        yield
-    finally:
-        _restore_partitions(spark, prev)
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._query = None
+        self._sink = None
+
+    def __enter__(self) -> FiniteStream:
+        self._base = tempfile.mkdtemp(prefix="sqlengine_stream_")
+        self.src = os.path.join(self._base, "src")
+        self.ckpt = os.path.join(self._base, "ckpt")
+        os.makedirs(self.src)
+        self._prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions", None)
+        self.spark.conf.set("spark.sql.shuffle.partitions", "8")
+        return self
+
+    def run(
+        self,
+        stream: DataFrame,
+        output_mode: str = "append",
+        *,
+        waves=(),
+        foreach_batch=None,
+        available_now: bool = False,
+    ) -> DataFrame | None:
+        writer = stream.writeStream.outputMode(output_mode).option(
+            "checkpointLocation", self.ckpt
+        )
+        if foreach_batch is None:
+            self._sink = f"stream_sink_{uuid.uuid4().hex}"
+            writer = writer.format("memory").queryName(self._sink)
+        else:
+            writer = writer.foreachBatch(foreach_batch)
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        self._query = writer.start()
+        for i, wave in enumerate(waves):
+            self._feed(i, wave)
+            self._query.processAllAvailable()
+        if available_now:
+            self._query.awaitTermination()  # stops itself after the planned batches
+        elif not waves:
+            self._query.processAllAvailable()
+        # the sink view and the checkpoint stay readable after the stop
+        self._query.stop()
+        if self._sink is None:
+            return None
+        out = self.spark.table(self._sink)
+        return self.spark.createDataFrame(out.collect(), schema=out.schema)
+
+    def _feed(self, i: int, wave) -> None:
+        """Land wave ``i`` (a DataFrame, or a directory of parquet files
+        staged once and reused) in ``src``. It is written under a
+        ``.``-prefixed name, which the file source never lists, and each
+        part file is then ``os.replace``d into view: the file source
+        requires files to be placed in the watched directory atomically."""
+        hidden = os.path.join(self.src, f".wave{i}")
+        if isinstance(wave, str):
+            shutil.copytree(wave, hidden)
+        else:
+            wave.coalesce(1).write.parquet(hidden)
+        for f in os.listdir(hidden):
+            if f.endswith(".parquet"):
+                os.replace(
+                    os.path.join(hidden, f), os.path.join(self.src, f"wave{i}_{f}")
+                )
+
+    def __exit__(self, *exc) -> None:
+        try:
+            if self._query is not None:
+                self._query.stop()
+            if self._sink is not None:
+                self.spark.catalog.dropTempView(self._sink)
+        finally:
+            if self._prev_parts is None:
+                self.spark.conf.unset("spark.sql.shuffle.partitions")
+            else:
+                self.spark.conf.set("spark.sql.shuffle.partitions", self._prev_parts)
+            shutil.rmtree(self._base, ignore_errors=True)
 
 
 def stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -104,33 +182,6 @@ def stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
         _EVENTS_STAGE[sf_dir] = path
         atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
-
-
-def run_stream_to_table(spark: SparkSession, stream_df, output_mode: str):
-    """Execute a finite streaming query to completion via a memory sink
-    and return the final result as a (batch) list of rows + schema.
-    The memory-sink table and checkpoint dir are per-call and cleaned
-    up; the driver can call the wrapping query repeatedly."""
-    ckpt_base = tempfile.mkdtemp(prefix="sqlengine_stream_ckpt_")
-    sink = f"stream_sink_{os.getpid()}_{int(time.time() * 1e6)}"
-    with pinned_stream_partitions(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", os.path.join(ckpt_base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            out = spark.table(sink)
-            rows = out.collect()
-            schema = out.schema
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(sink)
-            shutil.rmtree(ckpt_base, ignore_errors=True)
-    return rows, schema
 
 
 @query(
@@ -273,8 +324,8 @@ def j_tumbling_1h_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
     )
-    rows, schema = run_stream_to_table(spark, stream, "complete")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "complete")
 
 
 @query(
@@ -301,8 +352,8 @@ def j_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id")
         .dropDuplicates(["event_id"])
     )
-    rows, schema = run_stream_to_table(spark, stream, "append")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "append")
 
 
 @query("j_watermark_late_drop")  # rows-only: streaming-behavioral by nature
@@ -331,47 +382,17 @@ def j_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     late = ev.orderBy("ts").limit(1)
     second = ev.filter(F.unix_timestamp("ts") > cut).unionByName(late)
 
-    base = tempfile.mkdtemp(prefix="sqlengine_wm_")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    os.makedirs(src)
-    sink = f"wm_sink_{os.getpid()}_{int(time.time() * 1000)}"
-    _prev_parts = _pin_partitions(spark)
-    try:
+    with FiniteStream(spark) as fs:
         stream = (
             spark.readStream.schema("ts timestamp, event_type string")
             .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            .parquet(fs.src)
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.count("*").alias("cnt"))
             .select(F.col("w.start").alias("h"), "cnt")
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            for i, chunk in enumerate((first, second)):
-                chunk.coalesce(1).write.parquet(os.path.join(base, f"stage{i}"))
-                for f in os.listdir(os.path.join(base, f"stage{i}")):
-                    if f.endswith(".parquet"):
-                        shutil.copy(
-                            os.path.join(base, f"stage{i}", f),
-                            os.path.join(src, f"chunk{i}.parquet"),
-                        )
-                q.processAllAvailable()
-            out = spark.table(sink)
-            # materialize before tearing the stream down
-            rows = out.collect()
-        finally:
-            q.stop()
-        return spark.createDataFrame(rows, schema="h timestamp, cnt long")
-    finally:
-        _restore_partitions(spark, _prev_parts)
-        shutil.rmtree(base, ignore_errors=True)
+        return fs.run(stream, "append", waves=(first, second))
 
 
 @query(
@@ -463,8 +484,8 @@ def j_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("interval 1 hour")),
     ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    rows, schema = run_stream_to_table(spark, joined, "append")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(joined, "append")
 
 
 @query(
@@ -508,8 +529,8 @@ def j_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    rows, schema = run_stream_to_table(spark, stream, "update")
-    updates = spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        updates = fs.run(stream, "update")
     # update-mode memory sink appends every emission; latest state per
     # key = max because the running count is monotone
     return updates.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
@@ -566,8 +587,8 @@ def j_session_30m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    rows, schema = run_stream_to_table(spark, stream, "complete")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "complete")
 
 
 @query(
@@ -598,8 +619,8 @@ def j_sliding_1h_15m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").alias("w_start"), "cnt")
     )
-    rows, schema = run_stream_to_table(spark, stream, "complete")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "complete")
 
 
 @query(
@@ -631,8 +652,8 @@ def j_stream_join_static_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "event_type", "c_name", "c_mktsegment")
     )
-    rows, schema = run_stream_to_table(spark, stream, "append")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "append")
 
 
 @query(
@@ -667,7 +688,6 @@ def j_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = stage_events(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="sqlengine_upsert_snap_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="sqlengine_upsert_ckpt_")
     state: dict[str, str | None] = {"path": None}
 
     def upsert(batch_df, batch_id: int) -> None:
@@ -703,18 +723,8 @@ def j_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src_dir)
         .select("user_id", "event_id", "value")
     )
-    _prev_parts = _pin_partitions(spark)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(ckpt, "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        _restore_partitions(spark, _prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with FiniteStream(spark) as fs:
+        fs.run(stream, foreach_batch=upsert)
     snap = spark.read.parquet(state["path"])
     return snap.select(
         "user_id",
@@ -769,40 +779,8 @@ def j_tumbling_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.end").alias("w_end"), "event_type", "cnt")
     )
-    rows, schema = run_stream_to_table(spark, stream, "append")
-    return spark.createDataFrame(rows, schema=schema)
-
-
-def run_stream_available_now(spark: SparkSession, stream_df, output_mode: str):
-    """Like run_stream_to_table, but executed under
-    ``Trigger.AvailableNow``: the query plans a BOUNDED set of
-    micro-batches covering everything available at start, runs them,
-    and TERMINATES ITSELF — no processAllAvailable polling loop. This
-    is the scheduled-backfill trigger (run every N hours over whatever
-    landed, with full streaming fault-tolerance and rate limits via
-    maxFilesPerTrigger), vs the always-on trigger the other streaming
-    ops exercise."""
-    ckpt_base = tempfile.mkdtemp(prefix="sqlengine_stream_ckpt_")
-    sink = f"stream_sink_{os.getpid()}_{int(time.time() * 1e6)}"
-    with pinned_stream_partitions(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(ckpt_base, "ckpt"))
-            .start()
-        )
-        try:
-            q.awaitTermination()  # self-terminates after planned batches
-            out = spark.table(sink)
-            rows = out.collect()
-            schema = out.schema
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(sink)
-            shutil.rmtree(ckpt_base, ignore_errors=True)
-    return rows, schema
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "append")
 
 
 @query(
@@ -837,8 +815,8 @@ def j_tumbling_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
     )
-    rows, schema = run_stream_available_now(spark, stream, "complete")
-    return spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        return fs.run(stream, "complete", available_now=True)
 
 
 @query(
@@ -876,18 +854,13 @@ def j_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts") >= F.lit(hi) - F.expr("INTERVAL 1 HOUR")
     )
 
-    base = tempfile.mkdtemp(prefix="sqlengine_ddww_")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    os.makedirs(src)
-    sink = f"ddww_sink_{os.getpid()}_{int(time.time() * 1000)}"
-    _prev_parts = _pin_partitions(spark)
-    try:
+    with FiniteStream(spark) as fs:
         stream = (
             spark.readStream.schema(
                 "event_id long, ts timestamp, event_type string"
             )
             .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            .parquet(fs.src)
             .withWatermark("ts", "2 hours")
             # Key on BOTH output columns so the append output equals the
             # DISTINCT (event_id, event_type) oracle for ANY data — not
@@ -897,32 +870,7 @@ def j_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicatesWithinWatermark(["event_id", "event_type"])
             .select("event_id", "event_type")
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            for i, chunk in enumerate((ev, dup_tail)):
-                chunk.coalesce(1).write.parquet(os.path.join(base, f"stage{i}"))
-                for f in os.listdir(os.path.join(base, f"stage{i}")):
-                    if f.endswith(".parquet"):
-                        shutil.copy(
-                            os.path.join(base, f"stage{i}", f),
-                            os.path.join(src, f"chunk{i}.parquet"),
-                        )
-                q.processAllAvailable()
-            rows = spark.table(sink).collect()
-        finally:
-            q.stop()
-        return spark.createDataFrame(
-            rows, schema="event_id long, event_type string"
-        )
-    finally:
-        _restore_partitions(spark, _prev_parts)
-        shutil.rmtree(base, ignore_errors=True)
+        return fs.run(stream, "append", waves=(ev, dup_tail))
 
 
 @query(
@@ -961,37 +909,21 @@ def j_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained history.
     """
     src = stage_events(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sqlengine_statestore_ckpt_")
-    sink = f"ss_audit_{os.getpid()}_{int(time.time() * 1e6)}"
-    with pinned_stream_partitions(spark):
-        stream = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.expr("CAST(value * 100 AS BIGINT)")).alias(
-                    "total_cents"
-                ),
-            )
+    stream = (
+        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.expr("CAST(value * 100 AS BIGINT)")).alias("total_cents"),
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(sink)
-    try:
+    )
+    with FiniteStream(spark) as fs:
+        fs.run(stream, "complete")
         state = (
             spark.read.format("statestore")
-            .load(ckpt)
+            .load(fs.ckpt)
             .select(
                 F.col("key.event_type").alias("event_type"),
                 # state value fields carry the PHYSICAL agg names
@@ -1001,10 +933,7 @@ def j_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = state.collect()  # bounded: one row per distinct key
-        schema = state.schema
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema=schema)
+    return spark.createDataFrame(rows, schema=state.schema)
 
 
 @query(
@@ -1070,18 +999,14 @@ def j_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = ev.filter(F.unix_timestamp("ts") <= cut)
     second = ev.filter(F.unix_timestamp("ts") > cut)
 
-    base = tempfile.mkdtemp(prefix="sqlengine_ssleft_")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    os.makedirs(src)
-    sink = f"ssl_sink_{os.getpid()}_{int(time.time() * 1000)}"
-    _prev = _pin_partitions(spark)
-    try:
-        SCH = (
-            "event_id long, ts timestamp, user_id long, event_type string"
+    with FiniteStream(spark) as fs:
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, event_type string"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(fs.src)
         )
-        stream = spark.readStream.schema(SCH).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(src)
         clicks = (
             stream.filter(F.col("event_type") == "click")
             .select(
@@ -1112,35 +1037,7 @@ def j_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "click_id", F.col("c_user").alias("user_id"), "purchase_id"
         )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            for i, chunk in enumerate((first, second)):
-                stage = os.path.join(base, f"stage{i}")
-                chunk.coalesce(1).write.parquet(stage)
-                for f in os.listdir(stage):
-                    if f.endswith(".parquet"):
-                        shutil.copy(
-                            os.path.join(stage, f),
-                            os.path.join(src, f"wave{i}.parquet"),
-                        )
-                q.processAllAvailable()
-            rows = spark.table(sink).collect()
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(sink)
-        return spark.createDataFrame(
-            rows,
-            schema="click_id long, user_id long, purchase_id long",
-        )
-    finally:
-        _restore_partitions(spark, _prev)
-        shutil.rmtree(base, ignore_errors=True)
+        return fs.run(joined, "append", waves=(first, second))
 
 
 @query(
@@ -1179,7 +1076,7 @@ def j_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle keyed event_type like the batch plan; the gate predicate
     evaluates map-side before the shuffle so rejected rows still
     count but never carry payload. Partition pin per the rule-11b
-    state-store lesson (inside run_stream_to_table)."""
+    state-store lesson (inside FiniteStream)."""
     src = stage_events(spark, sf_dir)
     passed = (
         F.col("value").between(0, 400) & (F.col("event_type") != "error")
@@ -1194,8 +1091,8 @@ def j_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(passed, 1).otherwise(0)).alias("n_pass"),
         )
     )
-    rows, schema = run_stream_to_table(spark, stream, "complete")
-    out = spark.createDataFrame(rows, schema=schema)
+    with FiniteStream(spark) as fs:
+        out = fs.run(stream, "complete")
     return out.select(
         "event_type",
         "n_total",
@@ -1218,8 +1115,7 @@ def stage_event_timeslices(
 ) -> list:
     """Stage events as ``waves`` TIME-SLICED parquet files plus two
     far-future sentinel files, returned as an ordered list of wave
-    dirs the harness copies into the source one ``processAllAvailable``
-    at a time.
+    dirs that FiniteStream lands in the source one drain at a time.
 
     Time-slicing (ntile over ts) makes micro-batch order = event-time
     order, so per-user state transitions are deterministic regardless
@@ -1369,53 +1265,25 @@ def j_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     wave_dirs = stage_event_timeslices(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="sqlengine_sess_timeout_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            session_fn,
-            outputStructType=(
-                "user_id long, s_start long, s_end long, n_events long"
-            ),
-            stateStructType="start long, last long, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    sink = f"sess_timeout_{os.getpid()}_{int(time.time() * 1e6)}"
-    try:
-        with pinned_stream_partitions(spark):
-            q = (
-                stream.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(base, "ckpt"))
-                .start()
+    with FiniteStream(spark) as fs:
+        stream = (
+            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+            .parquet(fs.src)
+            .withWatermark("ts", "0 seconds")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                session_fn,
+                outputStructType=(
+                    "user_id long, s_start long, s_end long, n_events long"
+                ),
+                stateStructType="start long, last long, n long",
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
             )
-            try:
-                for i, d in enumerate(wave_dirs):
-                    for f in os.listdir(d):
-                        if f.endswith(".parquet"):
-                            shutil.copy(
-                                os.path.join(d, f),
-                                os.path.join(src, f"wave{i}_{f}"),
-                            )
-                    q.processAllAvailable()
-                rows = spark.table(sink).filter(F.col("user_id") >= 0).collect()
-            finally:
-                q.stop()
-                spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    out = spark.createDataFrame(
-        rows, schema="user_id long, s_start long, s_end long, n_events long"
-    )
-    return out.select(
+        )
+        out = fs.run(stream, "append", waves=wave_dirs)
+    # the sentinel user's sessions are staging, not output
+    return out.filter(F.col("user_id") >= 0).select(
         "user_id",
         F.timestamp_micros(F.col("s_start")).alias("s_start"),
         F.timestamp_micros(F.col("s_end")).alias("s_end"),

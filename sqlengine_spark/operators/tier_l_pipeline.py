@@ -2543,8 +2543,8 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     within itself and (b) against the ACCUMULATED corpus hash index,
     and only first-seen documents append to the corpus. Run here as a
     real two-micro-batch foreachBatch stream (documents split into
-    doc_id halves, batches forced into arrival order by staging file 2
-    only after batch 1 drains — the j_watermark_late_drop protocol):
+    doc_id halves, batches forced into arrival order by landing file 2
+    only after batch 1 drains — FiniteStream's wave protocol):
 
     - within-batch: MIN(doc_id) per content md5 (one hash-keyed agg);
     - cross-batch: LEFT ANTI join against the 16-byte hash index —
@@ -2584,8 +2584,6 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _tempfile.mkdtemp(prefix="sqlengine_dedup_stream_")
     _atexit.register(_shutil.rmtree, base, ignore_errors=True)
-    src = _os.path.join(base, "src")
-    _os.makedirs(src)
     out_dir = _os.path.join(base, "out")
     idx_dir = _os.path.join(base, "index")
     state = {"committed": 0}
@@ -2615,40 +2613,18 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(idx_b)
         state["committed"] += 1
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ckpt = _os.path.join(base, "ckpt")
-    from sqlengine_spark.operators.tier_j_streaming import (
-        _pin_partitions,
-        _restore_partitions,
-    )
+    from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 
-    _prev_parts = _pin_partitions(spark)
-    q = (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        for i, chunk in enumerate((first, second)):
-            stage_i = _os.path.join(base, f"stage{i}")
-            chunk.coalesce(1).write.parquet(stage_i)
-            for f in _os.listdir(stage_i):
-                if f.endswith(".parquet"):
-                    _shutil.copy(
-                        _os.path.join(stage_i, f),
-                        _os.path.join(src, f"chunk{i}.parquet"),
-                    )
-            q.processAllAvailable()
-        rows = spark.read.schema("h string, doc_id long").option(
-            "recursiveFileLookup", "true"
-        ).parquet(out_dir).collect()
-    finally:
-        q.stop()
-        _restore_partitions(spark, _prev_parts)
+    with FiniteStream(spark) as fs:
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(fs.src)
+        )
+        fs.run(stream, waves=(first, second), foreach_batch=dedup_batch)
+    rows = spark.read.schema("h string, doc_id long").option(
+        "recursiveFileLookup", "true"
+    ).parquet(out_dir).collect()
     return spark.createDataFrame(rows, schema="h string, doc_id long")
 
 

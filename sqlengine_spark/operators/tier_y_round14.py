@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import scatter, table
+from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 from sqlengine_spark.operators.tier_x_round13 import (
     EVAL_REPORT_ORACLE,
     eval_report_pair_metrics,
@@ -85,11 +86,8 @@ def l_eval_report_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = d.filter(F.expr(f"doc_id DIV 2 <= {pmid}"))
     second = d.filter(F.expr(f"doc_id DIV 2 > {pmid}"))
 
-    base_dir = tempfile.mkdtemp(prefix="sqlengine_eval_report_stream_")
-    atexit.register(shutil.rmtree, base_dir, ignore_errors=True)
-    src = os.path.join(base_dir, "src")
-    os.makedirs(src)
-    out_dir = os.path.join(base_dir, "pp")
+    out_dir = tempfile.mkdtemp(prefix="sqlengine_eval_report_stream_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     PP_SCHEMA = "pair_id long, chrf_fp long, f1_fp long, lr_fp long"
 
     def metrics_batch(batch_df, batch_id: int) -> None:
@@ -111,36 +109,13 @@ def l_eval_report_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"batch{batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from sqlengine_spark.operators.tier_j_streaming import (
-        _pin_partitions,
-        _restore_partitions,
-    )
-
-    _prev = _pin_partitions(spark)
-    q = (
-        stream.writeStream.foreachBatch(metrics_batch)
-        .option("checkpointLocation", os.path.join(base_dir, "ckpt"))
-        .start()
-    )
-    try:
-        for i, chunk in enumerate((first, second)):
-            stage_i = os.path.join(base_dir, f"stage{i}")
-            chunk.coalesce(1).write.parquet(stage_i)
-            for f in os.listdir(stage_i):
-                if f.endswith(".parquet"):
-                    shutil.copy(
-                        os.path.join(stage_i, f),
-                        os.path.join(src, f"wave{i}.parquet"),
-                    )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        _restore_partitions(spark, _prev)
+    with FiniteStream(spark) as fs:
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(fs.src)
+        )
+        fs.run(stream, waves=(first, second), foreach_batch=metrics_batch)
     # lazy read-back: the accumulated metric store is |pairs|-sized
     # (corpus-growing), so it is NOT collected to the driver — the
     # rollup reads the parquet store directly (files live until

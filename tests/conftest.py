@@ -63,6 +63,24 @@ def assert_matches_oracle(spark, qid: str, sf_dir: str = SF_DIR):
     return want
 
 
+@contextlib.contextmanager
+def leaves_no_stream(spark):
+    """The block must leave no streaming query running and no new
+    temporary view with ``sink`` in its name: a leaked memory sink
+    keeps every output row in the driver for the rest of the session."""
+
+    def sink_views():
+        # the session catalog directly: SHOW VIEWS costs ~20 ms a call,
+        # and test_matches_oracle makes two per oracled query
+        views = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*sink*")
+        return {views.apply(i).table() for i in range(views.size())}
+
+    before = sink_views()
+    yield
+    assert not spark.streams.active, [q.name for q in spark.streams.active]
+    assert sink_views() <= before, sorted(sink_views() - before)
+
+
 def docs_match_oracle(spark, qid: str, rows):
     """``assert_matches_oracle`` on ``rows`` staged as the documents
     table (``DOCS`` schema); returns the oracle's frame."""

@@ -7,6 +7,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from sqlengine_spark.engine import SQLEngine
+from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -40,25 +41,15 @@ def test_operator_library(spark):
     assert eng.oracle("i_sample") is None  # rows-only
 
 
-def test_streaming_entry_point(spark, tmp_path):
+def test_streaming_entry_point(spark):
     eng = _engine(spark)
     stream = eng.stream_events(watermark="10 minutes")
     assert stream.isStreaming
-    sink = f"eng_sink_{uuid.uuid4().hex[:10]}"
-    q = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
+    hourly = stream.groupBy(F.window("ts", "1 hour").alias("w")).agg(
+        F.count("*").alias("cnt")
     )
-    try:
-        q.processAllAvailable()
-        total = spark.sql(f"SELECT sum(cnt) AS s FROM {sink}").collect()[0]["s"]
-    finally:
-        q.stop()
+    with FiniteStream(spark) as fs:
+        total = fs.run(hourly, "complete").agg(F.sum("cnt")).collect()[0][0]
     assert total == eng.table("events").count()
 
 

@@ -13,14 +13,19 @@ import pytest
 
 from scripts.driver_sim import frame_diff
 from sqlengine_spark.registry import all_oracles
-from tests.conftest import assert_matches_oracle, docs_match_oracle
+from tests.conftest import (
+    assert_matches_oracle,
+    docs_match_oracle,
+    leaves_no_stream,
+)
 
 ORACLED = sorted(all_oracles())
 
 
 @pytest.mark.parametrize("qid", ORACLED)
 def test_matches_oracle(spark, qid):
-    assert_matches_oracle(spark, qid)
+    with leaves_no_stream(spark):
+        assert_matches_oracle(spark, qid)
 
 
 @pytest.mark.parametrize(

@@ -1,5 +1,6 @@
-"""Structured Streaming harness (SURVEY §5.3): feed `events` as ordered
-micro-batches through the file source and assert streaming-only behavior
+"""Structured Streaming tests (SURVEY §5.3): feed `events` as ordered
+micro-batches through the file source, via FiniteStream (the engine's
+one finite-stream harness), and assert streaming-only behavior
 — final-result equivalence to batch, duplicate dropping across batches,
 watermark late-row dropping, and keyed running state.
 
@@ -9,57 +10,15 @@ Uses sf0.001 (1 000 events) so each test's stream completes in seconds.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import uuid
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from sqlengine_spark.operators.tier_j_streaming import pinned_stream_partitions
+from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 from sqlengine_spark.registry import all_queries
 from sqlengine_spark.session import table
-from tests.conftest import SF_DIR_SMALL
-
-
-@pytest.fixture()
-def stream_dirs():
-    base = tempfile.mkdtemp(prefix="sqlengine_stream_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    yield base, src, os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-
-@pytest.fixture()
-def stream_partitions(spark):
-    """Run a raw stateful stream at the operators' pin of 8 shuffle
-    partitions instead of the plain session's 200: each micro-batch
-    schedules one state-store task per partition, so at 200 these
-    sf0.001 streams spent most of their time in empty tasks."""
-    with pinned_stream_partitions(spark):
-        yield
-
-
-def _feed(base, src, query, chunks):
-    """Write each chunk as one parquet file into the watched dir, in
-    order, draining the stream between files (deterministic batch
-    boundaries)."""
-    for chunk in chunks:
-        tag = uuid.uuid4().hex[:8]
-        stage = os.path.join(base, f"stage_{tag}")
-        chunk.coalesce(1).write.parquet(stage)
-        for f in os.listdir(stage):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f), os.path.join(src, f"chunk_{tag}.parquet")
-                )
-        query.processAllAvailable()
-
-
-def _sink_name():
-    return f"sink_{uuid.uuid4().hex[:12]}"
+from tests.conftest import SF_DIR_SMALL, leaves_no_stream
 
 
 def _split_by_time(ev, n=3):
@@ -77,6 +36,17 @@ def _split_by_time(ev, n=3):
     return chunks
 
 
+def _wave_source(spark, fs):
+    """The harness's watched directory, one wave file per micro-batch."""
+    return (
+        spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string, value double"
+        )
+        .option("maxFilesPerTrigger", "1")
+        .parquet(fs.src)
+    )
+
+
 def _events(spark):
     ev = table(spark, SF_DIR_SMALL, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -84,36 +54,18 @@ def _events(spark):
     return ev.withColumn("ts_s", F.unix_timestamp("ts"))
 
 
-@pytest.mark.usefixtures("stream_partitions")
-def test_tumbling_stream_equals_batch(spark, stream_dirs):
+def test_tumbling_stream_equals_batch(spark):
     """Streaming a finite input must converge to the batch answer."""
-    base, src, ckpt = stream_dirs
     ev = _events(spark)
-    sink = _sink_name()
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
+    with FiniteStream(spark) as fs:
+        stream = (
+            _wave_source(spark, fs)
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("cnt"))
+            .select(F.col("w.start").alias("h"), "event_type", "cnt")
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("h"), "event_type", "cnt")
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        _feed(base, src, q, _split_by_time(ev))
-        got = {
-            (r["h"], r["event_type"]): r["cnt"] for r in spark.table(sink).collect()
-        }
-    finally:
-        q.stop()
+        out = fs.run(stream, "complete", waves=_split_by_time(ev))
+    got = {(r["h"], r["event_type"]): r["cnt"] for r in out.collect()}
     want = {
         (r["h"], r["event_type"]): r["cnt"]
         for r in ev.drop("ts_s")
@@ -125,37 +77,21 @@ def test_tumbling_stream_equals_batch(spark, stream_dirs):
     assert got == want
 
 
-@pytest.mark.usefixtures("stream_partitions")
-def test_stream_dedup_drops_cross_batch_duplicates(spark, stream_dirs):
+def test_stream_dedup_drops_cross_batch_duplicates(spark):
     """dropDuplicates state persists across micro-batches: a second
     batch that replays earlier event_ids adds nothing."""
-    base, src, ckpt = stream_dirs
     ev = _events(spark).drop("ts_s")
     first = ev.filter(F.col("event_id") < 500)
     replay = ev.filter(F.col("event_id") < 250)  # pure duplicates
     rest = ev.filter(F.col("event_id") >= 500)
-    sink = _sink_name()
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
+    with FiniteStream(spark) as fs:
+        stream = (
+            _wave_source(spark, fs)
+            .select("event_id")
+            .dropDuplicates(["event_id"])
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("event_id")
-        .dropDuplicates(["event_id"])
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        _feed(base, src, q, [first, replay, rest])
-        got = sorted(r["event_id"] for r in spark.table(sink).collect())
-    finally:
-        q.stop()
+        out = fs.run(stream, "append", waves=[first, replay, rest])
+    got = sorted(r["event_id"] for r in out.collect())
     want = sorted(r["event_id"] for r in ev.select("event_id").distinct().collect())
     assert got == want  # replayed ids contributed nothing
 
@@ -164,7 +100,8 @@ def test_watermark_drops_late_row(spark):
     """The rows-only queries() entry runs the real 2-batch stream with
     an injected late row; every emitted window count must equal the
     clean batch count — the late duplicate must NOT be counted."""
-    out = all_queries()["j_watermark_late_drop"](spark, SF_DIR_SMALL)
+    with leaves_no_stream(spark):
+        out = all_queries()["j_watermark_late_drop"](spark, SF_DIR_SMALL)
     got = {r["h"]: r["cnt"] for r in out.collect()}
     assert got, "stream emitted no closed windows"
     ev = table(spark, SF_DIR_SMALL, "events")
@@ -182,16 +119,13 @@ def test_watermark_drops_late_row(spark):
         assert cnt == clean[h], (h, cnt, clean[h])
 
 
-@pytest.mark.usefixtures("stream_partitions")
-def test_stateful_running_counts(spark, stream_dirs):
+def test_stateful_running_counts(spark):
     """Custom keyed state via applyInPandasWithState: per-user running
     counts emitted every micro-batch (update mode). Asserts per-batch
     monotonicity and final-state equality with the batch aggregate."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    base, src, ckpt = stream_dirs
     ev = _events(spark)
-    sink = _sink_name()
 
     def count_events(key, pdf_iter, state: GroupState):
         n = state.get[0] if state.exists else 0
@@ -200,39 +134,28 @@ def test_stateful_running_counts(spark, stream_dirs):
         state.update((n,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            count_events,
-            outputStructType="user_id long, n_events long",
-            stateStructType="n long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    per_batch = []
-    try:
-        for chunk in _split_by_time(ev):
-            _feed(base, src, q, [chunk])
-            per_batch.append(
-                {r["user_id"]: r["n_events"] for r in spark.table(sink).collect()}
+    per_batch, latest = [], {}
+
+    def snapshot(batch_df, batch_id):
+        latest.update({r["user_id"]: r["n_events"] for r in batch_df.collect()})
+        per_batch.append(dict(latest))
+
+    with FiniteStream(spark) as fs:
+        stream = (
+            _wave_source(spark, fs)
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                count_events,
+                outputStructType="user_id long, n_events long",
+                stateStructType="n long",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
             )
-    finally:
-        q.stop()
-    # memory sink in update mode appends each emission: take the max per
-    # user = latest state; counts must be monotonic batch over batch
+        )
+        fs.run(stream, "update", waves=_split_by_time(ev), foreach_batch=snapshot)
+    # update mode emits only the users a batch touched: fold the
+    # emissions into the latest state per user after every batch;
+    # counts must be monotonic batch over batch
     finals = per_batch[-1]
     for earlier in per_batch[:-1]:
         for u, n in earlier.items():
@@ -244,32 +167,17 @@ def test_stateful_running_counts(spark, stream_dirs):
     assert finals == want
 
 
-def test_stream_static_join_equals_batch(spark, stream_dirs):
-    base, src, ckpt = stream_dirs
+def test_stream_static_join_equals_batch(spark):
     ev = _events(spark)
     c = table(spark, SF_DIR_SMALL, "customer")
-    sink = _sink_name()
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
+    with FiniteStream(spark) as fs:
+        stream = (
+            _wave_source(spark, fs)
+            .join(F.broadcast(c), F.col("user_id") == F.col("c_custkey"))
+            .select("event_id", "event_type", "c_name")
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .join(F.broadcast(c), F.col("user_id") == F.col("c_custkey"))
-        .select("event_id", "event_type", "c_name")
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        _feed(base, src, q, _split_by_time(ev))
-        got = sorted(tuple(r) for r in spark.table(sink).collect())
-    finally:
-        q.stop()
+        out = fs.run(stream, "append", waves=_split_by_time(ev))
+    got = sorted(tuple(r) for r in out.collect())
     want = sorted(
         tuple(r)
         for r in ev.drop("ts_s")
