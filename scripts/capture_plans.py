@@ -1,66 +1,74 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for query ids into plans/<round>/.
+"""Write each query's formatted physical plan, masked so that two runs
+of the same code give the same text.
 
-Usage: python scripts/capture_plans.py <suffix> [qid ...]
-  suffix: 'before' or 'after' (file name tag)
-  qids:   default = the bench HEADLINE list.
+Usage: python scripts/capture_plans.py OUT_DIR [qid ...]
+  OUT_DIR: one ``<qid>.txt`` per query is written here.
+  qids:    default = every registered query, in driver order.
 
-The round directory defaults to r15 and can be overridden with
-$SPARK_GRAFT_PLAN_DIR. Plans are captured against $SPARK_GRAFT_SF_DIR
-(default sf0.1) with the engine session (same configs bench.py runs
-under), so Exchange counts / join strategies match the benched
-execution.
+Plans are built with the engine session (``get_spark()``) against
+$SPARK_GRAFT_SF_DIR (default sf0.1). Four things vary between runs of
+the same code and are masked: expression ids (``#123``), ``plan_id=``
+numbers, the random suffix of ``tempfile.mkdtemp`` directories, and
+uuid4 hex file names (a Python data source's writer names its files
+that way).
+To show that a refactor keeps every plan, capture at both commits into
+two directories and ``diff -r`` them.
 
-Exits nonzero if ANY capture fails (r14 advice: a blanket 'FAILED'
-file that exits 0 can silently poison a before/after diff).
+Exits nonzero if any capture fails, so a failed capture cannot pass
+for an unchanged plan.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sqlengine_spark.registry import all_queries
-from sqlengine_spark.session import get_spark
+from sqlengine_spark.session import DEFAULT_SF_DIR, get_spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("SPARK_GRAFT_PLAN_DIR", "r15"),
+_MASKS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # mkdtemp names end in 8 random characters from [a-z0-9_].
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/(\w*)\w{8}(?!\w)"),
+     tempfile.gettempdir() + r"/\1XXXXXXXX"),
+    (re.compile(r"(?<![0-9a-f])[0-9a-f]{12}4[0-9a-f]{3}[89ab][0-9a-f]{15}(?![0-9a-f])"),
+     "<uuid4>"),
 )
 
 
-def main() -> int:
-    if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
-        print(
-            "usage: capture_plans.py <before|after> [qid ...]",
-            file=sys.stderr,
-        )
-        return 2
-    suffix = sys.argv[1]
-    from bench import HEADLINE
+def mask(plan: str) -> str:
+    for pat, rep in _MASKS:
+        plan = pat.sub(rep, plan)
+    return plan
 
-    qids = sys.argv[2:] or HEADLINE
-    os.makedirs(OUT, exist_ok=True)
-    spark = get_spark("plan_capture")
+
+def main() -> int:
+    if len(sys.argv) < 2:
+        print("usage: capture_plans.py OUT_DIR [qid ...]", file=sys.stderr)
+        return 2
+    out = sys.argv[1]
     qs = all_queries()
+    qids = sys.argv[2:] or list(qs)
+    os.makedirs(out, exist_ok=True)
+    spark = get_spark("plan_capture")
     failed: list[str] = []
     for qid in qids:
         try:
-            df = qs[qid](spark, SF_DIR)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            df = qs[qid](spark, DEFAULT_SF_DIR)
+            txt = mask(df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"))
         except Exception as exc:  # side-effecting harness ops
             txt = f"PLAN CAPTURE FAILED: {exc}\n"
             failed.append(qid)
-        path = os.path.join(OUT, f"{qid}_{suffix}.txt")
-        with open(path, "w") as fh:
+        with open(os.path.join(out, f"{qid}.txt"), "w") as fh:
             fh.write(txt)
-        print(f"wrote {path}", file=sys.stderr)
+    print(f"wrote {len(qids) - len(failed)} plans to {out}", file=sys.stderr)
     if failed:
         print(f"FAILED captures: {', '.join(failed)}", file=sys.stderr)
         return 1

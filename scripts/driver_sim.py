@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as mod
+from sqlengine_spark.session import TABLES
 
 # The driver gates at sf0.01; override to stress determinism at other
 # scales (e.g. SPARK_GRAFT_SIM_SF=/root/testdata/sf0.1). SKIP is a
@@ -46,10 +47,6 @@ import __spark_entry__ as mod
 SF01 = os.environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
 SKIP = set(
     s for s in os.environ.get("SPARK_GRAFT_SIM_SKIP", "").split(",") if s
-)
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
 )
 
 
@@ -150,10 +147,12 @@ def main() -> int:
 def plain_session(driver_memory: str | None = None) -> SparkSession:
     """The session the grading driver hands to ``queries()``: Spark's
     defaults (1 GiB heap, none of ``get_spark()``'s configs) on
-    ``local[$SPARK_GRAFT_CPUS]``. ``driver_memory`` is for stress sweeps
+    ``local[$SPARK_GRAFT_CPUS]``, else on the cores this process may
+    run on, as ``get_spark()``. ``driver_memory`` is for stress sweeps
     above the driver's scale only; it takes effect at JVM launch."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("driver-sim")
         .config("spark.ui.enabled", "false")
     )

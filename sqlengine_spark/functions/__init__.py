@@ -4,6 +4,8 @@ These are thin Column-expression builders — they stay inside Catalyst /
 whole-stage codegen (no UDFs).
 """
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -27,6 +29,14 @@ def dround(col: Column, scale: int = 2) -> Column:
     """
     factor = float(10**scale)
     return F.round(col * factor, 0) / factor + F.lit(0.0)
+
+
+def round12(x: float) -> float:
+    """HALF-UP (away-from-zero) 12-dp rounding — the driver-side twin of
+    ``dround(col, 12)``: Spark and DuckDB ROUND are both half-away on
+    doubles, but Python's built-in ``round`` is banker's, so driver
+    arithmetic that a query replays must not use it."""
+    return math.copysign(math.floor(abs(x) * 1e12 + 0.5), x) / 1e12
 
 
 def vdot(a: Column, b: Column) -> Column:

@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 
 from sqlengine_spark.functions import dround
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import load_tables, table
+from sqlengine_spark.session import SCRATCH, load_tables, scratch, table
 from sqlengine_spark.skew import salted_join
 
 
@@ -453,10 +453,8 @@ def c_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter rather than a literal. Staging cost here is the test
     harness's price for a partitioned input; a production table is
     already laid out this way."""
-    from sqlengine_spark.operators.tier_a_scans import _scratch
-
     o = table(spark, sf_dir, "orders")
-    path = _scratch(f"orders_dpp_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = scratch(f"orders_dpp_{os.path.basename(sf_dir.rstrip('/'))}")
     o.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
@@ -838,8 +836,6 @@ def c_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the catalog table is external (explicit LOCATION in the scratch
     dir) for the same reason a_table_ctas_catalog's is."""
     import shutil
-
-    from sqlengine_spark.operators.tier_a_scans import SCRATCH
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     app = spark.sparkContext.applicationId

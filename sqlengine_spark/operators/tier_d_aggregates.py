@@ -1118,3 +1118,72 @@ def d_agg_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("est_count").desc(), "item")
     )
+
+
+@query(
+    "d_agg_chi2",
+    oracle="""
+    WITH o AS (
+        SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS obs
+        FROM documents GROUP BY lang, source
+    ), rt AS (
+        SELECT lang, CAST(SUM(obs) AS BIGINT) AS r FROM o GROUP BY lang
+    ), ct AS (
+        SELECT source, CAST(SUM(obs) AS BIGINT) AS c FROM o GROUP BY source
+    ), n AS (
+        SELECT CAST(SUM(obs) AS BIGINT) AS n FROM o
+    ), cells AS (
+        SELECT o.obs,
+               rt.r * CAST(ct.c AS DOUBLE) / (SELECT n FROM n) AS e
+        FROM o JOIN rt ON rt.lang = o.lang JOIN ct ON ct.source = o.source
+    )
+    SELECT CAST((SELECT COUNT(*) FROM rt) AS BIGINT) AS n_rows,
+           CAST((SELECT COUNT(*) FROM ct) AS BIGINT) AS n_cols,
+           CAST(((SELECT COUNT(*) FROM rt) - 1)
+                * ((SELECT COUNT(*) FROM ct) - 1) AS BIGINT) AS dof,
+           (SELECT n FROM n) AS n_obs,
+           ROUND(SUM(CAST(FLOOR((obs - e) * (obs - e) / e * 1e9 + 0.5)
+                          AS BIGINT)) / 1e9 * 1e6) / 1e6 + 0.0 AS chi2
+    FROM cells
+    """,
+)
+def d_agg_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CHI-SQUARED INDEPENDENCE TEST on the lang × source contingency
+    table: χ² = Σ (observed − expected)²/expected with expected =
+    row·col/n — the statistical companion to d_stat_crosstab that turns
+    the contingency counts into a single dependence readout (is the
+    language mix independent of the source?), plus the degrees of
+    freedom a significance lookup needs.
+
+    Determinism: expected counts are exact-integer products divided in
+    double (identical both engines); each cell's χ² term is half-up
+    quantized to 1e-9 fixed point BEFORE the sum, so the ≤ |langs|×
+    |sources| cell additions are exact integers in any order (rule
+    11e).
+
+    Scale: one partial+final agg to the bounded cell grid, two
+    broadcast-sized marginal joins, one bounded reduce — a constant
+    plan at any corpus size.
+    """
+    d = table(spark, sf_dir, "documents")
+    o = d.groupBy("lang", "source").agg(F.count("*").alias("obs")).localCheckpoint()
+    rt = o.groupBy("lang").agg(F.sum("obs").alias("r"))
+    ct = o.groupBy("source").agg(F.sum("obs").alias("c"))
+    n = o.agg(F.sum("obs")).collect()[0][0]  # bounded: 1 scalar
+    n_rows = rt.count()  # bounded: |langs|
+    n_cols = ct.count()  # bounded: |sources|
+    e = F.col("r") * F.col("c").cast("double") / F.lit(float(n))
+    term = F.floor(
+        (F.col("obs") - e) * (F.col("obs") - e) / e * 1e9 + 0.5
+    ).cast("bigint")
+    return (
+        o.join(F.broadcast(rt), "lang")
+        .join(F.broadcast(ct), "source")
+        .agg(
+            F.lit(n_rows).cast("bigint").alias("n_rows"),
+            F.lit(n_cols).cast("bigint").alias("n_cols"),
+            F.lit((n_rows - 1) * (n_cols - 1)).cast("bigint").alias("dof"),
+            F.lit(n).cast("bigint").alias("n_obs"),
+            dround(F.sum(term) / 1e9, 6).alias("chi2"),
+        )
+    )

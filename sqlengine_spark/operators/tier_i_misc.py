@@ -144,3 +144,43 @@ def i_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.filter(u01 * F.lit(500.0) < F.col("value")).select(
         "event_id", "user_id", "value"
     )
+
+
+@query(
+    "i_sample_systematic",
+    oracle="""
+    WITH r AS (
+        SELECT doc_id, source, n_chars,
+               ROW_NUMBER() OVER (
+                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+        FROM documents
+    )
+    SELECT doc_id, source, n_chars
+    FROM r WHERE (rn - 1) % 20 = 0
+    """,
+)
+def i_sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SYSTEMATIC 1-in-20 SAMPLE under a hash ordering — the
+    deterministic sibling of RNG ``TABLESAMPLE`` (i_sample): order rows
+    by md5(doc_id) (a fixed pseudo-random permutation), keep every
+    20th. Same statistical intent as Bernoulli sampling, but
+    reproducible across engines, runs, and partitionings — the property
+    an auditable eval-split or debugging sample needs; stratification
+    is the (already covered) i_sample_hash/i_sample_stratified family.
+
+    Scale: the hash is map-side; the global rank is the one global
+    order in this operator — at warehouse scale systematic sampling
+    switches to the equivalent per-partition form (hash mod k directly,
+    i_sample_hash's shape) because the EXACT every-20th spacing is a
+    fixture-level pin, not a statistical requirement; documented here,
+    same sampling distribution.
+    """
+    d = table(spark, sf_dir, "documents")
+    rn = F.row_number().over(
+        W.orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
+    )
+    return (
+        d.select("doc_id", "source", "n_chars", rn.alias("rn"))
+        .filter((F.col("rn") - 1) % 20 == 0)
+        .drop("rn")
+    )

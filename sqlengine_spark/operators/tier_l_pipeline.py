@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sqlengine_spark.functions import dround, vdot
+from sqlengine_spark.functions import dround, round12, vdot
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import table
 
@@ -1813,16 +1813,6 @@ def _pca_oracle(iters: int) -> str:
     return head + "".join(its) + tail
 
 
-def _round12(x: float) -> float:
-    """HALF-UP (away-from-zero) 12-dp rounding — the driver-side twin of
-    ``dround(col, 12)``: Spark and DuckDB ROUND are both half-away on
-    doubles, but Python's built-in ``round`` is banker's, so the driver
-    arithmetic must not use it."""
-    import math
-
-    return math.copysign(math.floor(abs(x) * 1e12 + 0.5), x) / 1e12
-
-
 @query("l_embedding_pca", oracle=_pca_oracle(PCA_ITERS))
 def l_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA (top principal component) by POWER ITERATION,
@@ -1839,7 +1829,7 @@ def l_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_kmeans_assign's centroids: k·dim values, never data). Every
     intermediate (means, scores, direction, norm) is rounded to 12 dp
     by the SAME half-away rule in Spark SQL, DuckDB SQL, and the
-    driver-side normalize (``_round12`` — Python's banker's rounding
+    driver-side normalize (``round12`` — Python's banker's rounding
     would diverge), so the iteration is bit-reproducible end to end
     and the final scores hash-match.
 
@@ -1870,7 +1860,7 @@ def l_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import math
 
-    v = [(p, _round12(1.0 / 8.0)) for p in range(1, 65)]
+    v = [(p, round12(1.0 / 8.0)) for p in range(1, 65)]
     for _ in range(PCA_ITERS):
         vdf = F.broadcast(spark.createDataFrame(v, "pos int, v double"))
         sc = cent.join(vdf, "pos").groupBy("vec_id").agg(
@@ -1884,8 +1874,8 @@ def l_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
         u = [(r["pos"], r["u"]) for r in u_rows]
-        n2 = _round12(sum(x * x for _, x in u))
-        v = [(p, _round12(x / math.sqrt(n2))) for p, x in u]
+        n2 = round12(sum(x * x for _, x in u))
+        v = [(p, round12(x / math.sqrt(n2))) for p, x in u]
     vdf = F.broadcast(spark.createDataFrame(v, "pos int, v double"))
     return (
         cent.join(vdf, "pos")

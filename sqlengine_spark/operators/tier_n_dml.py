@@ -21,9 +21,8 @@ from pyspark.sql import functions as F
 
 from sqlengine_spark import dml
 from sqlengine_spark.functions import dround
-from sqlengine_spark.operators.tier_a_scans import _scratch
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import table
+from sqlengine_spark.session import SCRATCH, scratch, table
 
 
 @query(
@@ -47,7 +46,7 @@ def n_update_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_nationkey") == 3,
         {"s_acctbal": dround(F.col("s_acctbal") * 1.1, 2)},
     ).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    path = _scratch("supplier_updated")
+    path = scratch("supplier_updated")
     updated.write.mode("overwrite").parquet(path)
     return spark.read.schema(updated.schema).parquet(path)
 
@@ -70,7 +69,7 @@ def n_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "P")
         & (F.col("o_orderdate") < F.lit("1996-01-01 00:00:00").cast("timestamp")),
     )
-    path = _scratch("orders_deleted")
+    path = scratch("orders_deleted")
     kept.write.mode("overwrite").parquet(path)
     return spark.read.schema(kept.schema).parquet(path)
 
@@ -134,7 +133,7 @@ def n_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         key="c_custkey",
         update_cols={"c_acctbal": F.col("src_c_acctbal")},
     )
-    path = _scratch("customer_merged")
+    path = scratch("customer_merged")
     merged.write.mode("overwrite").parquet(path)
     return spark.read.schema(merged.schema).parquet(path)
 
@@ -166,7 +165,7 @@ def n_insert_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_acctbal",
     )
     appended = sup.unionAll(new_rows)
-    path = _scratch("supplier_inserted")
+    path = scratch("supplier_inserted")
     appended.write.mode("overwrite").parquet(path)
     return spark.read.schema(appended.schema).parquet(path)
 
@@ -269,8 +268,6 @@ def n_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    from sqlengine_spark.operators.tier_a_scans import SCRATCH
-
     base = os.path.join(
         SCRATCH,
         f"part_tt_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}",
@@ -334,8 +331,8 @@ def n_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the anti-join adds no scan width). The a_maintenance_compaction
     operator is the bin-packing twin that would fold sidecars in."""
     o = table(spark, sf_dir, "orders")
-    base_path = _scratch("orders_mor_base")
-    del_path = _scratch("orders_mor_deletes")
+    base_path = scratch("orders_mor_base")
+    del_path = scratch("orders_mor_deletes")
     o.write.mode("overwrite").parquet(base_path)
     condition = (F.col("o_orderpriority") == "5-LOW") & (
         F.col("o_orderdate") >= F.lit("1997-06-01 00:00:00").cast("timestamp")
@@ -381,7 +378,7 @@ def n_insert_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",
     )
-    path = _scratch("orders_dyn_overwrite")
+    path = scratch("orders_dyn_overwrite")
     o.write.partitionBy("o_orderpriority").parquet(path)
     urgent_repriced = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey", "o_custkey", "o_orderstatus",
@@ -434,7 +431,7 @@ def n_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    base = _scratch("wap_publish")
+    base = scratch("wap_publish")
     os.makedirs(base, exist_ok=True)
     manifest = os.path.join(base, "_manifest.json")
     o = table(spark, sf_dir, "orders").select(
@@ -556,7 +553,7 @@ def n_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     li2 = li.join(del_ord, li.l_orderkey == del_ord.o_orderkey, "left_anti")
     paths = {}
     for name, df in (("customer", c2), ("orders", o2), ("lineitem", li2)):
-        p = _scratch(f"cascade_{name}")
+        p = scratch(f"cascade_{name}")
         df.write.mode("overwrite").parquet(p)
         paths[name] = (p, df.schema)
     c2r = spark.read.schema(paths["customer"][1]).parquet(paths["customer"][0])

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import dround
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import load_tables, table
+from sqlengine_spark.session import load_tables, scratch, table
 
 
 @query(
@@ -1639,10 +1639,8 @@ def a_scan_nested_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a leaf-pruned scan — IO proportional to referenced leaves, not
     struct width.
     """
-    from sqlengine_spark.operators.tier_a_scans import _scratch
-
     o = table(spark, sf_dir, "orders")
-    path = _scratch("orders_nested")
+    path = scratch("orders_nested")
     nested = o.select(
         "o_orderkey",
         F.struct(

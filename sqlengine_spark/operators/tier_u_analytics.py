@@ -21,16 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sqlengine_spark.functions import dround
+from sqlengine_spark.functions import dround, round12
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import table
 
 _MK_ITERS = 8
-
-
-def _round12(x: float) -> float:
-    """Half-away 12-dp rounding (driver-side twin of dround(col, 12))."""
-    return math.copysign(math.floor(abs(x) * 1e12 + 0.5), x) / 1e12
 
 
 @query(
@@ -370,7 +365,7 @@ def m_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmat = {(r["i"], r["j"]): r["n"] / float(tot_i[r["i"]]) for r in rows}
     states = sorted(tot_i)
     k = len(states)
-    pi = {s: _round12(1.0 / k) for s in states}
+    pi = {s: round12(1.0 / k) for s in states}
     for _ in range(_MK_ITERS):
         praw = {}
         for j in states:
@@ -382,7 +377,7 @@ def m_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_tot = 0.0
         for j in states:  # sorted == SUM(praw ORDER BY j)
             s_tot += praw[j]
-        pi = {j: _round12(praw[j] / s_tot) for j in states}
+        pi = {j: round12(praw[j] / s_tot) for j in states}
 
     total_trans = sum(r["n"] for r in rows)
     pidf = F.broadcast(

@@ -1,13 +1,16 @@
-"""Tier U (extension, round 9) — curation calibration and deterministic
+"""Tier U — curation calibration, selection and deterministic
 sampling surfaces a training-data pipeline runs between dedup and
 packing: MinHash estimator calibration against exact ground truth (the
 first fully SQL-oracled MinHash here — md5-derived hashes replay
 bit-for-bit in DuckDB, following the round-9 l_dedup_simhash
 graduation), corpus duplicate-n-gram rates (the RefinedWeb-style
 repetition metric, per source), deterministic hash-bucketed negative
-sampling for contrastive training pairs, and a Rocchio
-nearest-centroid language classifier in quantized TF-IDF space (an
-oracled sibling of the rows-only l_text_langid).
+sampling for contrastive training pairs, a Rocchio nearest-centroid
+language classifier in quantized TF-IDF space (an oracled sibling of
+the rows-only l_text_langid), dedup-rate and cross-source overlap
+reports, CCNet quality buckets, and the mixture recipe: temperature
+weights, weighted reservoir sampling, budget-capped selection,
+best-of-n, and the end-to-end mixture build.
 
 Float policy (CLAUDE.md rules 4/5b/6/9/11e): every cross-row float SUM
 is an exact integer sum (counts or fixed-point BIGINT weights); all
@@ -1127,4 +1130,918 @@ def l_filter_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_in").cast("double"),
             6,
         ).alias("cum_keep_rate"),
+    )
+
+
+@query(
+    "l_budget_select",
+    oracle="""
+    WITH scored AS (
+        SELECT doc_id, source, n_chars,
+               n_chars * CAST(len(string_split(text, ' ')) AS DOUBLE)
+                   / (n_chars + 100) AS score
+        FROM documents
+    ), ranked AS (
+        SELECT doc_id, source, n_chars, score,
+               SUM(n_chars) OVER (
+                   PARTITION BY source
+                   ORDER BY score DESC, doc_id
+                   ROWS UNBOUNDED PRECEDING) AS cum_chars
+        FROM scored
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_selected,
+           CAST(SUM(n_chars) AS BIGINT) AS chars_used,
+           CAST(MIN(doc_id) AS BIGINT) AS first_doc
+    FROM ranked
+    WHERE cum_chars <= 2000
+    GROUP BY source
+    """,
+)
+def l_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BUDGET-CAPPED DATA SELECTION: rank each source's documents by a
+    quality score and admit them greedily until the source's character
+    budget (2000) is exhausted — the "select the best N tokens per
+    domain" step every pretraining-mix builder runs after scoring
+    (quality-weighted sampling under per-domain token caps).
+
+    Determinism: the score is a per-doc identical double expression
+    used ONLY for ordering under a (score DESC, doc_id) total order
+    (rule 5); the budget ledger is an INTEGER running sum over that
+    order — no cross-row float accumulation anywhere, so the admission
+    boundary is exact in both engines.
+
+    Scale (r9 verdict item 8, the two-phase form): admission is
+    RANK-BOUNDED — the ledger is a running sum of char counts >= 1, so
+    no row past rank 2000 can ever satisfy ``cum_chars <= 2000``.
+    Stating that bound as a ``row_number() <= 2000`` filter over its
+    own window lets Catalyst insert WindowGroupLimit (Partial BEFORE
+    the exchange + Final after): every map task pre-selects its local
+    per-source top-2000 rows, so the shuffle carries |sources| x 2000
+    rows instead of the corpus — at 100 TB that is the difference
+    between shuffling everything and shuffling a constant. The cum-sum
+    window then runs on the pruned frame (prefix sums at rank i <= 2000
+    only read ranks 1..i, all present — semantics-preserving). The
+    bound's precondition (n_chars >= 1) is enforced per-row: a zero- or
+    negative-char doc raises in-task instead of silently escaping the
+    prune. The WindowGroupLimit threshold conf is set at query time
+    because plain driver sessions default it to 1000 < 2000 (the
+    rule-10 pushFilters precedent).
+    """
+    spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "2048")
+    # r12 scatter: single-split fixture scans serialize the
+    # map stage on one core (see session.scatter; no-op at scale)
+    d = scatter(spark, table(spark, sf_dir, "documents"))
+    nchars = F.when(F.col("n_chars") >= 1, F.col("n_chars")).otherwise(
+        F.raise_error(F.lit("l_budget_select: n_chars < 1 breaks rank bound"))
+    )
+    score = (
+        F.col("n_chars")
+        * F.size(F.split(F.col("text"), " ")).cast("double")
+        / (F.col("n_chars") + F.lit(100))
+    )
+    wspec = W.partitionBy("source").orderBy(F.col("score").desc(), "doc_id")
+    wcum = wspec.rowsBetween(W.unboundedPreceding, W.currentRow)
+    pruned = (
+        d.select("doc_id", "source", nchars.alias("n_chars"), score.alias("score"))
+        .withColumn("rn", F.row_number().over(wspec))
+        .filter(F.col("rn") <= 2000)
+    )
+    ranked = pruned.select(
+        "doc_id",
+        "source",
+        "n_chars",
+        F.sum("n_chars").over(wcum).alias("cum_chars"),
+    )
+    return (
+        ranked.filter(F.col("cum_chars") <= 2000)
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_selected"),
+            F.sum("n_chars").alias("chars_used"),
+            F.min("doc_id").alias("first_doc"),
+        )
+    )
+
+
+@query(
+    "l_rl_best_of_n",
+    oracle="""
+    WITH r AS (
+        SELECT user_id,
+               CAST(CAST(trunc(value * 100) AS BIGINT) AS BIGINT) AS rc,
+               ROW_NUMBER() OVER (PARTITION BY user_id
+                                  ORDER BY CAST(trunc(value * 100) AS BIGINT),
+                                           event_id) AS rk,
+               CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
+        FROM events
+    ), t AS (
+        SELECT user_id, n, rc, rk,
+               CAST(FLOOR(
+                 (CAST(rk - 1 AS DOUBLE) / CAST(n AS DOUBLE))
+                 * (CAST(rk - 2 AS DOUBLE) / CAST(n - 1 AS DOUBLE))
+                 * (CAST(rk - 3 AS DOUBLE) / CAST(n - 2 AS DOUBLE))
+                 * (CAST(rk - 4 AS DOUBLE) / CAST(n - 3 AS DOUBLE))
+                 * (5.0 / CAST(n - 4 AS DOUBLE))
+                 * CAST(rc AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS term
+        FROM r WHERE n >= 5 AND rk >= 5
+    )
+    SELECT user_id, MAX(n) AS n,
+           ROUND(CAST(SUM(term) AS DOUBLE) / 1e9 / 1e2 * 1e6) / 1e6 + 0
+               AS bon5
+    FROM t GROUP BY user_id ORDER BY user_id
+    """,
+)
+def l_rl_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNBIASED BEST-OF-N REWARD ESTIMATE — E[max reward of k=5
+    attempts sampled without replacement from the user's n attempts]
+    (the BoN curve of WebGPT app. F / Nakano et al. 2021; the max-
+    order-statistic sibling of l_eval_pass_at_k; public method):
+    BoN₅ = Σ_r C(r−1, 4)/C(n, 5) · reward₍ᵣ₎ over attempts sorted
+    ascending, evaluated in the overflow-free product form
+    (r−1)/n · (r−2)/(n−1) · (r−3)/(n−2) · (r−4)/(n−3) · 5/(n−4) — the
+    probability attempt rank r is the sample max.
+
+    Determinism: rewards quantize to exact integer cents (rule 6);
+    the per-attempt rank is a total order (reward cents, event_id);
+    each term is a fixed-shape double product from exact integers,
+    quantized to a 1e9 fixed-point BIGINT BEFORE the per-user sum —
+    exact integer sums, immune to order in both engines (the
+    l_eval_ndcg grid pattern). One division at the end.
+
+    Scale: one user-partitioned rank window (group-bounded, the
+    rl_group_advantage class) + one user-keyed partial agg. Group
+    state is a rank counter; nothing corpus-global."""
+    ev = table(spark, sf_dir, "events")
+    r = ev.select(
+        "user_id",
+        "event_id",
+        (F.col("value") * 100).cast("bigint").alias("rc"),
+    )
+    wr = W.partitionBy("user_id").orderBy("rc", "event_id")
+    wn = W.partitionBy("user_id")
+    t = (
+        r.select(
+            "user_id",
+            "rc",
+            F.row_number().over(wr).alias("rk"),
+            F.count(F.lit(1)).over(wn).alias("n"),
+        )
+        .filter((F.col("n") >= 5) & (F.col("rk") >= 5))
+    )
+    rk, n = F.col("rk").cast("double"), F.col("n").cast("double")
+    # parenthesized QUOTIENT products, mirroring the oracle exactly —
+    # the bare chain a/b*c/d associates as ((a/b)*c)/d and diverges
+    # from the oracle's (a/b)*(c/d) in the last ulp, which the 1e9
+    # term grid then amplifies into ±1-integer cross-engine drift
+    # (r11 code review, reproduced on 4/234,630 sampled triples)
+    prob = (
+        ((rk - 1) / n)
+        * ((rk - 2) / (n - 1))
+        * ((rk - 3) / (n - 2))
+        * ((rk - 4) / (n - 3))
+        * (F.lit(5.0) / (n - 4))
+    )
+    term = F.floor(prob * F.col("rc").cast("double") * 1e9 + 0.5).cast(
+        "bigint"
+    )
+    a = t.select("user_id", F.col("n").alias("nn"), term.alias("term")).groupBy(
+        "user_id"
+    ).agg(F.max("nn").alias("n"), F.sum("term").alias("s"))
+    return a.select(
+        "user_id",
+        "n",
+        dround(F.col("s").cast("double") / 1e9 / 1e2, 6).alias("bon5"),
+    ).orderBy("user_id")
+
+
+@query(
+    "l_dedup_rate_report",
+    oracle="""
+    WITH g AS (
+        SELECT md5(text) AS h, CAST(COUNT(*) AS BIGINT) AS s
+        FROM documents GROUP BY md5(text)
+    ), b AS (
+        SELECT CASE WHEN s >= 10 THEN 10 ELSE s END AS size_bucket,
+               CAST(COUNT(*) AS BIGINT) AS n_clusters,
+               CAST(SUM(s) AS BIGINT) AS n_docs
+        FROM g GROUP BY 1
+    ), tot AS (
+        SELECT CAST(SUM(n_docs) AS BIGINT) AS corpus FROM b
+    )
+    SELECT b.size_bucket, b.n_clusters, b.n_docs,
+           b.n_docs - b.n_clusters AS n_removable,
+           ROUND(CAST(b.n_docs - b.n_clusters AS DOUBLE)
+                 / CAST(tot.corpus AS DOUBLE) * 1e9) / 1e9 + 0
+               AS removable_share
+    FROM b CROSS JOIN tot
+    ORDER BY b.size_bucket
+    """,
+)
+def l_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT-DEDUP RATE REPORT — the summary table a dedup run
+    publishes before anyone deletes anything: duplicate-cluster-size
+    histogram (bucket 10 = "10+"), docs and removable copies per
+    bucket, and each bucket's share of the corpus that dedup would
+    delete. Reads the same md5 content-hash grouping as l_dedup_exact
+    and rolls it up (pipeline composition: detect → report → act).
+
+    Determinism: every column is an exact BIGINT except the one
+    int-ratio share on the 1e9 grid with '+ 0'.
+
+    Scale: the md5 groupBy is THE 100 TB exact-dedup shuffle
+    (partial+final); the histogram rollup runs on the cluster-size
+    table (bounded by distinct contents); the corpus total broadcasts
+    as one row."""
+    d = table(spark, sf_dir, "documents")
+    g = (
+        d.select(F.md5("text").alias("h"))
+        .groupBy("h")
+        .agg(F.count(F.lit(1)).alias("s"))
+    )
+    b = g.select(
+        F.when(F.col("s") >= 10, 10).otherwise(F.col("s")).alias(
+            "size_bucket"
+        ),
+        "s",
+    ).groupBy("size_bucket").agg(
+        F.count(F.lit(1)).alias("n_clusters"), F.sum("s").alias("n_docs")
+    )
+    tot = b.agg(F.sum("n_docs").alias("corpus"))
+    return (
+        b.crossJoin(F.broadcast(tot))
+        .select(
+            F.col("size_bucket").cast("bigint").alias("size_bucket"),
+            "n_clusters",
+            "n_docs",
+            (F.col("n_docs") - F.col("n_clusters")).alias("n_removable"),
+            dround(
+                (F.col("n_docs") - F.col("n_clusters")).cast("double")
+                / F.col("corpus").cast("double"),
+                9,
+            ).alias("removable_share"),
+        )
+        .orderBy("size_bucket")
+    )
+
+
+@query(
+    "l_mix_temperature",
+    oracle="""
+    WITH c AS (
+        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
+        FROM documents GROUP BY lang
+    ), t AS (
+        SELECT CAST(SUM(n) AS BIGINT) AS total FROM c
+    ), p AS (
+        SELECT c.lang, c.n,
+               CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE) AS p,
+               CAST(FLOOR(pow(CAST(c.n AS DOUBLE)
+                              / CAST(t.total AS DOUBLE), 0.7) * 1e15 + 0.5)
+                    AS BIGINT) AS w7q,
+               CAST(FLOOR(pow(CAST(c.n AS DOUBLE)
+                              / CAST(t.total AS DOUBLE), 0.5) * 1e15 + 0.5)
+                    AS BIGINT) AS w5q
+        FROM c CROSS JOIN t
+    ), z AS (
+        SELECT CAST(SUM(w7q) AS BIGINT) AS z7,
+               CAST(SUM(w5q) AS BIGINT) AS z5
+        FROM p
+    )
+    SELECT p.lang, p.n,
+           ROUND(p.p * 1e9) / 1e9 + 0 AS p_raw,
+           ROUND(CAST(p.w7q AS DOUBLE) / CAST(z.z7 AS DOUBLE) * 1e9) / 1e9
+               + 0 AS q_alpha07,
+           ROUND(CAST(p.w5q AS DOUBLE) / CAST(z.z5 AS DOUBLE) * 1e9) / 1e9
+               + 0 AS q_alpha05,
+           ROUND(CAST(p.w7q AS DOUBLE) / CAST(z.z7 AS DOUBLE) / p.p * 1e6)
+               / 1e6 + 0 AS epochs_alpha07
+    FROM p CROSS JOIN z
+    ORDER BY p.lang
+    """,
+)
+def l_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TEMPERATURE-BASED MULTILINGUAL SAMPLING WEIGHTS (the
+    mBERT/XLM-R exponential-smoothing recipe, Devlin 2019 / Conneau
+    2020; public method): per language, the raw corpus share p, the
+    resampling share q ∝ p^α at α = 0.7 and 0.5, and the implied
+    effective-epoch multiplier q/p at α = 0.7 — the table that decides
+    how hard low-resource languages are upsampled. Complements
+    l_domain_mix (which APPLIES fixed rates) by COMPUTING the rates.
+
+    Determinism: counts are exact BIGINTs; p and the pow() terms are
+    fixed-shape per-row doubles (same libm pow both engines — the
+    dsir ln precedent); each weight quantizes to a 1e15 fixed-point
+    BIGINT BEFORE the normalizer sum (r11 code review — a raw double
+    sum would be order-sensitive in both engines; the rule-11e
+    pattern), so z7/z5 are exact integers and every output is a
+    fixed-shape double expression over exact operands, rounded once
+    with '+ 0'.
+
+    Scale: one lang-keyed partial+final count agg; everything after
+    runs on the |langs|-row table."""
+    d = table(spark, sf_dir, "documents")
+    c = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
+    t = c.agg(F.sum("n").alias("total"))
+    p = c.crossJoin(F.broadcast(t)).select(
+        "lang",
+        "n",
+        (F.col("n").cast("double") / F.col("total").cast("double")).alias(
+            "p"
+        ),
+    )
+    p = p.select(
+        "lang",
+        "n",
+        "p",
+        F.floor(F.pow(F.col("p"), F.lit(0.7)) * 1e15 + 0.5)
+        .cast("bigint")
+        .alias("w7q"),
+        F.floor(F.pow(F.col("p"), F.lit(0.5)) * 1e15 + 0.5)
+        .cast("bigint")
+        .alias("w5q"),
+    )
+    z = p.agg(F.sum("w7q").alias("z7"), F.sum("w5q").alias("z5"))
+    q7 = F.col("w7q").cast("double") / F.col("z7").cast("double")
+    q5 = F.col("w5q").cast("double") / F.col("z5").cast("double")
+    return (
+        p.crossJoin(F.broadcast(z))
+        .select(
+            "lang",
+            "n",
+            dround(F.col("p"), 9).alias("p_raw"),
+            dround(q7, 9).alias("q_alpha07"),
+            dround(q5, 9).alias("q_alpha05"),
+            dround(q7 / F.col("p"), 6).alias("epochs_alpha07"),
+        )
+        .orderBy("lang")
+    )
+
+
+_AES_K = 40
+
+
+@query(
+    "l_sample_weighted_topk",
+    oracle=f"""
+    WITH s AS (
+        SELECT lang, doc_id, n_chars,
+               CAST(FLOOR(
+                 ln((CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
+                                    1, 8)) AS BIGINT) + 0.5) / 4294967296.0)
+                 / CAST(GREATEST(n_chars, 1) AS DOUBLE) * 1e12)
+               AS BIGINT) AS kq
+        FROM documents
+    ), r AS (
+        SELECT lang, doc_id, n_chars, kq,
+               ROW_NUMBER() OVER (PARTITION BY lang
+                                  ORDER BY kq DESC, doc_id) AS rk
+        FROM s
+    )
+    SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id, n_chars, kq
+    FROM r WHERE rk <= {_AES_K}
+    ORDER BY lang, rk
+    """,
+)
+def l_sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WEIGHTED SAMPLING WITHOUT REPLACEMENT, exact-k per stratum — the
+    Efraimidis-Spirakis A-ES reservoir (2006, "Weighted random sampling
+    with a reservoir"; public method): each doc draws key u^(1/w) from
+    a uniform u and weight w (here n_chars, a quality-mass proxy); the
+    top-k keys per language ARE a weight-proportional sample without
+    replacement. This is THE quality-weighted corpus subsampling
+    primitive (i_sample_weighted is its Bernoulli cousin: probabilistic
+    KEEP per row, no exact-k guarantee; this gives exactly k per
+    stratum). Deterministic twin: u comes from md5(doc_id) bits, so the
+    drawn sample is identical across engines, re-runs, and resharding.
+
+    Determinism: u = (first-32-md5-bits + 0.5) / 2^32 — exact dyadic
+    rational, strictly in (0,1) so ln never sees 0; ranking key is
+    ln(u)/w (monotone in u^(1/w)) quantized to a 1e12 BIGINT grid
+    before ranking (rule 5: the (kq DESC, doc_id) order is total; ln is
+    the same libm call in both engines — the l_dsir_weight precedent,
+    and division of identical doubles is IEEE-exact in both).
+
+    Scale: key is a map-side codegen expression (md5 + ln, no UDF); the
+    per-lang top-k is ONE rank window whose constant filter (40 <= the
+    1000 default) triggers InferWindowGroupLimit — per-partition top-40
+    heaps BEFORE the lang shuffle, so shuffle volume is
+    |langs| x 40 x partitions, not the corpus (pin 13a). No joins, no
+    broadcast, nothing corpus-global."""
+    d = table(spark, sf_dir, "documents")
+    u = (
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
+        .cast("bigint")
+        .cast("double")
+        + F.lit(0.5)
+    ) / F.lit(4294967296.0)
+    kq = F.floor(
+        F.log(u) / F.greatest(F.col("n_chars"), F.lit(1)).cast("double") * 1e12
+    ).cast("bigint")
+    s = d.select("lang", "doc_id", "n_chars", kq.alias("kq"))
+    w = W.partitionBy("lang").orderBy(F.col("kq").desc(), "doc_id")
+    return (
+        s.select("lang", F.row_number().over(w).alias("rk"), "doc_id",
+                 "n_chars", "kq")
+        .filter(F.col("rk") <= _AES_K)
+        .select("lang", F.col("rk").cast("bigint").alias("rk"), "doc_id",
+                "n_chars", "kq")
+        .orderBy("lang", "rk")
+    )
+
+
+@query(
+    "l_dedup_source_overlap",
+    oracle="""
+    WITH w AS (
+        SELECT source, string_split(text, ' ') AS w FROM documents
+    ), sh AS (
+        SELECT DISTINCT source,
+               md5(array_to_string(w[i.i:i.i + 9], ' ')) AS h
+        FROM w, LATERAL (SELECT unnest(generate_series(1, len(w) - 9))
+                         AS i) i
+    ), per_src AS (
+        SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY source
+    ), pair AS (
+        SELECT a.source AS source_a, b.source AS source_b,
+               CAST(COUNT(*) AS BIGINT) AS n_shared
+        FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
+        GROUP BY a.source, b.source
+    )
+    SELECT p.source_a, p.source_b, p.n_shared,
+           sa.n AS n_a, sb.n AS n_b,
+           ROUND(CAST(p.n_shared AS DOUBLE)
+                 / CAST(sa.n + sb.n - p.n_shared AS DOUBLE) * 1e6) / 1e6 + 0
+               AS jaccard
+    FROM pair p
+    JOIN per_src sa ON sa.source = p.source_a
+    JOIN per_src sb ON sb.source = p.source_b
+    ORDER BY p.n_shared DESC, p.source_a, p.source_b
+    LIMIT 50
+    """,
+)
+def l_dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CROSS-SOURCE CONTAMINATION MATRIX — for every source pair, the
+    number of distinct 10-token shingles they share and the shingle
+    Jaccard (top-50 pairs by shared mass): the curation question
+    "which of my crawl feeds are secretly the same feed?" that decides
+    source-level dedup ordering before any doc-level pass (the
+    source-pair view of l_dedup_substring's shingle space; same
+    16-byte shingle keys). Overlap >> both diagonals means one source
+    republishes the other.
+
+    Determinism: shingle sets are DISTINCT (source, md5(window)) keys;
+    all counts exact BIGINT; one jaccard division per pair, dround
+    1e-6; (n_shared DESC, source_a, source_b) is a total order under
+    LIMIT (rule 5).
+
+    Scale: shingles generate via the codegen Generate-over-index form
+    (the chrF lesson — the token array projects below the Generate, so
+    split() runs once per doc); the DISTINCT collapses to |sources|
+    rows per shingle BEFORE the self-join, so per-shingle pair fan-out
+    is bounded by C(|sources|, 2) — a DOMAIN-bounded constant, never
+    corpus-quadratic; the pair self-join is hash-keyed on the shingle
+    and pinned shuffle_hash (rule 14b: both sides are corpus-growing).
+    Source totals broadcast onto the <=C(|sources|, 2)-row pair table
+    (domain-bounded). Top-50 is TakeOrdered."""
+    # r12 scatter: single-split fixture scans serialize the map
+    # stage on one core (see session.scatter; no-op at scale)
+    d = scatter(spark, table(spark, sf_dir, "documents"))
+    base = d.select("source", F.split(F.col("text"), " ").alias("w"))
+    sh = (
+        base.select(
+            "source",
+            "w",
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(w) >= 10 THEN sequence(1, size(w) - 9)"
+                    " ELSE CAST(array() AS ARRAY<INT>) END"
+                )
+            ).alias("i"),
+        )
+        .select(
+            "source",
+            F.expr("md5(array_join(slice(w, i, 10), ' '))").alias("h"),
+        )
+        .distinct()
+        .localCheckpoint()  # rule 11a: feeds totals AND both join sides
+    )
+    per_src = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    a = sh.toDF("source_a", "h")
+    b = sh.toDF("source_b", "h")
+    pair = (
+        a.join(b.hint("shuffle_hash"), "h")
+        .filter(F.col("source_a") < F.col("source_b"))
+        .groupBy("source_a", "source_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    return (
+        pair.join(F.broadcast(per_src.toDF("source_a", "n_a")), "source_a")
+        .join(F.broadcast(per_src.toDF("source_b", "n_b")), "source_b")
+        .select(
+            "source_a",
+            "source_b",
+            "n_shared",
+            "n_a",
+            "n_b",
+            dround(
+                F.col("n_shared").cast("double")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast(
+                    "double"
+                ),
+                6,
+            ).alias("jaccard"),
+        )
+        .orderBy(F.col("n_shared").desc(), "source_a", "source_b")
+        .limit(50)
+    )
+
+
+@query(
+    "l_mixture_build",
+    oracle="""
+    WITH sig AS (
+        SELECT doc_id, source, n_chars, md5(text) AS h,
+               CAST(length(text) AS BIGINT) AS len,
+               CAST(length(regexp_replace(lower(text), '[a-z0-9 ]', '',
+                                          'g')) AS BIGINT) AS punct,
+               CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
+        FROM documents
+    ), gated AS (
+        SELECT * FROM sig
+        WHERE (CASE WHEN len >= 100 THEN 1 ELSE 0 END
+             + CASE WHEN punct * 20 <= len THEN 1 ELSE 0 END
+             + CASE WHEN toks * 3 <= len AND len <= toks * 12
+                    THEN 1 ELSE 0 END) >= 2
+    ), surv AS (
+        SELECT doc_id, source, n_chars, toks FROM (
+            SELECT g.*, ROW_NUMBER() OVER (
+                PARTITION BY h ORDER BY doc_id) AS dr
+            FROM gated g) gd
+        WHERE dr = 1
+    ), c AS (
+        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_dedup
+        FROM surv GROUP BY source
+    ), t AS (
+        SELECT CAST(SUM(n_dedup) AS BIGINT) AS total FROM c
+    ), w AS (
+        SELECT c.source, c.n_dedup,
+               CAST(FLOOR(pow(CAST(c.n_dedup AS DOUBLE)
+                              / CAST(t.total AS DOUBLE), 0.7) * 1e15
+                          + 0.5) AS BIGINT) AS wq
+        FROM c CROSS JOIN t
+    ), z AS (
+        SELECT CAST(SUM(wq) AS BIGINT) AS z FROM w
+    ), tgt AS (
+        SELECT w.source, w.n_dedup,
+               CAST(CEIL(CAST(t.total AS DOUBLE) * 0.5
+                         * CAST(w.wq AS DOUBLE) / CAST(z.z AS DOUBLE))
+                    AS BIGINT) AS n_target
+        FROM w CROSS JOIN z CROSS JOIN t
+    ), res AS (
+        SELECT doc_id, source, n_chars, toks FROM (
+            SELECT s.doc_id, s.source, s.n_chars, s.toks, tg.n_target,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY s.source
+                       ORDER BY md5(CAST(s.doc_id AS VARCHAR)),
+                                s.doc_id) AS rr
+            FROM surv s JOIN tgt tg ON tg.source = s.source) rs
+        WHERE rr <= n_target
+    ), rc AS (
+        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_resampled
+        FROM res GROUP BY source
+    ), sel AS (
+        SELECT * FROM (
+            SELECT doc_id, source, n_chars,
+                   SUM(n_chars) OVER (
+                       PARTITION BY source
+                       ORDER BY CAST(n_chars AS DOUBLE) * toks
+                                / (n_chars + 100) DESC, doc_id
+                       ROWS UNBOUNDED PRECEDING) AS cum_chars
+            FROM res) ld
+        WHERE cum_chars <= 20000
+    ), sc AS (
+        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_selected,
+               CAST(SUM(n_chars) AS BIGINT) AS chars_used
+        FROM sel GROUP BY source
+    ), raw AS (
+        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw
+        FROM documents GROUP BY source
+    ), gc AS (
+        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_gated
+        FROM gated GROUP BY source
+    )
+    SELECT raw.source, raw.n_raw,
+           CAST(COALESCE(gc.n_gated, 0) AS BIGINT) AS n_gated,
+           CAST(COALESCE(c.n_dedup, 0) AS BIGINT) AS n_dedup,
+           CAST(COALESCE(tgt.n_target, 0) AS BIGINT) AS n_target,
+           CAST(COALESCE(rc.n_resampled, 0) AS BIGINT) AS n_resampled,
+           CAST(COALESCE(sc.n_selected, 0) AS BIGINT) AS n_selected,
+           CAST(COALESCE(sc.chars_used, 0) AS BIGINT) AS chars_used
+    FROM raw
+    LEFT JOIN gc ON gc.source = raw.source
+    LEFT JOIN c ON c.source = raw.source
+    LEFT JOIN tgt ON tgt.source = raw.source
+    LEFT JOIN rc ON rc.source = raw.source
+    LEFT JOIN sc ON sc.source = raw.source
+    ORDER BY raw.source
+    """,
+)
+def l_mixture_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END MIXTURE BUILD — the whole pretraining-mix recipe in
+    ONE plan, per source: composite quality gate (the
+    l_quality_composite_gate majority vote) -> exact-dedup survivors
+    (l_dedup_exact's MIN(doc_id)-per-md5 keep set) -> temperature
+    resample (targets ∝ p^0.7 over survivor shares, the
+    l_mix_temperature recipe, applied via l_domain_mix's md5-rank
+    prefix at a half-corpus doc budget) -> greedy per-source char
+    budget (l_budget_select's integer ledger, 20k chars/source). The
+    output is the per-source funnel ledger (raw -> gated -> deduped ->
+    target -> resampled -> selected + chars used) a mix builder ships
+    as its datasheet — each stage is the audited twin of its
+    standalone operator.
+
+    Determinism: gate signals and thresholds are pure integer
+    arithmetic (cross-multiplied ratios); dedup keep set is a
+    rank-over-exact-BIGINT order; temperature weights quantize to
+    1e15 fixed-point BEFORE normalizing (rule 11e) so targets are
+    CEIL of identical double expressions over exact integers; the
+    resample order is (md5(doc_id), doc_id) — byte-identical hex in
+    both engines; the budget ledger is an integer running sum under a
+    (score DESC, doc_id) total order with the score a fixed-shape
+    per-row double (rule 5). Every output column is an exact BIGINT.
+
+    Scale: ONE map pass computes hash + gate signals + token count
+    and drops text immediately — every shuffle after the scan carries
+    ~40-byte rows. Dedup shuffles on the near-unique content hash
+    (partial-agg-free window, same class as l_dedup_exact); the
+    per-source stage tables (counts, weights, targets) are
+    DOMAIN-bounded (rule 14a exception) and broadcast into the
+    resample/budget windows; those windows partition per source — a
+    skewed source salts the same way d_agg_salted does (the
+    l_domain_mix note), and the budget window is rank-bounded the
+    l_budget_select way should the per-source budget ever need the
+    WindowGroupLimit prune. The funnel is one job, no re-scans: gate
+    feeds dedup feeds resample feeds budget as a single lineage.
+
+    x100 record (r14, paired fresh-plan reps): 4.06 vs DuckDB 3.64 —
+    ratio 1.12, near-parity at first measurement. Scatter REJECTED
+    per the pin-16a per-class call (paired toggle: plain 4.05 /
+    scattered 4.63 median, scatter lost every rep): there is no
+    fan-out to amortize — the map pass emits ONE thin row per doc and
+    the first shuffle is already corpus-thin, so the round-robin
+    exchange costs more than the single-split map serialization
+    saves."""
+    d = table(spark, sf_dir, "documents")
+    sig = d.select(
+        "doc_id",
+        "source",
+        "n_chars",
+        F.md5("text").alias("h"),
+        F.length("text").cast("bigint").alias("len"),
+        F.length(F.regexp_replace(F.lower(F.col("text")), "[a-z0-9 ]", ""))
+        .cast("bigint")
+        .alias("punct"),
+        F.size(F.split("text", " ")).cast("bigint").alias("toks"),
+    )
+    votes = (
+        F.when(F.col("len") >= 100, 1).otherwise(0)
+        + F.when(F.col("punct") * 20 <= F.col("len"), 1).otherwise(0)
+        + F.when(
+            (F.col("toks") * 3 <= F.col("len"))
+            & (F.col("len") <= F.col("toks") * 12),
+            1,
+        ).otherwise(0)
+    )
+    # r14 funnel restaging (guide §2.4; before-plan: 42 Exchanges, 17
+    # parquet scans — every funnel column re-executed the scan+gate+
+    # dedup chain). Three changes, output bit-identical (asserted
+    # against the old plan in the adoption A/B):
+    #   1. n_raw + n_gated come from ONE conditional agg over sig
+    #      (one scan instead of two);
+    #   2. surv is localCheckpointed — the md5/regexp gate map and the
+    #      dedup window run ONCE (paired at sf0.1, medians over 5:
+    #      old 2.494 s, ckpt-c-only 1.697, ckpt-surv 1.782 — the two
+    #      staged forms overlap; surv-staging is adopted because it
+    #      also halves the corpus-scale work: one gate map + one
+    #      dedup-window sort instead of two, for a corpus-THIN ~40 B/row
+    #      materialization, pin 13c). Fault-tolerance caveat (r14
+    #      advice): localCheckpoint blocks are NON-REPLICATED and the
+    #      lineage is cut, so an executor loss at scale fails the job
+    #      instead of recomputing — on a real cluster this staging
+    #      would be reliableCheckpoint/write-to-storage; the
+    #      local-mode harness has no executor-loss mode, so the cheap
+    #      form is correct here);
+    #   3. n_resampled / n_selected / chars_used come from ONE
+    #      conditional agg over the budget ledger (two branches merged).
+    gated = sig.filter(votes >= 2)
+    funnel0 = sig.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_raw"),
+        F.sum(F.when(votes >= 2, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_gated"),
+    )
+    surv = (
+        gated.select(
+            "doc_id",
+            "source",
+            "n_chars",
+            "toks",
+            "h",
+            F.row_number()
+            .over(W.partitionBy("h").orderBy("doc_id"))
+            .alias("dr"),
+        )
+        .filter(F.col("dr") == 1)
+        .drop("dr", "h")
+        .localCheckpoint()
+    )
+    c = surv.groupBy("source").agg(F.count(F.lit(1)).alias("n_dedup"))
+    t = c.agg(F.sum("n_dedup").alias("total"))
+    w = c.crossJoin(F.broadcast(t)).select(
+        "source",
+        "n_dedup",
+        "total",
+        F.floor(
+            F.pow(
+                F.col("n_dedup").cast("double") / F.col("total").cast("double"),
+                F.lit(0.7),
+            )
+            * 1e15
+            + 0.5
+        )
+        .cast("bigint")
+        .alias("wq"),
+    )
+    z = w.agg(F.sum("wq").alias("z"))
+    tgt = w.crossJoin(F.broadcast(z)).select(
+        "source",
+        "n_dedup",
+        F.ceil(
+            F.col("total").cast("double")
+            * 0.5
+            * F.col("wq").cast("double")
+            / F.col("z").cast("double")
+        )
+        .cast("bigint")
+        .alias("n_target"),
+    )
+    res = (
+        surv.join(F.broadcast(tgt.select("source", "n_target")), "source")
+        .select(
+            "doc_id",
+            "source",
+            "n_chars",
+            "toks",
+            "n_target",
+            F.row_number()
+            .over(
+                W.partitionBy("source").orderBy(
+                    F.md5(F.col("doc_id").cast("string")), "doc_id"
+                )
+            )
+            .alias("rr"),
+        )
+        .filter(F.col("rr") <= F.col("n_target"))
+        .drop("rr", "n_target")
+    )
+    score = (
+        F.col("n_chars").cast("double")
+        * F.col("toks")
+        / (F.col("n_chars") + F.lit(100))
+    )
+    ledger = res.select(
+        "doc_id",
+        "source",
+        "n_chars",
+        F.sum("n_chars")
+        .over(
+            W.partitionBy("source")
+            .orderBy(score.desc(), "doc_id")
+            .rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+        .alias("cum_chars"),
+    )
+    fin = ledger.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_resampled"),
+        F.sum(F.when(F.col("cum_chars") <= 20000, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_selected"),
+        F.coalesce(
+            F.sum(F.when(F.col("cum_chars") <= 20000, F.col("n_chars"))),
+            F.lit(0),
+        )
+        .cast("bigint")
+        .alias("chars_used"),
+    )
+    out = (
+        funnel0.join(c, "source", "left")
+        .join(tgt.select("source", "n_target"), "source", "left")
+        .join(fin, "source", "left")
+    )
+    zero = F.lit(0).cast("bigint")
+    return out.select(
+        "source",
+        "n_raw",
+        F.coalesce("n_gated", zero).alias("n_gated"),
+        F.coalesce("n_dedup", zero).alias("n_dedup"),
+        F.coalesce("n_target", zero).alias("n_target"),
+        F.coalesce("n_resampled", zero).alias("n_resampled"),
+        F.coalesce("n_selected", zero).alias("n_selected"),
+        F.coalesce("chars_used", zero).alias("chars_used"),
+    ).orderBy("source")
+
+
+@query(
+    "l_ccnet_bucket",
+    oracle="""
+    WITH tok AS (
+        SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
+        FROM documents
+    ), freq AS (
+        SELECT t, CAST(COUNT(*) AS BIGINT) AS c FROM tok GROUP BY t
+    ), tot AS (
+        SELECT CAST(SUM(c) AS BIGINT) AS n FROM freq
+    ), sq AS (
+        SELECT t, CAST(FLOOR(-ln(c / CAST((SELECT n FROM tot) AS DOUBLE))
+                             * 1e9 + 0.5) AS BIGINT) AS sq
+        FROM freq
+    ), docscore AS (
+        SELECT k.doc_id, k.lang,
+               SUM(s.sq) / CAST(COUNT(*) AS DOUBLE) / 1e9 AS score
+        FROM tok k JOIN sq s ON s.t = k.t
+        GROUP BY k.doc_id, k.lang
+    ), bucketed AS (
+        SELECT lang, doc_id, score,
+               NTILE(3) OVER (PARTITION BY lang ORDER BY score, doc_id)
+                   AS tercile
+        FROM docscore
+    )
+    SELECT lang,
+           CASE tercile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
+                ELSE 'tail' END AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           ROUND(SUM(CAST(FLOOR(score * 1e6 + 0.5) AS BIGINT))
+                 / CAST(COUNT(*) AS DOUBLE) / 1e6 * 1e6) / 1e6 + 0.0
+               AS avg_surprisal
+    FROM bucketed GROUP BY lang, tercile
+    """,
+)
+def l_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style HEAD/MIDDLE/TAIL quality buckets per language: score
+    each document by mean unigram surprisal −ln(p(token)) under the
+    corpus LM (the perplexity stand-in), then split each language into
+    terciles — head = most-predictable (cleanest) third, the bucket
+    CCNet keeps preferentially when building a pretraining mix.
+
+    Determinism (rule 11e, the NB per-token-type pattern): surprisal is
+    quantized to 1e-9 fixed point once per token TYPE (a vocab-sized
+    table), so each document's total is an exact integer sum no matter
+    the token order; the per-doc mean is int/count; tercile assignment
+    rides a (score, doc_id) total order; the per-bucket mean re-quantizes
+    doc scores to 1e-6 before summing.
+
+    Scale: token frequencies are one partial+final agg; the vocab-sized
+    surprisal table broadcasts onto the token stream (map-only); doc
+    scores are one doc-keyed agg; NTILE partitions by language. Exactly
+    the CCNet pipeline shape — every stage keyed, nothing quadratic.
+    """
+    d = table(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("t")
+    ).localCheckpoint()  # one corpus scan feeds freq + scoring
+    freq = tok.groupBy("t").agg(F.count("*").alias("c"))
+    n_tok = freq.agg(F.sum("c")).collect()[0][0]  # bounded: 1 scalar
+    sq = freq.select(
+        "t",
+        F.floor(-F.log(F.col("c") / F.lit(float(n_tok))) * 1e9 + 0.5)
+        .cast("bigint")
+        .alias("sq"),
+    )
+    docscore = (
+        tok.join(F.broadcast(sq), "t")
+        .groupBy("doc_id", "lang")
+        .agg((F.sum("sq") / F.count("*").cast("double") / 1e9).alias("score"))
+    )
+    bucketed = docscore.select(
+        "lang",
+        "doc_id",
+        "score",
+        F.ntile(3)
+        .over(W.partitionBy("lang").orderBy("score", "doc_id"))
+        .alias("tercile"),
+    )
+    bucket = (
+        F.when(F.col("tercile") == 1, "head")
+        .when(F.col("tercile") == 2, "middle")
+        .otherwise("tail")
+    )
+    return bucketed.groupBy("lang", bucket.alias("bucket")).agg(
+        F.count("*").alias("n_docs"),
+        dround(
+            F.sum(F.floor(F.col("score") * 1e6 + 0.5).cast("bigint"))
+            / F.count("*").cast("double")
+            / 1e6,
+            6,
+        ).alias("avg_surprisal"),
     )

@@ -10,6 +10,7 @@ partition-count tuning at 100 TB (SURVEY §4).
 from __future__ import annotations
 
 import os
+import shutil
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,21 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Sink scratch root, default ``.scratch`` beside the package. On a real
+# cluster this must be a DFS path every executor can reach (s3://... /
+# hdfs://...), never a driver-local dir — override via
+# SPARK_GRAFT_SCRATCH.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(_ROOT, ".scratch"))
+
+
+def scratch(name: str) -> str:
+    """An emptied sink path ``name`` under ``SCRATCH``."""
+    path = os.path.join(SCRATCH, name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(SCRATCH, exist_ok=True)
+    return path
 
 
 def get_spark(app_name: str = "sqlengine_spark") -> SparkSession:
