@@ -59,29 +59,50 @@ class FiniteStream:
             stream = spark.readStream.schema(...).parquet(fs.src)...
             out = fs.run(stream, "append", waves=(first, second))
 
-    Entering pins ``spark.sql.shuffle.partitions`` to 8 and creates the
-    source directory ``src`` (for wave-fed streams) and the checkpoint
-    directory ``ckpt``. ``run`` starts the query on a uniquely named
-    memory sink, or on ``foreach_batch``, then either feeds ``waves`` in
-    order, draining after each one, or drains what is already there
-    (``availableNow``: awaits the self-terminating run). It returns the
-    memory sink's rows as a DataFrame, or None for ``foreachBatch``.
-    ``run`` stops the query once it has drained. Leaving always stops
-    it, drops the sink view (a memory sink holds every output row in
-    the driver until then), restores the partition setting and removes
-    ``src`` and ``ckpt``; ``ckpt`` stays readable inside the block
-    (j_statestore_audit reads its state).
+    Entering pins ``spark.sql.shuffle.partitions`` (see below) and
+    creates the source directory ``src`` (for wave-fed streams) and the
+    checkpoint directory ``ckpt``. ``run`` starts the query on a
+    uniquely named memory sink, or on ``foreach_batch``, then either
+    feeds ``waves`` in order, draining after each one, or drains what is
+    already there (``availableNow``: awaits the self-terminating run).
+    It returns the memory sink's own frame, or None for
+    ``foreachBatch``. ``run`` stops the query once it has drained.
+    Leaving always stops it, drops the sink view, restores the two
+    settings below and removes ``src`` and ``ckpt``; ``ckpt`` stays
+    readable inside the block (j_statestore_audit reads its state).
+
+    The returned frame is analyzed against the sink itself, not the
+    view, so it still collects after the block; it holds the sink's
+    rows in the driver until the caller drops it. Copying them into a
+    new frame (collect + createDataFrame) cost j_session_30m_stream
+    0.29-0.39 s per call at sf0.01, and its pickled-row relation made
+    the caller's toPandas() 0.22-0.34 s instead of 0.05 s.
 
     The partition pin (rule 11b): stateful streaming operators
     materialize one state-store partition per shuffle partition PER
-    MICRO-BATCH, so the plain session's 200 is 200 state partitions x
-    N batches of task scheduling for a few thousand keys. Paired
-    interleaved at sf0.1 on j_tumbling_1h_stream: 32 parts 1.353 s ->
-    8 parts 0.886 s median (4 within noise of 8). It is sizing, not
-    semantics: a cluster sizes state partitions to executors x cores.
-    Per-stream choices (partition count, ``noDataMicroBatches``) belong
-    in this class, not at the call sites.
+    MICRO-BATCH, each with its own commit, so the pin is
+    ``min(8, task slots)`` (``defaultParallelism``): one task wave per
+    stateful stage. On a cluster that is executors x cores. Measured on
+    j_session_30m_stream at sf0.01, 4 slots, per call (wall / process
+    CPU): 8 partitions, two waves, 1.08 s / 2.88 s with 0.75-0.89 s of
+    summed state commits for 150 keys; 4 partitions 0.80-0.85 s /
+    1.97 s. One partition was faster still here (0.74-0.77 s), but it
+    runs every stateful stage on one core whatever the keys. The cap:
+    paired interleaved at sf0.1 on j_tumbling_1h_stream on a 32-slot
+    host, 32 partitions 1.353 s -> 8 partitions 0.886 s median. It is
+    sizing, not semantics.
+
+    ``no_data_batches`` sets ``noDataMicroBatches`` for one run. Streams
+    whose final rows come from the no-data batch that moves the
+    watermark (the append-mode watermark streams) need the default.
+    A stream whose own sentinel waves advance the watermark does not:
+    j_stream_session_timeout passes False (23-24 s -> 13.5-14.3 s warm
+    at sf0.01 with 8 partitions, same result hash). Per-stream choices belong here, not
+    at the call sites.
     """
+
+    _PARTS = "spark.sql.shuffle.partitions"
+    _NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -93,8 +114,10 @@ class FiniteStream:
         self.src = os.path.join(self._base, "src")
         self.ckpt = os.path.join(self._base, "ckpt")
         os.makedirs(self.src)
-        self._prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions", None)
-        self.spark.conf.set("spark.sql.shuffle.partitions", "8")
+        conf = self.spark.conf
+        self._prev = {k: conf.get(k, None) for k in (self._PARTS, self._NO_DATA)}
+        slots = self.spark.sparkContext.defaultParallelism
+        conf.set(self._PARTS, str(min(8, slots)))
         return self
 
     def run(
@@ -105,7 +128,9 @@ class FiniteStream:
         waves=(),
         foreach_batch=None,
         available_now: bool = False,
+        no_data_batches: bool = True,
     ) -> DataFrame | None:
+        self.spark.conf.set(self._NO_DATA, str(no_data_batches).lower())
         writer = stream.writeStream.outputMode(output_mode).option(
             "checkpointLocation", self.ckpt
         )
@@ -124,12 +149,11 @@ class FiniteStream:
             self._query.awaitTermination()  # stops itself after the planned batches
         elif not waves:
             self._query.processAllAvailable()
-        # the sink view and the checkpoint stay readable after the stop
+        # the sink and the checkpoint stay readable after the stop
         self._query.stop()
         if self._sink is None:
             return None
-        out = self.spark.table(self._sink)
-        return self.spark.createDataFrame(out.collect(), schema=out.schema)
+        return self.spark.table(self._sink)
 
     def _feed(self, i: int, wave) -> None:
         """Land wave ``i`` (a DataFrame, or a directory of parquet files
@@ -155,10 +179,11 @@ class FiniteStream:
             if self._sink is not None:
                 self.spark.catalog.dropTempView(self._sink)
         finally:
-            if self._prev_parts is None:
-                self.spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                self.spark.conf.set("spark.sql.shuffle.partitions", self._prev_parts)
+            for k, v in self._prev.items():
+                if v is None:
+                    self.spark.conf.unset(k)
+                else:
+                    self.spark.conf.set(k, v)
             shutil.rmtree(self._base, ignore_errors=True)
 
 
@@ -899,8 +924,9 @@ def j_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The summed metric is integer cents (cast-truncate per row), so the
     cross-batch accumulation order cannot move the hash (CLAUDE.md
     rule 11e). Shuffle/state partitions pin to the harness knob
-    (rule 11b) — which also exercises that the reader sees EVERY state
-    partition, not just partition 0.
+    (rule 11b, min(8, task slots)) — which, at two or more slots, also
+    exercises that the reader sees EVERY state partition, not just
+    partition 0.
 
     Scale: the state-store scan is one InputPartition per state
     partition (parallel like any file source); state size is |keys|,
@@ -1281,7 +1307,9 @@ def j_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeoutConf=GroupStateTimeout.EventTimeTimeout,
             )
         )
-        out = fs.run(stream, "append", waves=wave_dirs)
+        # the sentinel waves move the watermark and fire the timeouts in
+        # data batches, so the no-data batches would only add commits
+        out = fs.run(stream, "append", waves=wave_dirs, no_data_batches=False)
     # the sentinel user's sessions are staging, not output
     return out.filter(F.col("user_id") >= 0).select(
         "user_id",

@@ -2612,10 +2612,11 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(fs.src)
         )
         fs.run(stream, waves=(first, second), foreach_batch=dedup_batch)
-    rows = spark.read.schema("h string, doc_id long").option(
+    # lazy read-back, as l_eval_report_stream: the output directory
+    # lives until process exit
+    return spark.read.schema("h string, doc_id long").option(
         "recursiveFileLookup", "true"
-    ).parquet(out_dir).collect()
-    return spark.createDataFrame(rows, schema="h string, doc_id long")
+    ).parquet(out_dir)
 
 
 def _bpe_ntokens_sql() -> str:

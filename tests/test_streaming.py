@@ -77,6 +77,41 @@ def test_tumbling_stream_equals_batch(spark):
     assert got == want
 
 
+def _set_conf(spark, settings):
+    """Set each key to its value; None unsets it."""
+    for k, v in settings.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_harness_sizes_partitions_and_restores(spark):
+    """Inside the block the state partitions are min(8, task slots);
+    after it both harness settings are back as they were, set or unset;
+    the sink frame ``run`` returned still collects, to the same rows
+    twice, and the block leaves no stream or sink view behind."""
+    parts = "spark.sql.shuffle.partitions"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    slots = str(min(8, spark.sparkContext.defaultParallelism))
+    ev = _events(spark).drop("ts_s")
+    want = sorted(tuple(r) for r in ev.groupBy("event_type").count().collect())
+    saved = {k: spark.conf.get(k, None) for k in (parts, no_data)}
+    try:
+        for before in ({parts: "13", no_data: "true"}, {parts: None, no_data: None}):
+            _set_conf(spark, before)
+            with leaves_no_stream(spark), FiniteStream(spark) as fs:
+                assert spark.conf.get(parts) == slots
+                stream = _wave_source(spark, fs).groupBy("event_type").count()
+                out = fs.run(stream, "complete", waves=(ev,), no_data_batches=False)
+                assert spark.conf.get(no_data) == "false"
+            assert {k: spark.conf.get(k, None) for k in before} == before
+            assert sorted(tuple(r) for r in out.collect()) == want
+            assert sorted(tuple(r) for r in out.collect()) == want
+    finally:
+        _set_conf(spark, saved)
+
+
 def test_stream_dedup_drops_cross_batch_duplicates(spark):
     """dropDuplicates state persists across micro-batches: a second
     batch that replays earlier event_ids adds nothing."""
