@@ -87,24 +87,49 @@ def _set_conf(spark, settings):
 
 
 def test_harness_sizes_partitions_and_restores(spark):
-    """Inside the block the state partitions are min(8, task slots);
-    after it both harness settings are back as they were, set or unset;
-    the sink frame ``run`` returned still collects, to the same rows
-    twice, and the block leaves no stream or sink view behind."""
+    """Inside the block the state partitions are min(8, task slots) and
+    the checkpoint is committed through the FileSystem checkpoint
+    manager; after it all three harness settings are back as they were,
+    set or unset. The committed checkpoint holds the first offset and
+    commit log entries and no leftover temp file. The sink frame
+    ``run`` returned still collects, to the same rows twice, and the
+    block leaves no stream or sink view behind."""
     parts = "spark.sql.shuffle.partitions"
     no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    mgr = "spark.sql.streaming.checkpointFileManagerClass"
+    fs_mgr = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    other_mgr = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
     slots = str(min(8, spark.sparkContext.defaultParallelism))
     ev = _events(spark).drop("ts_s")
     want = sorted(tuple(r) for r in ev.groupBy("event_type").count().collect())
-    saved = {k: spark.conf.get(k, None) for k in (parts, no_data)}
+    saved = {k: spark.conf.get(k, None) for k in (parts, no_data, mgr)}
     try:
-        for before in ({parts: "13", no_data: "true"}, {parts: None, no_data: None}):
+        for before in (
+            {parts: "13", no_data: "true", mgr: other_mgr},
+            {parts: None, no_data: None, mgr: None},
+        ):
             _set_conf(spark, before)
             with leaves_no_stream(spark), FiniteStream(spark) as fs:
                 assert spark.conf.get(parts) == slots
+                assert spark.conf.get(mgr) == fs_mgr
                 stream = _wave_source(spark, fs).groupBy("event_type").count()
                 out = fs.run(stream, "complete", waves=(ev,), no_data_batches=False)
                 assert spark.conf.get(no_data) == "false"
+                for log in ("offsets", "commits"):
+                    assert os.path.isfile(os.path.join(fs.ckpt, log, "0"))
+                left = [
+                    f
+                    for _, _, files in os.walk(fs.ckpt)
+                    for f in files
+                    if ".tmp" in f
+                ]
+                assert left == []
             assert {k: spark.conf.get(k, None) for k in before} == before
             assert sorted(tuple(r) for r in out.collect()) == want
             assert sorted(tuple(r) for r in out.collect()) == want
