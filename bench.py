@@ -62,10 +62,9 @@ HEADLINE = [
                              # band joins + exact shingle verify
                              # (tracks the calibration/curation family)
     "m_funnel_windowed",     # round 9 closing batch: windowed funnel —
-                             # three user-keyed chain joins with 1-hour
-                             # residuals (1.6x/1.4x of the single-
-                             # process engine at x10/x100 — BASELINE.md
-                             # round-9 note; tracks event analytics)
+                             # one user-keyed shuffle, two running-max
+                             # windows and one global aggregate, 3 jobs
+                             # (tracks event analytics)
     "m_basket_affinity",     # round 10b: market-basket lift — per-order
                              # pair fan-out + broadcast dim joins +
                              # TakeOrdered (x100 parity 1.09x with the

@@ -99,9 +99,10 @@ def get_spark(app_name: str = "sqlengine_spark") -> SparkSession:
         # fresh classes for the C2 JIT, whose threads then never settle
         # (3-9 of 8-14 JVM CPU-s per olap pass). 2000 is ~3x bench.py's
         # set, with room for AQE plan variants and a long-lived
-        # SQLEngine session. Olap then recompiles 0-9 per pass (AQE
-        # variants of m_funnel_windowed), lake_stream 0, bench.py 23-34,
-        # and metaspace at the end of bench.py grows by ~5 MB.
+        # SQLEngine session. Olap then recompiled 0-9 per pass (AQE
+        # variants of m_funnel_windowed's former chain-join plan),
+        # lake_stream 0, bench.py 23-34, and metaspace at the end of
+        # bench.py grows by ~5 MB.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -13,17 +13,13 @@ import pytest
 from sqlengine_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
-#: The olap benchmark workload (perfbench/workloads.py), less
-#: ``m_funnel_windowed``: AQE numbers its codegen stages differently from
-#: run to run, and the stage id is part of the generated source
-#: (CLAUDE.md pin 19c), so it added 5, 1 and 2 new classes on its second
-#: to fourth builds before reading 0. Each
-#: qid below added 0 compiles on five rebuilds in a row (sf0.01, plain
-#: session, local[4]).
+#: The olap benchmark workload (perfbench/workloads.py). Each qid below
+#: added 0 compiles on five rebuilds in a row (sf0.01, plain session,
+#: local[4]).
 OLAP_REUSED = (
     "d_agg_q1_pricing", "c_join_3way", "e_win_topk_group",
     "t_q09_product_profit", "d_agg_multi_distinct", "c_join_asof",
-    "m_rolling_wau", "j_tumbling_1h",
+    "m_funnel_windowed", "m_rolling_wau", "j_tumbling_1h",
 )
 
 

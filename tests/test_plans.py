@@ -71,6 +71,33 @@ def test_asof_union_merge_no_join(spark):
     assert "Join" not in plan
 
 
+def test_funnel_one_user_keyed_pass(spark):
+    # the windowed funnel is one user_id shuffle feeding two running-max
+    # windows: a second events scan, a join or a second user exchange
+    # would mean the per-stage chain joins came back
+    plan = _plan(spark, "m_funnel_windowed")
+    scans = [ln for ln in plan.splitlines() if ln.startswith("Location:")]
+    assert len(scans) == 1 and "events.parquet" in scans[0], scans
+    assert "Join" not in plan
+    assert plan.count("hashpartitioning(user_id") == 1
+
+
+def test_funnel_collect_runs_three_jobs(spark):
+    # shuffle-map, final-aggregate and result jobs; the chain-join plan
+    # ran 9. AQE's shuffle and broadcast threads inherit the job group.
+    df = all_queries()["m_funnel_windowed"](spark, SF_DIR)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_funnel_jobs", "m_funnel_windowed collect")
+    try:
+        df.toPandas()
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = sc.statusTracker().getJobIdsForGroup("test_funnel_jobs")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert 0 < len(jobs) <= 3, sorted(jobs)
+
+
 def test_sim_search_broadcasts_query_vector(spark):
     # the 1-row query vector broadcasts; the embedding table is scanned
     # once with NO shuffle, and top-k plans as TakeOrdered
@@ -300,13 +327,6 @@ CARTESIAN_WHITELIST = {
     "m_basket_affinity",        # 1-row order-total broadcast onto the
                                 # pair-count stream; the pair build
                                 # itself is an orderkey equi-join
-    "m_funnel_windowed",        # 1-row stage-1-denominator broadcast
-                                # over the 3-row stage union (r9 verdict
-                                # item 7 folded the old s1.count() job
-                                # into the plan); the funnel chain joins
-                                # themselves are user_id-keyed
-                                # (docstring: cap vocab to top-K by df at
-                                # open-vocab scale), never row-bounded
 }
 
 # Heavy side-effecting queries whose DataFrame construction executes
