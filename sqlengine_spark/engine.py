@@ -133,9 +133,8 @@ class SQLEngine:
             stage_events,
         )
 
-        # staging is memoized per (process, sf_dir) and removed atexit —
-        # repeated engine instances share one copy instead of leaking
-        # one tempdir each (round-2 advice).
+        # staged once per (session, sf_dir) under SCRATCH: repeated
+        # engine instances share one copy instead of leaking one each
         stage = stage_events(self.spark, self.sf_dir)
         ev = self.spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(stage)
         return ev.withWatermark("ts", watermark) if watermark else ev

@@ -10,13 +10,12 @@ gitignored scratch dir and are rows-only checks: their self-verification
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import SCRATCH, scratch, table
+from sqlengine_spark.session import scratch, staged, table
 
 
 @query("a_scan_parquet", oracle="SELECT * FROM region")
@@ -542,9 +541,6 @@ def a_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rules.unionByName(fk_row)
 
 
-_BINFILE_STAGED: set[tuple[str, str]] = set()
-
-
 @query(
     "a_scan_binaryfile",
     oracle="""
@@ -574,14 +570,8 @@ def a_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake layouts, and budget small-file pressure with
     a_maintenance_compaction's bin-packing once decoded features are
     re-materialized columnar."""
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    app = spark.sparkContext.applicationId
-    stage = os.path.join(SCRATCH, f"binassets_{sf}")
-    if (app, sf_dir) not in _BINFILE_STAGED or not os.path.isdir(stage):
-        import shutil
 
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
+    def build(stage: str) -> None:
         # bounded harness staging: 20 rows, the media files a crawler
         # would have landed; production data arrives already on DFS
         rows = (
@@ -593,16 +583,14 @@ def a_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             with open(os.path.join(stage, f"doc_{r['doc_id']}.bin"), "wb") as fh:
                 fh.write(r["text"].encode("utf-8"))
-        _BINFILE_STAGED.add((app, sf_dir))
+
+    stage = staged(spark, sf_dir, "binassets", build)
     raw = spark.read.format("binaryFile").load(stage)
     return raw.select(
         F.element_at(F.split("path", "/"), -1).alias("fname"),
         F.col("length").alias("n_bytes"),
         F.lower(F.sha2(F.col("content"), 256)).alias("sha"),
     )
-
-
-_GLOB_STAGED: set[tuple[str, str]] = set()
 
 
 @query(
@@ -630,12 +618,9 @@ def a_scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     value (no key=value in the path contract), which is why
     a_sink_parquet_partitioned's layout wins for predicate-heavy
     access and this one for ingest-what-landed."""
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    app = spark.sparkContext.applicationId
-    base = os.path.join(SCRATCH, f"glob_tree_{sf}")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    if (app, sf_dir) not in _GLOB_STAGED or not os.path.isdir(base):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
         for rk in (0, 1, 2):
             sub = n.filter(F.col("n_regionkey") == rk)
             # two nested batch levels per region
@@ -648,7 +633,8 @@ def a_scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
             # decoy non-parquet file the glob must skip
             with open(os.path.join(base, f"region={rk}", "notes.json"), "w") as fh:
                 fh.write('{"decoy": true}')
-        _GLOB_STAGED.add((app, sf_dir))
+
+    base = staged(spark, sf_dir, "glob_tree", build)
     return (
         spark.read.schema(n.schema)
         .option("recursiveFileLookup", "true")

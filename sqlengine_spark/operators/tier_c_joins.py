@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 
 from sqlengine_spark.functions import dround
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import SCRATCH, load_tables, scratch, table
+from sqlengine_spark.session import load_tables, scratch, staged, table
 from sqlengine_spark.skew import salted_join
 
 
@@ -792,9 +792,6 @@ def c_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_STAGED: set[tuple[str, str]] = set()
-
-
 @query(
     "c_join_bucketed_colocated",
     oracle="""
@@ -831,24 +828,21 @@ def c_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ratios). One file per bucket (repartition before write)
     keeps the per-bucket sort usable by the reader.
 
-    The staging write is memoized per (Spark application, sf_dir) so
-    repeated calls in one session measure the JOIN, not the staging;
-    the catalog table is external (explicit LOCATION in the scratch
-    dir) for the same reason a_table_ctas_catalog's is."""
-    import shutil
-
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    app = spark.sparkContext.applicationId
+    The staging write goes through ``session.staged`` (once per Spark
+    application and sf_dir), so repeated calls in one session measure
+    the JOIN, not the staging. The catalog tables are external
+    (explicit LOCATION in the staged dir) for the same reason
+    a_table_ctas_catalog's is, and are named after that dir, so two
+    data dirs never share one."""
     spec = {
         "orders": ("o_orderkey", ["o_orderkey", "o_orderstatus", "o_totalprice"]),
         "lineitem": ("l_orderkey", ["l_orderkey", "l_extendedprice", "l_discount"]),
     }
-    names = {t: f"bkt_{t}_{sf}" for t in spec}
-    if (app, sf_dir) not in _BUCKETED_STAGED:
+
+    def build(base: str) -> None:
         for t, (key, cols) in spec.items():
-            loc = os.path.join(SCRATCH, names[t])
-            shutil.rmtree(loc, ignore_errors=True)
-            spark.sql(f"DROP TABLE IF EXISTS {names[t]}")
+            name = f"{os.path.basename(base)}_{t}"
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
             (
                 table(spark, sf_dir, t)
                 .select(*cols)
@@ -857,12 +851,13 @@ def c_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .format("parquet")
                 .bucketBy(8, key)
                 .sortBy(key)
-                .option("path", loc)
-                .saveAsTable(names[t])
+                .option("path", os.path.join(base, t))
+                .saveAsTable(name)
             )
-        _BUCKETED_STAGED.add((app, sf_dir))
-    o = spark.table(names["orders"]).filter(F.col("o_orderstatus") == "F")
-    li = spark.table(names["lineitem"])
+
+    bkt = os.path.basename(staged(spark, sf_dir, "bkt", build))
+    o = spark.table(f"{bkt}_orders").filter(F.col("o_orderstatus") == "F")
+    li = spark.table(f"{bkt}_lineitem")
     return (
         o.hint("merge")
         .join(li, o.o_orderkey == li.l_orderkey)

@@ -25,7 +25,6 @@ accumulates forever.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 import tempfile
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import dround
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import table
+from sqlengine_spark.session import scratch, staged, table
 
 #: Full events schema as staged for the streaming file source (ts
 #: already converted ns -> µs by session.table()).
@@ -44,12 +43,6 @@ EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, "
     "event_type string, value double, props string"
 )
-
-#: One staged copy of events per (process, sf_dir), removed at process
-#: exit — fixes the per-engine-instance tempdir leak (round-2 advice:
-#: engine.py staged a fresh copy per SQLEngine and never removed it).
-_EVENTS_STAGE: dict[str, str] = {}
-
 
 class FiniteStream:
     """The one harness that drives a finite Structured Streaming query
@@ -231,20 +224,18 @@ def stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     TIMESTAMP(NANOS), which the file source can't read directly).
 
     ``n_files`` controls micro-batch granularity under
-    ``maxFilesPerTrigger=1``. Staging is memoized per sf_dir and cleaned
-    up atexit. On a real deployment the source is a Kafka/landing
-    directory and this staging disappears; every downstream plan is
-    identical.
+    ``maxFilesPerTrigger=1``. Staging goes through ``session.staged``:
+    one copy per Spark application and sf_dir, removed at process exit.
+    On a real deployment the source is a Kafka/landing directory and
+    this staging disappears; every downstream plan is identical.
     """
-    path = _EVENTS_STAGE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix="sqlengine_events_stage_")
+
+    def build(path: str) -> None:
         table(spark, sf_dir, "events").coalesce(n_files).write.mode(
             "overwrite"
         ).parquet(path)
-        _EVENTS_STAGE[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return staged(spark, sf_dir, f"events_stage{n_files}", build)
 
 
 @query(
@@ -749,8 +740,7 @@ def j_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqlengine_spark.dml import merge_into
 
     src_dir = stage_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="sqlengine_upsert_snap_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch("upsert_snap")
     state: dict[str, str | None] = {"path": None}
 
     def upsert(batch_df, batch_id: int) -> None:
@@ -1168,12 +1158,6 @@ def j_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-#: Time-sliced wave staging for session-timeout streaming (one dir of
-#: wave files per (process, sf_dir), removed at process exit like
-#: _EVENTS_STAGE).
-_EVENTS_WAVES: dict[str, list] = {}
-
-
 def stage_event_timeslices(
     spark: SparkSession, sf_dir: str, waves: int = 4
 ) -> list:
@@ -1195,36 +1179,30 @@ def stage_event_timeslices(
     The ntile global sort is HARNESS staging, not plan — a production
     deployment reads an already-time-ordered Kafka/landing source and
     this helper disappears."""
-    hit = _EVENTS_WAVES.get(sf_dir)
-    if hit is not None and all(os.path.isdir(d) for d in hit):
-        return hit
-    from pyspark.sql import Window
-
-    base = tempfile.mkdtemp(prefix="sqlengine_events_waves_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    sliced = ev.select(
-        "*", F.ntile(waves).over(Window.orderBy("ts")).alias("w")
-    )
-    dirs = []
-    for i in range(1, waves + 1):
-        d = os.path.join(base, f"wave{i}")
-        sliced.filter(F.col("w") == i).drop("w").coalesce(1).write.parquet(d)
-        dirs.append(d)
-    mx = ev.agg(F.max("ts")).collect()[0][0]
     import datetime as _dt
 
-    for j, off_days in ((waves + 1, 30), (waves + 2, 60)):
-        d = os.path.join(base, f"wave{j}")
-        spark.createDataFrame(
-            [(-1, mx + _dt.timedelta(days=off_days), -1, "sentinel", 0.0, "")],
-            schema=EVENTS_STREAM_SCHEMA,
-        ).coalesce(1).write.parquet(d)
-        dirs.append(d)
-    _EVENTS_WAVES[sf_dir] = dirs
-    return dirs
+    from pyspark.sql import Window
+
+    def build(base: str) -> None:
+        ev = table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        )
+        sliced = ev.select(
+            "*", F.ntile(waves).over(Window.orderBy("ts")).alias("w")
+        )
+        for i in range(1, waves + 1):
+            d = os.path.join(base, f"wave{i}")
+            sliced.filter(F.col("w") == i).drop("w").coalesce(1).write.parquet(d)
+        mx = ev.agg(F.max("ts")).collect()[0][0]
+        for j, off_days in ((waves + 1, 30), (waves + 2, 60)):
+            d = os.path.join(base, f"wave{j}")
+            spark.createDataFrame(
+                [(-1, mx + _dt.timedelta(days=off_days), -1, "sentinel", 0.0, "")],
+                schema=EVENTS_STREAM_SCHEMA,
+            ).coalesce(1).write.parquet(d)
+
+    base = staged(spark, sf_dir, f"events_waves{waves}", build)
+    return [os.path.join(base, f"wave{i}") for i in range(1, waves + 3)]
 
 
 @query(

@@ -17,12 +17,14 @@ is exactly how production pipelines pin their splits.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import dround, round12, vdot
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import table
+from sqlengine_spark.session import scratch, table
 
 #: Context-window chunking parameters (words per chunk / stride).
 CHUNK_WORDS = 50
@@ -2562,20 +2564,14 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-probe at 10^12 keys). The same loop upgrades to MinHash-band
     signatures for NEAR-dup (l_dedup_near_minhash's banding) with the
     anti-join on (band, sig) instead of md5."""
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     mid = d.agg(F.percentile_approx("doc_id", 0.5).alias("m")).collect()[0]["m"]
     first = d.filter(F.col("doc_id") <= mid)
     second = d.filter(F.col("doc_id") > mid)
 
-    base = _tempfile.mkdtemp(prefix="sqlengine_dedup_stream_")
-    _atexit.register(_shutil.rmtree, base, ignore_errors=True)
-    out_dir = _os.path.join(base, "out")
-    idx_dir = _os.path.join(base, "index")
+    base = scratch("dedup_stream")
+    out_dir = os.path.join(base, "out")
+    idx_dir = os.path.join(base, "index")
     state = {"committed": 0}
 
     def _read_index():
@@ -2595,8 +2591,8 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # subdirectory (never touching prior batches' files); the index
         # projection reads back the just-written survivors so the agg
         # plan runs once. I/O per batch ∝ |batch survivors|.
-        out_b = _os.path.join(out_dir, f"batch{batch_id}")
-        idx_b = _os.path.join(idx_dir, f"batch{batch_id}")
+        out_b = os.path.join(out_dir, f"batch{batch_id}")
+        idx_b = os.path.join(idx_dir, f"batch{batch_id}")
         cand.write.mode("overwrite").parquet(out_b)
         spark.read.schema("h string, doc_id long").parquet(out_b).select(
             "h"
@@ -2613,7 +2609,7 @@ def l_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fs.run(stream, waves=(first, second), foreach_batch=dedup_batch)
     # lazy read-back, as l_eval_report_stream: the output directory
-    # lives until process exit
+    # lives until the next call empties it
     return spark.read.schema("h string, doc_id long").option(
         "recursiveFileLookup", "true"
     ).parquet(out_dir)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from sqlengine_spark import dml
 from sqlengine_spark.functions import dround
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import SCRATCH, scratch, table
+from sqlengine_spark.session import scratch, staged, table
 
 
 @query(
@@ -233,9 +233,6 @@ def n_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VERSIONS_STAGED: set[tuple[str, str]] = set()
-
-
 @query(
     "n_time_travel",
     oracle="""
@@ -268,17 +265,7 @@ def n_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    base = os.path.join(
-        SCRATCH,
-        f"part_tt_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}",
-    )
-    app = spark.sparkContext.applicationId
-    manifest = os.path.join(base, "_versions.json")
-    if (app, sf_dir) not in _VERSIONS_STAGED or not os.path.exists(manifest):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         p0 = table(spark, sf_dir, "part")
         v1 = dml.update(
             p0,
@@ -291,10 +278,11 @@ def n_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             path = os.path.join(base, f"v{ver}")
             snap.write.mode("overwrite").parquet(path)
             log[str(ver)] = path
-        with open(manifest, "w") as fh:
+        with open(os.path.join(base, "_versions.json"), "w") as fh:
             json.dump(log, fh)
-        _VERSIONS_STAGED.add((app, sf_dir))
-    with open(manifest) as fh:
+
+    base = staged(spark, sf_dir, "part_tt", build)
+    with open(os.path.join(base, "_versions.json")) as fh:
         log = json.load(fh)
     as_of = spark.read.parquet(log["1"])  # VERSION AS OF 1
     return as_of.select(

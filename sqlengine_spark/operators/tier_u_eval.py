@@ -20,11 +20,8 @@ identical expression (rule 11e).
 
 from __future__ import annotations
 
-import atexit
 import math
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -32,7 +29,7 @@ from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import dround, round12
 from sqlengine_spark.registry import query
-from sqlengine_spark.session import scatter, table
+from sqlengine_spark.session import scatter, scratch, table
 from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 
 _BT_ITERS = 5
@@ -2811,8 +2808,7 @@ def l_eval_report_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = d.filter(F.expr(f"doc_id DIV 2 <= {pmid}"))
     second = d.filter(F.expr(f"doc_id DIV 2 > {pmid}"))
 
-    out_dir = tempfile.mkdtemp(prefix="sqlengine_eval_report_stream_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = scratch("eval_report_stream")
     PP_SCHEMA = "pair_id long, chrf_fp long, f1_fp long, lr_fp long"
 
     def metrics_batch(batch_df, batch_id: int) -> None:
@@ -2838,8 +2834,8 @@ def l_eval_report_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         fs.run(stream, waves=(first, second), foreach_batch=metrics_batch)
     # lazy read-back: the accumulated metric store is |pairs|-sized
     # (corpus-growing), so it is NOT collected to the driver — the
-    # rollup reads the parquet store directly (files live until
-    # process exit; the atexit cleanup mirrors _EVENTS_STAGE)
+    # rollup reads the parquet store directly (its files live until
+    # the next call empties them)
     pp = (
         spark.read.schema(PP_SCHEMA)
         .option("recursiveFileLookup", "true")

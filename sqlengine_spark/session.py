@@ -5,13 +5,25 @@ profile (one task slot and one shuffle partition per core this process
 may run on); on a real cluster only ``master`` and memory sizing change.
 AQE stays on everywhere — it is the runtime answer to skew and
 partition-count tuning at 100 TB (SURVEY §4).
+
+Every file an operator writes lives under ``SCRATCH``, through one of
+two helpers. ``staged()`` builds an input the operator derives from
+the tables once, keyed by Spark application, name and full ``sf_dir``,
+and removes it at process exit. ``scratch()`` hands out a fixed-name
+store that each call empties, so a frame read from it stays valid
+until the next call of the same operator. Both names are fixed, so two
+processes that run operators at the same time need their own
+``SPARK_GRAFT_SCRATCH``.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
 import shutil
 import weakref
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,20 +44,57 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Sink scratch root, default ``.scratch`` beside the package. On a real
-# cluster this must be a DFS path every executor can reach (s3://... /
-# hdfs://...), never a driver-local dir — override via
-# SPARK_GRAFT_SCRATCH.
+# Scratch root for every file an operator writes, default ``.scratch``
+# beside the package. On a real cluster this must be a DFS path every
+# executor can reach (s3://... / hdfs://...), never a driver-local dir:
+# override via SPARK_GRAFT_SCRATCH.
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(_ROOT, ".scratch"))
 
 
 def scratch(name: str) -> str:
-    """An emptied sink path ``name`` under ``SCRATCH``."""
+    """An emptied sink path ``name`` under ``SCRATCH``. The name is
+    fixed per operator, so each call empties what the previous call
+    wrote: a frame read from it stays valid until the next call of the
+    same operator, and a long-lived session holds one copy, not one
+    per call."""
     path = os.path.join(SCRATCH, name)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(SCRATCH, exist_ok=True)
     return path
+
+
+#: (Spark application id, name, resolved sf_dir) -> staged directory.
+_STAGED: dict[tuple[str, str, str], str] = {}
+
+
+def staged(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[str], None]
+) -> str:
+    """The directory ``build`` fills with an input derived from
+    ``sf_dir``, built once per (Spark application, ``name``, resolved
+    ``sf_dir``) and rebuilt if it has gone. It sits under ``SCRATCH``,
+    named after ``name`` and a hash of the full ``sf_dir``: two data
+    dirs that share a basename never serve each other's files, and a
+    catalog table named after the directory is unique the same way.
+    ``build(path)`` gets an empty, existing ``path``. Every directory
+    built here is removed at process exit."""
+    real = os.path.realpath(sf_dir)
+    key = (spark.sparkContext.applicationId, name, real)
+    digest = hashlib.sha1(real.encode()).hexdigest()[:10]
+    path = os.path.join(SCRATCH, f"{name}_{digest}")
+    if key not in _STAGED or not os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        build(path)
+        _STAGED[key] = path
+    return path
+
+
+@atexit.register
+def _remove_staged() -> None:
+    for path in set(_STAGED.values()):
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def get_spark(app_name: str = "sqlengine_spark") -> SparkSession:

@@ -5,8 +5,10 @@ update expressions referencing source columns."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from sqlengine_spark import dml
+from sqlengine_spark.session import SCRATCH, staged
 
 
 def _df(spark, rows, schema):
@@ -94,10 +96,10 @@ def test_time_travel_version_chain(spark):
     from tests.conftest import SF_DIR
 
     v1 = all_queries()["n_time_travel"](spark, SF_DIR)
-    sf = os.path.basename(SF_DIR.rstrip("/")).replace(".", "_")
-    from sqlengine_spark.operators.tier_a_scans import SCRATCH
-
-    with open(os.path.join(SCRATCH, f"part_tt_{sf}", "_versions.json")) as fh:
+    # the operator's own staged dir: a second build would mean the
+    # call above staged nothing under this name
+    base = staged(spark, SF_DIR, "part_tt", lambda _: pytest.fail("not staged"))
+    with open(os.path.join(base, "_versions.json")) as fh:
         log = json.load(fh)
     assert sorted(log) == ["0", "1", "2"]
     v0 = spark.read.parquet(log["0"])
@@ -122,8 +124,6 @@ def test_dynamic_overwrite_leaves_other_partitions_untouched(spark):
     from sqlengine_spark.registry import all_queries
 
     sf_dir = "/root/testdata/sf0.001"
-    from sqlengine_spark.operators.tier_a_scans import SCRATCH
-
     base = os.path.join(SCRATCH, "orders_dyn_overwrite")
 
     # run once so the partitioned snapshot is laid down

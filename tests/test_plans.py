@@ -1188,12 +1188,12 @@ def test_weighted_median_collapses_ties_before_window(spark):
     # the sort sees |distinct prices| rows, not |lineitem|; the window
     # is partitioned (global sweep) and all sums are integer
     plan = _plan(spark, "d_agg_weighted_median")
-    assert "Window" in plan
-    agg_pos = plan.find("HashAggregate")
-    win_pos = plan.find("Window")
-    assert -1 < agg_pos, "tie-collapse agg missing"
-    # formatted plans print operators leaves-first: the agg node must
-    # appear in the tree ABOVE (before) the window consumes it
+    # the tree section prints the root first and each input below its
+    # consumer: the tie-collapse agg must sit below the lowest Window
+    tree = plan.split("\n\n", 1)[0]
+    assert "Window" in tree
+    below = tree[tree.rfind("Window"):]
+    assert "HashAggregate" in below, "tie-collapse agg missing below the window"
     assert "CartesianProduct" not in plan
 
 

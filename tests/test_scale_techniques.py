@@ -10,7 +10,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from sqlengine_spark.session import table
+from sqlengine_spark.session import SCRATCH, table
 from sqlengine_spark.skew import salted_agg
 from tests.conftest import SF_DIR_SMALL
 
@@ -94,7 +94,7 @@ def test_zorder_write_clusters_both_dims(spark):
 
     import pyarrow.parquet as pq
 
-    from sqlengine_spark.operators.tier_a_scans import SCRATCH, a_sink_zorder
+    from sqlengine_spark.operators.tier_a_scans import a_sink_zorder
 
     a_sink_zorder(spark, SF_DIR_SMALL).collect()
     files = sorted(glob.glob(f"{SCRATCH}/lineitem_zorder/part-*.parquet"))
@@ -135,10 +135,7 @@ def test_compaction_collapses_file_count(spark):
     this asserts the layout effect)."""
     import glob
 
-    from sqlengine_spark.operators.tier_a_scans import (
-        SCRATCH,
-        a_maintenance_compaction,
-    )
+    from sqlengine_spark.operators.tier_a_scans import a_maintenance_compaction
 
     a_maintenance_compaction(spark, SF_DIR_SMALL).collect()
     n_small = len(glob.glob(f"{SCRATCH}/orders_smallfiles/part-*"))

@@ -10,14 +10,14 @@ Uses sf0.001 (1 000 events) so each test's stream completes in seconds.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from sqlengine_spark.operators.tier_j_streaming import FiniteStream
 from sqlengine_spark.registry import all_queries
-from sqlengine_spark.session import table
+from sqlengine_spark.session import SCRATCH, table
 from tests.conftest import SF_DIR_SMALL, leaves_no_stream
 
 
@@ -257,17 +257,12 @@ def test_dedup_stream_index_is_append_only(spark):
     global distinct-hash count (so no batch re-wrote earlier batches'
     rows), and batch-0 files are still present and non-empty after
     batch 1 committed."""
-    import glob
-
-    before = set(glob.glob(tempfile.gettempdir() + "/sqlengine_dedup_stream_*"))
+    # the operator's per-call store; removed first, so what the checks
+    # below read was written by this call
+    base = os.path.join(SCRATCH, "dedup_stream")
+    shutil.rmtree(base, ignore_errors=True)
     result = all_queries()["l_dedup_stream"](spark, SF_DIR_SMALL)
     n_total = result.count()
-    created = (
-        set(glob.glob(tempfile.gettempdir() + "/sqlengine_dedup_stream_*"))
-        - before
-    )
-    assert len(created) == 1, created
-    base = created.pop()
     out_batches = sorted(os.listdir(os.path.join(base, "out")))
     idx_batches = sorted(os.listdir(os.path.join(base, "index")))
     assert out_batches == ["batch0", "batch1"], out_batches
