@@ -4,8 +4,9 @@ document (their 500-row inputs justify brute force; this module is the
 implementation you switch to when the table stops being broadcastable).
 
 Algorithm (SimHash/random projection, Charikar 2002):
-1. draw P deterministic random hyperplanes (seeded — same planes on
-   every executor and every run);
+1. take P deterministic Rademacher (±1) hyperplanes derived from md5
+   (``md5_planes`` — the same planes on every executor, every run and
+   in the DuckDB oracle);
 2. signature bit p = sign(v · plane_p); P bits per vector, computed
    with the same JVM-side double dot product as the exact operators;
 3. split the signature into ``bands`` bands of ``rows_per_band`` bits;
@@ -15,7 +16,9 @@ Algorithm (SimHash/random projection, Charikar 2002):
    ever meeting;
 4. exact-verify candidates with the true dot product and the caller's
    threshold — output is a SUBSET of the brute-force join with recall
-   1-(1-p^r)^b (≥ 0.999 at cos 0.95 with the defaults below).
+   1-(1-p^r)^b (≥ 0.999 at cos 0.95 with the default 16 × 8 bands).
+
+Every function here reads ``vec_id`` and ``embedding`` columns.
 
 Scale shape: one broadcast of the planes, one shuffle keyed on
 (band, band-signature) — bucket sizes follow data density, never N².
@@ -25,17 +28,10 @@ tests/test_ann.py.
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import vdot
-
-
-def _planes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
 def md5_planes(n_planes: int, dim: int) -> list[list[float]]:
@@ -67,48 +63,28 @@ def md5_planes(n_planes: int, dim: int) -> list[list[float]]:
 
 def lsh_sim_join(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    dim: int = 64,
+    threshold: float,
     bands: int = 16,
     rows_per_band: int = 8,
-    seed: int = 42,
-    planes_override: list[list[float]] | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold (unit vectors), found
     via banded hyperplane LSH + exact verification. Returns
     (va, vb, sim) where sim is the RAW double dot product.
 
-    ``planes_override`` replaces the default seeded-Gaussian planes
-    with a caller-supplied set (must be bands*rows_per_band x dim) —
-    used by l_sim_join_lsh to inject ``md5_planes`` so a DuckDB oracle
-    can replay the banding bit-for-bit."""
+    The planes are ``md5_planes(bands * rows_per_band, dim)``, with dim
+    the length of the first vector, so a DuckDB oracle can replay the
+    banding bit-for-bit (l_sim_join_lsh)."""
     spark = vectors.sparkSession
-    # Fail fast on a dim mismatch: zip_with pads the shorter array with
-    # nulls, which would otherwise yield NULL signature bits / NULL sims
-    # and a silently empty or truncated candidate set (round-2 advice).
-    first = vectors.select(F.size(F.col(vec_col)).alias("n")).first()
-    if first is not None and first["n"] != dim:
-        raise ValueError(
-            f"lsh_sim_join: {vec_col} has length {first['n']}, expected dim={dim}"
-        )
-    n_planes = bands * rows_per_band
-    plane_vecs = (
-        planes_override
-        if planes_override is not None
-        else _planes(n_planes, dim, seed)
-    )
-    if len(plane_vecs) != n_planes:
-        raise ValueError(
-            f"lsh_sim_join: got {len(plane_vecs)} planes, "
-            f"expected bands*rows_per_band={n_planes}"
-        )
+    # zip_with pads the shorter array with nulls, so planes of another
+    # length would yield NULL signature bits: size them to the data.
+    first = vectors.select(F.size("embedding").alias("n")).first()
+    dim = first["n"] if first is not None else 0
+    plane_vecs = md5_planes(bands * rows_per_band, dim)
     planes = spark.createDataFrame(
         [(p, vec) for p, vec in enumerate(plane_vecs)],
         "plane_id int, pvec array<double>",
     )
-    v = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    v = vectors.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
 
     # signature bits: broadcast the planes, one dot per (vector, plane)
     bits = (
@@ -187,39 +163,31 @@ def lsh_sim_join(
     )
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: assign every vector to its
-    nearest of ``n_centroids`` coarse centroids, then answer the query by
-    scanning only the ``n_probe`` buckets whose centroids are nearest to
-    the query vector. With ``n_probe == n_centroids`` the result is
-    EXACTLY the brute-force top-k (asserted in tests/test_ann.py).
+def ivf_topk(vectors: DataFrame, query_id: int, n_probe: int) -> DataFrame:
+    """IVF (inverted-file) approximate top-10: assign every vector to its
+    nearest of 16 coarse centroids, then answer the query by scanning
+    only the ``n_probe`` buckets whose centroids are nearest to the
+    query vector. With ``n_probe == 16`` the result is EXACTLY the
+    brute-force top-10 (asserted in tests/test_ann.py). Both sizes are
+    fixed: l_sim_search_ivf's oracle hard-codes them.
 
-    Centroids are a deterministic sample of the data itself (the
-    ``n_centroids`` rows with smallest ``md5(id)`` — one TakeOrdered
-    pass, no k-means iterations, fully reproducible; md5 rather than
-    xxhash64 since round 9 so the DuckDB oracle replays the IDENTICAL
-    centroid set — the l_dedup_simhash graduation convention. The old
-    ``seed`` parameter was removed in round 10: after the md5 switch it
-    had no effect, and silently ignoring it would mislead callers.)
+    Centroids are a deterministic sample of the data itself (the 16
+    rows with smallest ``md5(id)`` — one TakeOrdered pass, no k-means
+    iterations, fully reproducible; md5 rather than xxhash64 so the
+    DuckDB oracle replays the IDENTICAL centroid set — the
+    l_dedup_simhash graduation convention).
 
     Scale shape: the centroid set is tiny and broadcast as literals into
     a JVM-side argmax — assignment is a map-only pass with NO shuffle;
-    the probe filter cuts the scan to ~n_probe/n_centroids of the table
+    the probe filter cuts the scan to ~n_probe/16 of the table
     before the TakeOrdered top-k. On a real deployment the assignment is
     computed once at ingest and stored as a partition column, making the
     probe a partition-pruned scan.
     """
     from sqlengine_spark.functions import dround
 
-    v = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    k, n_centroids = 10, 16
+    v = vectors.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     cent_rows = (
         v.select("vid", "vec", F.md5(F.col("vid").cast("string")).alias("h"))
         .orderBy("h", "vid")
@@ -270,22 +238,14 @@ def ivf_topk(
     )
 
 
-def pq_topk(
-    vectors: DataFrame,
-    query_id: int,
-    k: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    n_train: int = 256,
-    kmeans_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PRODUCT-QUANTIZATION approximate top-k (Jégou et al.'s PQ): the
+def pq_topk(vectors: DataFrame, query_id: int) -> DataFrame:
+    """PRODUCT-QUANTIZATION approximate top-100 (Jégou et al.'s PQ): the
     memory-compression path of the ANN family — vectors are stored as
-    ``m`` sub-space code IDs (here 8 codes × 4 bits of codebook = 8
-    bytes vs 256 bytes raw, 32×), and queries score against codes via
-    an ADC lookup table without ever touching raw vectors.
+    ``m`` = 16 sub-space code IDs (16 codes × 4 bits of codebook = 8
+    bytes vs 256 bytes of float32 at dim 64, 32×), and queries score
+    against codes via an ADC lookup table without ever touching raw
+    vectors. Every size below is fixed: _pq_oracle (l_sim_search_pq)
+    unrolls the same sample, sub-vector width and iteration count.
 
     Training: a deterministic sample (smallest ``md5(id)`` — switched
     from xxhash64 in round 10 so the DuckDB oracle replays the
@@ -319,7 +279,8 @@ def pq_topk(
 
     from sqlengine_spark.functions import dround
 
-    v = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    k, m, ksub, n_train, kmeans_iters = 100, 16, 16, 256, 3
+    v = vectors.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     train_rows = (
         v.select("vid", "vec", F.md5(F.col("vid").cast("string")).alias("h"))
         .orderBy("h", "vid")

@@ -85,9 +85,5 @@ def merge_into(
             return F.when(src_only, insert_val).otherwise(base).alias(c)
         return base.alias(c)
 
-    merged = joined.select(*[out_col(c) for c in target.columns])
-    if not insert_when_not_matched:
-        merged = joined.filter(~src_only).select(
-            *[out_col(c) for c in target.columns]
-        )
-    return merged
+    rows = joined if insert_when_not_matched else joined.filter(~src_only)
+    return rows.select(*[out_col(c) for c in target.columns])

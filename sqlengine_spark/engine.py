@@ -128,15 +128,11 @@ class SQLEngine:
         real deployment the source is a Kafka/queue/landing directory
         and this staging disappears; the downstream plan is identical.
         """
-        from sqlengine_spark.operators.tier_j_streaming import (
-            EVENTS_STREAM_SCHEMA,
-            stage_events,
-        )
+        from sqlengine_spark.operators.tier_j_streaming import events_stream
 
         # staged once per (session, sf_dir) under SCRATCH: repeated
         # engine instances share one copy instead of leaking one each
-        stage = stage_events(self.spark, self.sf_dir)
-        ev = self.spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(stage)
+        ev = events_stream(self.spark, self.sf_dir)
         return ev.withWatermark("ts", watermark) if watermark else ev
 
     # -- operator library -------------------------------------------------

@@ -15,16 +15,14 @@ Spark shuffles/spills binary columns like any other; Arrow moves them
 to Python as zero-copy buffers, so the decode path is batched, not
 per-row.
 
-Decode stubs
-------------
-This container has no image/audio codecs, so the actual decode is
-STUBBED (clearly marked below): ``decode=strict`` raises
-NotImplementedError where PIL/soundfile would be called; the default
-``decode=fake`` derives a deterministic pseudo-feature vector from the
-payload bytes so the full pipeline — schema, partitioning, UDF
+Decode stub
+-----------
+No image/audio codec ships with the engine, so the actual decode is
+STUBBED: ``_fake_decode`` derives a deterministic pseudo-feature vector
+from the payload bytes so the full pipeline — schema, partitioning, UDF
 signature, Arrow batch shape — is real and testable end to end. On a
-real cluster you swap `_fake_decode` for the library call; nothing else
-changes.
+real cluster you swap `_fake_decode` for the library call
+(PIL.Image.open / soundfile.read); nothing else changes.
 
 Scale design: ``repartition(media_id)`` before the map gives balanced
 decode work regardless of upstream file layout; ``mapInPandas``
@@ -63,21 +61,11 @@ def _fake_decode(payload: bytes) -> list[float]:
     ]
 
 
-def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
-    """payload → fixed-width feature vector per media row.
-
-    ``decode='strict'`` marks the codec boundary: it raises
-    NotImplementedError exactly where PIL.Image.open /
-    soundfile.read would run.
-    """
+def extract_features(df: DataFrame) -> DataFrame:
+    """payload → fixed-width feature vector per media row."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:  # one Arrow batch at a time — bounded memory
-            if decode == "strict":
-                raise NotImplementedError(
-                    "media codecs unavailable in this environment; "
-                    "swap in PIL/soundfile here on a real cluster"
-                )
             feats = [_fake_decode(p) for p in pdf["payload"]]
             out = pd.DataFrame(
                 {
@@ -94,9 +82,9 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     return df.repartition("media_id").mapInPandas(run, FEATURE_SCHEMA)
 
 
-def sample_frames(df: DataFrame, frame_size: int = 256, every_n: int = 2) -> DataFrame:
+def sample_frames(df: DataFrame, frame_size: int) -> DataFrame:
     """Video-style frame sampling: split each payload into fixed-size
-    chunks ('frames') and keep every n-th — the batched-UDF shape of a
+    chunks ('frames') and keep every 2nd — the batched-UDF shape of a
     real ffmpeg keyframe sampler (which would replace the chunking)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -108,7 +96,7 @@ def sample_frames(df: DataFrame, frame_size: int = 256, every_n: int = 2) -> Dat
                     for off in range(0, len(payload), frame_size)
                 ]
                 for no, fr in enumerate(frames):
-                    if no % every_n == 0:
+                    if no % 2 == 0:
                         rows.append(
                             (mid, no, len(fr), hashlib.md5(fr).hexdigest())
                         )

@@ -470,7 +470,7 @@ def d_agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqlengine_spark.skew import salted_agg
 
     ev = table(spark, sf_dir, "events")
-    return salted_agg(ev, key="event_type", value="user_id", n_salts=16)
+    return salted_agg(ev, key="event_type", value="user_id")
 
 
 @query(

@@ -218,24 +218,35 @@ class FiniteStream:
             shutil.rmtree(self._base, ignore_errors=True)
 
 
-def stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Stage the events table as a plain-timestamp parquet directory for
-    the Structured Streaming file source (the raw table is
+def _stage_events(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the events table as a plain-timestamp parquet directory of
+    4 files for the Structured Streaming file source (the raw table is
     TIMESTAMP(NANOS), which the file source can't read directly).
 
-    ``n_files`` controls micro-batch granularity under
-    ``maxFilesPerTrigger=1``. Staging goes through ``session.staged``:
+    The file count sets micro-batch granularity under
+    ``maxFilesPerTrigger``. Staging goes through ``session.staged``:
     one copy per Spark application and sf_dir, removed at process exit.
     On a real deployment the source is a Kafka/landing directory and
     this staging disappears; every downstream plan is identical.
     """
 
     def build(path: str) -> None:
-        table(spark, sf_dir, "events").coalesce(n_files).write.mode(
+        table(spark, sf_dir, "events").coalesce(4).write.mode(
             "overwrite"
         ).parquet(path)
 
-    return staged(spark, sf_dir, f"events_stage{n_files}", build)
+    return staged(spark, sf_dir, "events_stage4", build)
+
+
+def events_stream(
+    spark: SparkSession, sf_dir: str, per_trigger: int | None = None
+) -> DataFrame:
+    """The events table as a file-source stream over its staged copy:
+    ``per_trigger`` files per micro-batch, or all 4 in one when None."""
+    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+    if per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(per_trigger))
+    return reader.parquet(_stage_events(spark, sf_dir))
 
 
 @query(
@@ -369,11 +380,8 @@ def j_tumbling_1h_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     j_watermark_late_drop) bounds it to the lateness horizon. The
     shuffle is keyed (window, event_type) exactly like the batch plan.
     """
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
@@ -398,11 +406,8 @@ def j_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out (demonstrated in j_watermark_late_drop). Finite input here, so
     the final set is well-defined without one.
     """
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .select("event_id")
         .dropDuplicates(["event_id"])
     )
@@ -510,11 +515,8 @@ def j_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same time-range predicate, which lets the engine age out rows older
     than watermark - 1 h; the join plan is otherwise identical.
     """
-    src = stage_events(spark, sf_dir)
     clicks = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -523,8 +525,7 @@ def j_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(src)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -569,11 +570,8 @@ def j_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
 
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .groupBy("user_id")
         .applyInPandasWithState(
             count_events,
@@ -627,11 +625,8 @@ def j_session_30m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded deployment. Shuffle is keyed on user_id — identical to
     the batch plan.
     """
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -664,11 +659,8 @@ def j_sliding_1h_15m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state = one counter per open window (4x tumbling's count);
     watermarks bound retention exactly as in the tumbling case.
     """
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").alias("w_start"), "cnt")
@@ -697,12 +689,9 @@ def j_stream_join_static_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming feature-enrichment topology — dimension updates between
     batches are picked up automatically because the static plan is
     re-bound each trigger."""
-    src = stage_events(spark, sf_dir)
     c = table(spark, sf_dir, "customer")
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .join(F.broadcast(c), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "event_type", "c_name", "c_mktsegment")
     )
@@ -739,7 +728,6 @@ def j_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sqlengine_spark.dml import merge_into
 
-    src_dir = stage_events(spark, sf_dir)
     base = scratch("upsert_snap")
     state: dict[str, str | None] = {"path": None}
 
@@ -771,9 +759,7 @@ def j_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["path"] = out
 
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+        events_stream(spark, sf_dir, per_trigger=1)
         .select("user_id", "event_id", "value")
     )
     with FiniteStream(spark) as fs:
@@ -823,10 +809,8 @@ def j_tumbling_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     j_watermark_late_drop's job, which stages its own explicitly
     time-ordered chunks for that reason.
     """
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(src)
+        events_stream(spark, sf_dir)
         .withWatermark("ts", "13 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"))
@@ -859,11 +843,8 @@ def j_tumbling_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical state/shuffle shape to j_tumbling_1h_stream; the
     trigger only changes scheduling — each scheduled run resumes from
     the checkpoint and processes the delta since the last run."""
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
@@ -962,11 +943,8 @@ def j_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     option flag — the same reader audits any point in the checkpoint's
     retained history.
     """
-    src = stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=2)
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
@@ -1131,14 +1109,11 @@ def j_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates map-side before the shuffle so rejected rows still
     count but never carry payload. Partition pin per the rule-11b
     state-store lesson (inside FiniteStream)."""
-    src = stage_events(spark, sf_dir)
     passed = (
         F.col("value").between(0, 400) & (F.col("event_type") != "error")
     )
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        events_stream(spark, sf_dir, per_trigger=1)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_total"),
@@ -1158,10 +1133,8 @@ def j_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def stage_event_timeslices(
-    spark: SparkSession, sf_dir: str, waves: int = 4
-) -> list:
-    """Stage events as ``waves`` TIME-SLICED parquet files plus two
+def stage_event_timeslices(spark: SparkSession, sf_dir: str) -> list:
+    """Stage events as 4 TIME-SLICED parquet files plus two
     far-future sentinel files, returned as an ordered list of wave
     dirs that FiniteStream lands in the source one drain at a time.
 
@@ -1182,6 +1155,8 @@ def stage_event_timeslices(
     import datetime as _dt
 
     from pyspark.sql import Window
+
+    waves = 4
 
     def build(base: str) -> None:
         ev = table(spark, sf_dir, "events").select(

@@ -38,7 +38,6 @@ def _verify_jaccard(
     feats: DataFrame,
     threshold: float,
     feat_col: str = "t",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Exact set-Jaccard verification on candidate pairs ONLY — the
     shared final stage of every near-dup pipeline here (prefix-filtered
@@ -90,7 +89,7 @@ def _verify_jaccard(
             "doc_b",
         )
         .filter(jac >= threshold)
-        .select("doc_a", "doc_b", dround(jac, ndigits).alias("jaccard"))
+        .select("doc_a", "doc_b", dround(jac, 6).alias("jaccard"))
     )
 
 
@@ -1133,8 +1132,6 @@ def l_sim_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides is the sequential double fold (vdot ↔ ordered SUM over
     generate_series, CLAUDE.md rule 4), so the sign of each signature
     bit and the τ filter decision are engine-identical by construction.
-    The seeded-Gaussian plane path stays available in ann.lsh_sim_join
-    as the default for callers that don't need cross-engine replay.
 
     Band geometry note: τ = 0.4 is a weak threshold (collision prob
     p = 1 − θ/π ≈ 0.63), so recall needs shallow bands — 32 bands × 2
@@ -1143,17 +1140,10 @@ def l_sim_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     harder at the same recall; geometry is a parameter, the plan shape
     (broadcast planes → one (band, sig)-keyed shuffle → exact verify on
     candidates) is fixed and never N²."""
-    from sqlengine_spark.ann import lsh_sim_join, md5_planes
+    from sqlengine_spark.ann import lsh_sim_join
 
     e = table(spark, sf_dir, "embeddings")
-    pairs = lsh_sim_join(
-        e,
-        threshold=0.4,
-        dim=64,
-        bands=32,
-        rows_per_band=2,
-        planes_override=md5_planes(64, 64),
-    )
+    pairs = lsh_sim_join(e, threshold=0.4, bands=32, rows_per_band=2)
     return pairs.select(
         "va", "vb", dround(F.col("sim"), 6).alias("sim")
     ).orderBy("va", "vb")
@@ -1560,7 +1550,7 @@ def l_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqlengine_spark.ann import ivf_topk
 
     e = table(spark, sf_dir, "embeddings")
-    return ivf_topk(e, query_id=0, k=10, n_centroids=16, n_probe=8)
+    return ivf_topk(e, query_id=0, n_probe=8)
 
 
 @query(
@@ -1600,14 +1590,15 @@ def l_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _linear_weights(dim: int = 64, seed: int = 123) -> list[float]:
+def _linear_weights() -> list[float]:
     """Deterministic pseudo-trained weights for the fused-inference
-    operator: seeded uniforms rounded to 6 dp so the decimal literals in
-    the SQL oracle parse to bit-identical doubles in both engines."""
+    operator, one per embedding dimension (64): seeded uniforms rounded
+    to 6 dp so the decimal literals in the SQL oracle parse to
+    bit-identical doubles in both engines."""
     import random
 
-    rng = random.Random(seed)
-    return [round(rng.uniform(-1.0, 1.0), 6) for _ in range(dim)]
+    rng = random.Random(123)
+    return [round(rng.uniform(-1.0, 1.0), 6) for _ in range(64)]
 
 
 _W = _linear_weights()
@@ -1681,7 +1672,7 @@ def l_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqlengine_spark.multimodal import documents_as_media, sample_frames
 
     media = documents_as_media(table(spark, sf_dir, "documents"))
-    return sample_frames(media, frame_size=256, every_n=2)
+    return sample_frames(media, frame_size=256)
 
 
 @query(
@@ -2295,7 +2286,7 @@ def l_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqlengine_spark.ann import pq_topk
 
     e = table(spark, sf_dir, "embeddings")
-    cands = pq_topk(e, query_id=0, k=100, m=16, ksub=16)
+    cands = pq_topk(e, query_id=0)
     qvec = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv")
     )

@@ -306,22 +306,22 @@ def l_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_oracle(iters: int, k: int = 10) -> str:
-    """Unrolled Lloyd-iteration oracle (the _pca_oracle pattern):
-    MATERIALIZED CTEs per step; per-vector scores are ORDERED sums
-    (sequential fold == Spark's ``aggregate`` lambda, rule 4) so the
-    argmax compares bit-identical doubles; centroid means round to
-    12 dp half-away on BOTH sides before feeding the next step; empty
-    clusters COALESCE to the previous centroid exactly like the
-    driver-side ``else cents[c]`` branch."""
-    head = f"""
+def _kmeans_oracle(iters: int) -> str:
+    """Unrolled Lloyd-iteration oracle, k = 10 (the _pca_oracle
+    pattern): MATERIALIZED CTEs per step; per-vector scores are
+    ORDERED sums (sequential fold == Spark's ``aggregate`` lambda,
+    rule 4) so the argmax compares bit-identical doubles; centroid
+    means round to 12 dp half-away on BOTH sides before feeding the
+    next step; empty clusters COALESCE to the previous centroid
+    exactly like the driver-side ``else cents[c]`` branch."""
+    head = """
     WITH flat AS MATERIALIZED (
       SELECT vec_id, s.i AS pos, embedding[s.i]::DOUBLE AS x
       FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) s),
     init AS MATERIALIZED (
       SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT)
                  AS cl
-      FROM embeddings ORDER BY vec_id LIMIT {k}),
+      FROM embeddings ORDER BY vec_id LIMIT 10),
     c0 AS MATERIALIZED (
       SELECT i.cl, f.pos, f.x AS cv
       FROM init i JOIN flat f ON f.vec_id = i.vec_id)"""

@@ -52,7 +52,7 @@ def _brute_pairs(planted, threshold):
 def test_lsh_finds_planted_near_dups(spark, planted):
     got = {
         (r["va"], r["vb"])
-        for r in lsh_sim_join(planted, threshold=0.9, dim=DIM).collect()
+        for r in lsh_sim_join(planted, threshold=0.9).collect()
     }
     truth = _brute_pairs(planted, 0.9)
     planted_pairs = {(i, 1000 + i) for i in range(N_DUP)}
@@ -67,7 +67,7 @@ def test_lsh_prunes_distant_pairs(spark, planted):
     # candidate generation must not degenerate to all-pairs: with 150
     # vectors there are ~11k pairs; random pairs collide on an 8-bit
     # band with prob 0.5^8, so candidates should be a small fraction.
-    out = lsh_sim_join(planted, threshold=-1.0, dim=DIM)  # keep all candidates
+    out = lsh_sim_join(planted, threshold=-1.0)  # keep all candidates
     n_cands = out.count()
     n_total = 150 * 149 // 2
     assert n_cands < n_total * 0.25, f"{n_cands}/{n_total} pairs met — no pruning"
@@ -110,7 +110,7 @@ def test_ivf_probe_all_equals_exact(spark):
     ]
     ivf_all = [
         tuple(r)
-        for r in ivf_topk(e, query_id=0, k=10, n_centroids=16, n_probe=16).collect()
+        for r in ivf_topk(e, query_id=0, n_probe=16).collect()
     ]
     assert ivf_all == exact
 

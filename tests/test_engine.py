@@ -73,10 +73,7 @@ def test_create_bucketed_table_colocated_join(spark):
             GROUP BY o_orderkey
             """
         )
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = joined._jdf.queryExecution().explainString(mode)
+        plan = eng.explain(joined)
         join_section = plan.split("HashAggregate")[0]
         assert "Exchange" not in join_section, (
             "bucketed DDL join still shuffles:\n" + join_section
@@ -87,7 +84,7 @@ def test_create_bucketed_table_colocated_join(spark):
         pruned = eng.sql(
             f"SELECT COUNT(*) AS n FROM {t_p} WHERE event_type = 'click'"
         )
-        pplan = pruned._jdf.queryExecution().explainString(mode)
+        pplan = eng.explain(pruned)
         assert "PartitionFilters" in pplan
         eng.drop_table(t_p)
     finally:
@@ -105,19 +102,20 @@ def test_explain_surface(spark):
 
 def test_stream_staging_does_not_leak_per_engine(spark):
     """Repeated engine construction + stream_events must reuse ONE
-    staged events dir per sf_dir (memoized, atexit-cleaned), not leak a
-    tempdir per instance (round-2/3 advice)."""
+    staged events dir per sf_dir (``session.staged``, removed at exit),
+    not leave a new one per instance (round-2/3 advice)."""
     import glob
-    import tempfile
 
-    from sqlengine_spark.operators.tier_j_streaming import stage_events
+    from sqlengine_spark.session import SCRATCH
 
-    before = set(glob.glob(f"{tempfile.gettempdir()}/sqlengine_events_stage_*"))
-    paths = set()
+    def stages():
+        return set(glob.glob(f"{SCRATCH}/events_stage*"))
+
+    before = stages()
+    counts = []
     for _ in range(3):
-        eng = SQLEngine(sf_dir=SF_DIR_SMALL, spark=spark)
-        eng.stream_events()  # staging runs at build time
-        paths.add(stage_events(spark, SF_DIR_SMALL))
-    after = set(glob.glob(f"{tempfile.gettempdir()}/sqlengine_events_stage_*"))
-    assert len(paths) == 1, f"staging not memoized: {paths}"
-    assert len(after - before) <= 1, f"leaked staging dirs: {after - before}"
+        SQLEngine(sf_dir=SF_DIR_SMALL, spark=spark).stream_events()
+        counts.append(len(stages()))  # staging runs at build time
+    new = stages() - before
+    assert len(new) <= 1 and counts[0] == counts[-1], f"leaked: {counts} {new}"
+    assert stages(), "stream_events staged nothing under SCRATCH"

@@ -121,3 +121,31 @@ def test_no_persist_or_cache_call():
         and node.func.attr in ("persist", "cache")
     ]
     assert not bad, bad
+
+
+def test_only_finite_stream_drives_streams():
+    """CLAUDE.md pin 11b: every finite stream, in the package and in the
+    tests, runs through ``tier_j_streaming.FiniteStream``, so nothing
+    outside that class touches ``writeStream`` or drains a query with
+    ``processAllAvailable()`` or ``awaitTermination()``."""
+    harness = "sqlengine_spark/operators/tier_j_streaming.py"
+    banned = ("writeStream", "processAllAvailable", "awaitTermination")
+    bad = []
+
+    def visit(node, rel):
+        for child in ast.iter_child_nodes(node):
+            if (
+                rel == harness
+                and isinstance(child, ast.ClassDef)
+                and child.name == "FiniteStream"
+            ):
+                continue
+            if isinstance(child, ast.Attribute) and child.attr in banned:
+                bad.append(f"{rel}:{child.lineno} {child.attr}")
+            visit(child, rel)
+
+    tests = Path(__file__).resolve().parent
+    for root in (PKG, tests):
+        for path in sorted(root.rglob("*.py")):
+            visit(ast.parse(path.read_text()), str(path.relative_to(root.parent)))
+    assert not bad, bad

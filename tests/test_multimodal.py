@@ -43,13 +43,8 @@ def test_feature_extract_covers_all_rows_deterministically(spark, media):
     )
 
 
-def test_strict_decode_marks_codec_boundary(media):
-    with pytest.raises(Exception, match="NotImplementedError|codecs unavailable"):
-        extract_features(media, decode="strict").collect()
-
-
 def test_frame_sampling(spark, media):
-    frames = sample_frames(media, frame_size=100, every_n=2)
+    frames = sample_frames(media, frame_size=100)
     got = frames.filter(F.col("media_id") == 0).orderBy("frame_no").collect()
     src = media.filter(F.col("media_id") == 0).collect()[0]
     n_frames = -(-len(src["payload"]) // 100)  # ceil

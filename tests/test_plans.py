@@ -5,6 +5,7 @@ partial aggregation. These guard the 100 TB story, not correctness.
 
 import functools
 
+from sqlengine_spark.engine import SQLEngine
 from sqlengine_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
@@ -13,9 +14,7 @@ from tests.conftest import SF_DIR
 def _plan(spark, qid):
     """Formatted plan of queries()[qid], built once per session and
     shared by the targeted tests and the repo-wide ``plan_sweep``."""
-    df = all_queries()[qid](spark, SF_DIR)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    return SQLEngine(SF_DIR, spark).explain(qid)
 
 
 def test_filter_pushed_to_parquet(spark):
@@ -216,7 +215,7 @@ CARTESIAN_WHITELIST = {
     "l_sim_join_lsh",        # 64-row hyperplane table broadcast; the
                              # candidate join itself is (band,sig)-keyed
     "m_ts_gapfill",          # calendar-bounded |hours| x |types| grid
-    "c_join_salted",         # deliberate |dim| x n_salts replication
+    "c_join_salted",         # deliberate |dim| x N_SALTS replication
                              # (the fact join itself is (key,salt)-keyed
                              # shuffled-hash — asserted below)
     "l_hybrid_search",       # 1-row query vector broadcast

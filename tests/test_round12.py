@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+from sqlengine_spark.engine import SQLEngine
 from sqlengine_spark.registry import all_queries
 from tests.conftest import SF_DIR_SMALL
 
@@ -402,14 +403,8 @@ def test_bloom_probe_scan_pushes_in_filter(spark):
     """The probe scan over the rewritten copy must push the IN filter
     into the parquet reader (bloom filters only help when the
     predicate reaches the scan)."""
-    from sqlengine_spark.registry import all_queries
-
     df = all_queries()["a_sink_parquet_bloom"](spark, SF_DIR_SMALL)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = SQLEngine(spark=spark).explain(df)
     assert "PushedFilters" in plan and "In(o_custkey" in plan
 
 

@@ -10,14 +10,14 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from sqlengine_spark.engine import SQLEngine
 from sqlengine_spark.session import SCRATCH, table
 from sqlengine_spark.skew import salted_agg
 from tests.conftest import SF_DIR_SMALL
 
 
 def _plan(df, spark):
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    return SQLEngine(spark=spark).explain(df)
 
 
 def test_bucketed_join_has_no_shuffle(spark):
