@@ -28,7 +28,7 @@ tests/test_ann.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import vdot
@@ -163,6 +163,63 @@ def lsh_sim_join(
     )
 
 
+def lit_vec(xs: list[float]) -> Column:
+    """A driver-side vector as an array column of double literals."""
+    return F.array(*[F.lit(x) for x in xs])
+
+
+def ivf_centroids(vectors: DataFrame) -> list[tuple[int, list[float]]]:
+    """The IVF coarse centroids as ``(cid, vector)``: the 16 rows with
+    the smallest ``md5(vec_id)``, numbered 0-15 in that order — one
+    TakeOrdered pass, no k-means iterations, fully reproducible; md5
+    rather than xxhash64 so a DuckDB oracle replays the IDENTICAL
+    centroid set (the l_dedup_simhash graduation convention). Bounded
+    driver state: 16 vectors."""
+    rows = (
+        vectors.select(
+            "vec_id", "embedding", F.md5(F.col("vec_id").cast("string")).alias("h")
+        )
+        .orderBy("h", "vec_id")
+        .limit(16)
+        .collect()
+    )
+    return [(ci, [float(x) for x in r["embedding"]]) for ci, r in enumerate(rows)]
+
+
+def nearest_centroid(
+    vec: Column, centroids: list[tuple[int, list[float]]]
+) -> Column:
+    """The cid of the centroid with the largest dot product with
+    ``vec``: a JVM-side argmax, array_max over struct<d, cid> with the
+    centroids as literals, so ties go to the larger cid. Assignment is
+    a map-only pass with NO shuffle; on a real deployment it is
+    computed once at ingest and stored as a partition column."""
+    return F.array_max(
+        F.array(
+            *[
+                F.struct(vdot(vec, lit_vec(cvec)).alias("d"), F.lit(ci).alias("cid"))
+                for ci, cvec in centroids
+            ]
+        )
+    )["cid"]
+
+
+def probe_cids(
+    centroids: list[tuple[int, list[float]]], qvec: list[float], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` cids nearest to ``qvec``, nearest first — driver
+    side, with ``nearest_centroid``'s tie rule. Python's left-fold float
+    sum is the same IEEE sequence as ``vdot`` and the oracles' ordered
+    SUM, so probe sets are engine-identical."""
+    return [
+        ci
+        for _, ci in sorted(
+            ((sum(a * b for a, b in zip(cvec, qvec)), ci) for ci, cvec in centroids),
+            reverse=True,
+        )[:n_probe]
+    ]
+
+
 def ivf_topk(vectors: DataFrame, query_id: int, n_probe: int) -> DataFrame:
     """IVF (inverted-file) approximate top-10: assign every vector to its
     nearest of 16 coarse centroids, then answer the query by scanning
@@ -171,63 +228,25 @@ def ivf_topk(vectors: DataFrame, query_id: int, n_probe: int) -> DataFrame:
     brute-force top-10 (asserted in tests/test_ann.py). Both sizes are
     fixed: l_sim_search_ivf's oracle hard-codes them.
 
-    Centroids are a deterministic sample of the data itself (the 16
-    rows with smallest ``md5(id)`` — one TakeOrdered pass, no k-means
-    iterations, fully reproducible; md5 rather than xxhash64 so the
-    DuckDB oracle replays the IDENTICAL centroid set — the
-    l_dedup_simhash graduation convention).
-
-    Scale shape: the centroid set is tiny and broadcast as literals into
-    a JVM-side argmax — assignment is a map-only pass with NO shuffle;
-    the probe filter cuts the scan to ~n_probe/16 of the table
-    before the TakeOrdered top-k. On a real deployment the assignment is
-    computed once at ingest and stored as a partition column, making the
-    probe a partition-pruned scan.
+    Centroids are ``ivf_centroids``, assignment ``nearest_centroid``
+    and the probe set ``probe_cids``. Scale shape: the probe filter
+    cuts the scan to ~n_probe/16 of the table before the TakeOrdered
+    top-k; with the assignment stored as a partition column, the probe
+    is a partition-pruned scan.
     """
     from sqlengine_spark.functions import dround
 
-    k, n_centroids = 10, 16
+    k = 10
+    centroids = ivf_centroids(vectors)
     v = vectors.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
-    cent_rows = (
-        v.select("vid", "vec", F.md5(F.col("vid").cast("string")).alias("h"))
-        .orderBy("h", "vid")
-        .limit(n_centroids)
-        .collect()
-    )
-    centroids = [(ci, [float(x) for x in r["vec"]]) for ci, r in enumerate(cent_rows)]
     qrow = v.filter(F.col("vid") == query_id).first()
     if qrow is None:
         raise ValueError(f"ivf_topk: query id {query_id} not found")
     qvec = [float(x) for x in qrow["vec"]]
-
-    def lit_vec(xs):
-        return F.array(*[F.lit(x) for x in xs])
-
-    # JVM-side argmax over the broadcast centroid set: array_max on
-    # struct<dot, cid> compares dot first (ties -> larger cid, fixed).
-    best_cid = F.array_max(
-        F.array(
-            *[
-                F.struct(
-                    vdot(F.col("vec"), lit_vec(cvec)).alias("d"),
-                    F.lit(ci).alias("cid"),
-                )
-                for ci, cvec in centroids
-            ]
-        )
-    )["cid"]
-    # probe set: n_probe centroids nearest to the query (driver-side —
-    # n_centroids scalars, same tie rule as the JVM argmax)
-    probe = [
-        ci
-        for _, ci in sorted(
-            ((sum(a * b for a, b in zip(cvec, qvec)), ci) for ci, cvec in centroids),
-            reverse=True,
-        )[:n_probe]
-    ]
+    best_cid = nearest_centroid(F.col("vec"), centroids)
     return (
         v.withColumn("cid", best_cid)
-        .filter(F.col("cid").isin(probe))
+        .filter(F.col("cid").isin(probe_cids(centroids, qvec, n_probe)))
         .filter(F.col("vid") != query_id)
         .select(
             F.col("vid").alias("vec_id"),

@@ -52,3 +52,26 @@ def vdot(a: Column, b: Column) -> Column:
     """
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def ols_moments() -> list[Column]:
+    """Aggregates: the simple-regression moments of integer columns
+    ``x`` and ``y`` — ``n``, ``sx`` = Σx, ``sy`` = Σy, ``sxy`` = Σxy
+    and ``sxx`` = Σx², exact integers, so their sums are immune to
+    summation order in both engines (build-notes rule 11e)."""
+    return [
+        F.count("*").alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    ]
+
+
+def ols_slope(m) -> float:
+    """The least-squares slope b = (n·sxy − sx·sy) / (n·sxx − sx²) from
+    a collected ``ols_moments`` row, in one fixed float operation order
+    (the products with a ``float()`` operand round; the rest is exact
+    integer arithmetic) that the oracles replay."""
+    n, sx, sy, sxy, sxx = m["n"], m["sx"], m["sy"], m["sxy"], m["sxx"]
+    return (n * sxy - sx * float(sy)) / (n * sxx - sx * float(sx))

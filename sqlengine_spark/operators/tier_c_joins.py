@@ -241,20 +241,19 @@ def c_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _asof_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared union-merge core of the as-of family: tag events (side=1)
-    and orders (side=0), union on (user_id, time), carry the latest
-    order date forward as ``last_od`` with a running max over
-    (partition by user_id, order by time, side). The invariants both
-    consumers rely on live here ONCE: order rows sort before event rows
-    at equal timestamps (side ordering makes ``ts >= o_orderdate``
-    inclusive, matching DuckDB ASOF), and the NULL columns are
-    explicitly typed so unionByName never coerces.
+def _asof_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The input of the as-of family: orders (side=0) and events
+    (side=1) in one frame on (user_id, t), with ``ord_date`` set on
+    order rows only and ``event_id`` on event rows only. Ordering a
+    window by (t, side) puts order rows before event rows at equal
+    timestamps, which makes ``ts >= o_orderdate`` inclusive, matching
+    DuckDB ASOF. The NULL columns are explicitly typed so unionByName
+    never coerces.
 
-    Scale: ONE shuffle on user_id and no row multiplication — the
-    equi-join + row_number()=1 idiom this replaces materializes
-    |events-per-user| x |orders-per-user| rows, which explodes on
-    power-law users (round-1 perf-weak finding).
+    Scale: a window over it partitioned by user_id is ONE shuffle with
+    no row multiplication — the equi-join + row_number()=1 idiom it
+    replaces materializes |events-per-user| x |orders-per-user| rows,
+    which explodes on power-law users (round-1 perf-weak finding).
     """
     ev = table(spark, sf_dir, "events").select(
         "user_id",
@@ -270,12 +269,21 @@ def _asof_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("ord_date"),
         F.lit(0).alias("side"),
     )
+    return o.unionByName(ev)
+
+
+def _asof_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_asof_union`` with the latest order date so far carried
+    forward as ``last_od``: a running max over (partition by user_id,
+    order by t, side)."""
     w = (
         W.partitionBy("user_id")
         .orderBy("t", "side")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    return o.unionByName(ev).withColumn("last_od", F.max("ord_date").over(w))
+    return _asof_union(spark, sf_dir).withColumn(
+        "last_od", F.max("ord_date").over(w)
+    )
 
 
 @query(
@@ -289,7 +297,7 @@ def _asof_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def c_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (no native batch ASOF in Spark SQL) via the shared
-    union-merge core (_asof_union_merge — scale notes there): inner
+    union-merge core (_asof_union_merge; scale notes on _asof_union): inner
     semantics, so events before their user's first order drop out."""
     return (
         _asof_union_merge(spark, sf_dir)
@@ -1094,23 +1102,8 @@ def c_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines — no epoch truncation, Spark unix_timestamp would drop
     the fractional second the fixture carries).
 
-    Scale: identical to c_join_asof — ONE shuffle on user_id, zero row
-    multiplication (the bidirectional range-join spelling would fan
-    out |events/user| x |orders/user| twice over)."""
-    ev = table(spark, sf_dir, "events").select(
-        "user_id",
-        F.col("ts").alias("t"),
-        "event_id",
-        F.lit(None).cast("timestamp").alias("ord_date"),
-        F.lit(1).alias("side"),
-    )
-    o = table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderdate").alias("ord_date"),
-        F.lit(0).alias("side"),
-    )
+    Scale: ``_asof_union``'s (the bidirectional range-join spelling
+    would fan out |events/user| x |orders/user| twice over)."""
     wb = (
         W.partitionBy("user_id")
         .orderBy("t", "side")
@@ -1122,7 +1115,7 @@ def c_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(W.currentRow, W.unboundedFollowing)
     )
     m = (
-        o.unionByName(ev)
+        _asof_union(spark, sf_dir)
         .withColumn("back", F.max("ord_date").over(wb))
         .withColumn("fwd", F.min("ord_date").over(wf))
     )

@@ -358,6 +358,24 @@ def j_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id").dropDuplicates(["event_id"])
 
 
+def hourly_type_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming form of j_tumbling_1h: the staged events read one
+    file per micro-batch, counted and value-summed per (1-hour tumbling
+    window, event_type), as (h, event_type, cnt, sum_value).
+
+    Scale: state = one (window, event_type) counter pair per group in
+    the state store; in production a watermark (as in
+    j_watermark_late_drop) bounds it to the lateness horizon. The
+    shuffle is keyed (window, event_type) exactly like the batch plan.
+    """
+    return (
+        events_stream(spark, sf_dir, per_trigger=1)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
+        .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
+    )
+
+
 @query(
     "j_tumbling_1h_stream",
     oracle="""
@@ -373,19 +391,10 @@ def j_tumbling_1h_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged events (one file per micro-batch), complete-mode memory sink,
     final table returned. The driver's hash-match against the identical
     batch SQL oracle verifies the streaming engine's final state, not a
-    batch stand-in.
-
-    Scale: state = one (window, event_type) counter pair per group in
-    the state store; in production a watermark (as in
-    j_watermark_late_drop) bounds it to the lateness horizon. The
-    shuffle is keyed (window, event_type) exactly like the batch plan.
+    batch stand-in. The stream and its scale notes are
+    ``hourly_type_stream``.
     """
-    stream = (
-        events_stream(spark, sf_dir, per_trigger=1)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
-    )
+    stream = hourly_type_stream(spark, sf_dir)
     with FiniteStream(spark) as fs:
         return fs.run(stream, "complete")
 
@@ -840,15 +849,10 @@ def j_tumbling_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding a cluster 24/7. Final state hash-matches the same batch
     oracle as both siblings.
 
-    Scale: identical state/shuffle shape to j_tumbling_1h_stream; the
+    Scale: the state/shuffle shape of ``hourly_type_stream``; the
     trigger only changes scheduling — each scheduled run resumes from
     the checkpoint and processes the delta since the last run."""
-    stream = (
-        events_stream(spark, sf_dir, per_trigger=1)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
-    )
+    stream = hourly_type_stream(spark, sf_dir)
     with FiniteStream(spark) as fs:
         return fs.run(stream, "complete", available_now=True)
 

@@ -15,7 +15,7 @@ Design rules for 100 TB, applied throughout:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -1413,16 +1413,13 @@ def l_sim_search_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid sample and assignment are computed ONCE and amortized
     across the batch; per-query work is only its 8 probed buckets.
 
-    Determinism: same md5-sampled 16 centroids as l_sim_search_ivf
-    (DuckDB replays the sample), argmax/probe ties break toward the
-    larger centroid id, every dot product is the sequential fold
-    (vdot <-> ordered SUM over generate_series, rule 4), and the
-    driver-side probe selection uses Python's left-fold float sum —
-    the same IEEE sequence — so probe sets are engine-identical.
+    Determinism: the centroids, the assignment and the probe sets are
+    l_sim_search_ivf's (``ann.ivf_centroids``, ``ann.nearest_centroid``
+    and ``ann.probe_cids``; DuckDB replays the sample and the tie
+    rule), and every dot product is the sequential fold (vdot <->
+    ordered SUM over generate_series, rule 4).
 
-    Scale: assignment is a map-only JVM argmax over 16 broadcast
-    literal centroids (no shuffle; at ingest it becomes a stored
-    partition column); the 80-row (q_id, cid) probe table and the
+    Scale: the 80-row (q_id, cid) probe table and the
     10-row query-vector table broadcast into the candidate join, so
     the scan touches only probed buckets once per covering query; the
     per-query top-10 is a rank window under the WindowGroupLimit
@@ -1430,45 +1427,19 @@ def l_sim_search_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     10k queries this is the batch-ANN join you would actually run —
     |batch| never multiplies the scan, only the probed fraction.
     """
-    from sqlengine_spark.functions import vdot
+    from sqlengine_spark.ann import ivf_centroids, nearest_centroid, probe_cids
 
     e = table(spark, sf_dir, "embeddings")
     v = e.select("vec_id", "embedding")
-    cent_rows = (
-        v.select("vec_id", "embedding", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(16)
-        .collect()
-    )  # bounded: 16 centroid rows (the ivf_topk sanction)
-    centroids = [
-        (ci, [float(x) for x in r["embedding"]])
-        for ci, r in enumerate(cent_rows)
-    ]
+    centroids = ivf_centroids(v)
     qrows = v.filter(F.col("vec_id") < 10).collect()  # bounded: 10 queries
-    probes = []
-    for qr in qrows:
-        qvec = [float(x) for x in qr["embedding"]]
-        top = sorted(
-            ((sum(a * b for a, b in zip(cvec, qvec)), ci) for ci, cvec in centroids),
-            reverse=True,
-        )[:8]
-        probes += [(int(qr["vec_id"]), ci) for _, ci in top]
+    probes = [
+        (int(qr["vec_id"]), ci)
+        for qr in qrows
+        for ci in probe_cids(centroids, [float(x) for x in qr["embedding"]], 8)
+    ]
     pdf = spark.createDataFrame(probes, "q_id bigint, cid int")
-
-    def lit_vec(xs):
-        return F.array(*[F.lit(x) for x in xs])
-
-    best_cid = F.array_max(
-        F.array(
-            *[
-                F.struct(
-                    vdot(F.col("embedding"), lit_vec(cvec)).alias("d"),
-                    F.lit(ci).alias("cid"),
-                )
-                for ci, cvec in centroids
-            ]
-        )
-    )["cid"]
+    best_cid = nearest_centroid(F.col("embedding"), centroids)
     qb = v.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
@@ -1785,6 +1756,35 @@ def l_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def hybrid_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document but the query's own (doc 0), joined to its
+    embedding and to the query vector ``qe`` (the embedding of vec_id
+    0) — the candidate rows the dense and keyword retrievers score.
+
+    Scale: the query vector broadcasts (1 row); documents⋈embeddings
+    co-shuffles on the id ONCE (or is bucket-colocated in a real
+    deployment — the embedding table would be written CLUSTERED BY
+    id). The IVF/LSH pre-filter from l_sim_search_ivf composes in
+    front of the dense side unchanged."""
+    d = table(spark, sf_dir, "documents")
+    e = table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
+    return (
+        d.filter(F.col("doc_id") != 0)
+        .join(e, d.doc_id == e.vec_id)
+        .crossJoin(F.broadcast(q))
+    )
+
+
+def keyword_share() -> Column:
+    """The keyword retriever's score: the share of ``text``'s
+    space-split words that are query terms ('table' or 'join'), a
+    double. A codegen higher-order filter — no explode, no UDF."""
+    words = F.split(F.col("text"), " ")
+    kw = F.size(F.filter(words, lambda w: w.isin("table", "join")))
+    return kw / F.size(words).cast("double")
+
+
 @query(
     "l_hybrid_search",
     oracle="""
@@ -1816,29 +1816,15 @@ def l_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     blend is a fixed-order double expression so both engines produce
     identical scores.
 
-    Scale: the query vector broadcasts (1 row); documents⋈embeddings
-    co-shuffles on the id ONCE (or is bucket-colocated in a real
-    deployment — the embedding table would be written CLUSTERED BY id);
-    keyword scoring is a codegen higher-order filter, no explode, no
-    UDF; top-20 is TakeOrdered. The IVF/LSH pre-filter from
-    l_sim_search_ivf composes in front of the dense side unchanged.
+    Scale: the candidates are ``hybrid_candidates`` and the keyword
+    signal ``keyword_share`` (scale notes there); top-20 is
+    TakeOrdered.
     """
-    d = table(spark, sf_dir, "documents")
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    words = F.split(F.col("text"), " ")
-    kw = F.size(F.filter(words, lambda w: w.isin("table", "join")))
+    kw = keyword_share()
     cos = vdot(F.col("embedding"), F.col("qe"))
     return (
-        d.filter(F.col("doc_id") != 0)
-        .join(e, d.doc_id == e.vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "doc_id",
-            dround(
-                cos * 0.5 + (kw / F.size(words).cast("double")) * 0.5, 6
-            ).alias("score"),
-        )
+        hybrid_candidates(spark, sf_dir)
+        .select("doc_id", dround(cos * 0.5 + kw * 0.5, 6).alias("score"))
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(20)
     )
@@ -2543,20 +2529,11 @@ def l_rag_rerank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     here — production fuses top-k lists, never corpora), so the
     rank-assignment window runs on <= RRF_DEPTH rows per retriever
     (whitelisted bounded global window) and the fusion join touches
-    <= 2·depth rows. The candidate generation itself is the scale
-    path already pinned by the sim-search tier (broadcast query +
-    TakeOrdered; IVF/LSH composes in front unchanged)."""
-    d = table(spark, sf_dir, "documents")
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    words = F.split(F.col("text"), " ")
-    kw = F.size(F.filter(words, lambda w: w.isin("table", "join"))) * F.lit(
-        1.0
-    ) / F.size(words)
+    <= 2·depth rows. The candidates are ``hybrid_candidates`` and the
+    sparse score ``keyword_share``."""
+    kw = keyword_share()
     j = (
-        d.filter(F.col("doc_id") != 0)
-        .join(e, d.doc_id == e.vec_id)
-        .crossJoin(F.broadcast(q))
+        hybrid_candidates(spark, sf_dir)
         .select(
             "doc_id",
             vdot(F.col("embedding"), F.col("qe")).alias("cos"),
@@ -2680,6 +2657,46 @@ def l_embed_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("label")
 
 
+def sampled_query_scores(
+    spark: SparkSession, sf_dir: str, keep: Column
+) -> DataFrame:
+    """The 20 embeddings with the smallest ``md5(vec_id)`` (the
+    l_sim_search_ivf sampling convention) as queries ``(q_id, qe, ql)``,
+    each scored against every embedding row that ``keep`` admits:
+    ``(q_id, ql, vec_id, label, sq)`` with ``sq`` the dot product
+    quantized to the 1e6 half-up grid as BIGINT, so ranking compares
+    identical integers in both engines.
+
+    Scale: the 20-query table broadcasts (LIMIT-bounded) and the scores
+    are one map-side pass over q×corpus — at 100 TB, 20 broadcast
+    dot-product scans fused into one."""
+    e = table(spark, sf_dir, "embeddings")
+    q = (
+        e.select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("qe"),
+            F.col("label").alias("ql"),
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
+        )
+        .orderBy("h", "q_id")
+        .limit(20)
+        .drop("h")
+    )
+    return (
+        e.crossJoin(F.broadcast(q))
+        .filter(keep)
+        .select(
+            "q_id",
+            "ql",
+            "vec_id",
+            "label",
+            F.floor(vdot(F.col("embedding"), F.col("qe")) * 1e6 + 0.5)
+            .cast("bigint")
+            .alias("sq"),
+        )
+    )
+
+
 @query(
     "l_mine_bitext_margin",
     oracle="""
@@ -2728,44 +2745,17 @@ def l_mine_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant; production systems intersect both directions — one more
     run of the same shape with roles swapped).
 
-    Determinism: sims quantize to the 1e6 half-up grid BEFORE ranking
-    (the l_eval_mrr pin); the top-4 order is total ((sq DESC, vec_id));
-    the margin is one integer-ratio division (4·best / Σtop4, NULLIF
-    degenerate guard), dround 1e-6.
+    Determinism: sims are ``sampled_query_scores``' integer grid; the
+    top-4 order is total ((sq DESC, vec_id)); the margin is one
+    integer-ratio division (4·best / Σtop4, NULLIF degenerate guard),
+    dround 1e-6.
 
-    Scale: the 20-query table broadcasts (LIMIT-bounded); sims are one
-    map-side pass over q×corpus; the per-query top-4 is a rank window
-    whose constant filter triggers InferWindowGroupLimit —
+    Scale: sims are ``sampled_query_scores``; the per-query top-4 is a
+    rank window whose constant filter triggers InferWindowGroupLimit —
     per-partition top-4 heaps per q_id before the shuffle, so the
-    exchange carries ~20×4×partitions rows, never q×corpus. At 100 TB:
-    20 broadcast dot-product scans fused into one, one thin shuffle."""
-    from sqlengine_spark.functions import vdot
-
-    e = table(spark, sf_dir, "embeddings")
-    q = (
-        e.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qe"),
-            F.col("label").alias("ql"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "q_id")
-        .limit(20)
-        .drop("h")
-    )
-    s = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("label") != F.col("ql"))
-        .select(
-            "q_id",
-            "ql",
-            "vec_id",
-            "label",
-            F.floor(vdot(F.col("embedding"), F.col("qe")) * 1e6 + 0.5)
-            .cast("bigint")
-            .alias("sq"),
-        )
-    )
+    exchange carries ~20×4×partitions rows, never q×corpus: one thin
+    shuffle."""
+    s = sampled_query_scores(spark, sf_dir, F.col("label") != F.col("ql"))
     w = W.partitionBy("q_id").orderBy(F.col("sq").desc(), "vec_id")
     top = s.select(
         "q_id", "ql", "vec_id", "label", "sq",

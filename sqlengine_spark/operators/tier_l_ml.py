@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sqlengine_spark.functions import dround, vdot
+from sqlengine_spark.functions import dround, ols_moments, vdot
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import load_tables, scatter, table
 
@@ -803,12 +803,13 @@ def l_ml_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_chars ~ token count) fit CLOSED-FORM on the other 4 folds via
     the normal equations, then scored on the held-out fold (MSE).
 
-    Determinism: the train-side moment sums are exact BIGINT (train =
-    global minus fold — one pass, no 5x re-scan); slope/intercept are
-    single double divisions of exact integers, bit-identical in both
-    engines; per-row squared residuals are FLOOR-quantized to 1e-6
-    fixed-point BIGINT before summing (order-immune, the l_dsir_weight
-    pattern), so the MSE is an exact-integer ratio.
+    Determinism: the train-side moment sums are exact ``ols_moments``
+    (train = global minus fold — one pass, no 5x re-scan);
+    slope/intercept are single double divisions of exact integers,
+    bit-identical in both engines; per-row squared residuals are
+    FLOOR-quantized to 1e-6 fixed-point BIGINT before summing
+    (order-immune, the l_dsir_weight pattern), so the MSE is an
+    exact-integer ratio.
 
     Scale: ONE rollup aggregation over the checkpointed (fold, x, y)
     frame yields all five per-fold moment sets AND the grand total in
@@ -834,17 +835,7 @@ def l_ml_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect-1 pattern; r9 verdict item 8 — the old pf-groupBy +
     # separate pf.agg collect spent an extra job re-reading the
     # checkpoint for 1 row). Bounded: k+1 = 6 rows.
-    rows = (
-        f.rollup("fold")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        )
-        .collect()
-    )
+    rows = f.rollup("fold").agg(*ols_moments()).collect()
     g = next((r for r in rows if r["fold"] is None), None)
     folds = sorted(r["fold"] for r in rows if r["fold"] is not None)
     if g is None or not folds:

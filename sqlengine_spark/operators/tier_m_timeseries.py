@@ -14,7 +14,7 @@ with applyInPandasWithState for the incremental form.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -1218,6 +1218,30 @@ def m_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def daily_cents(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """Events rolled up to one row per (``keys``, day): ``x`` is the
+    epoch day of ``ts`` and ``yc`` that day's value total in integer
+    cents. Each value is cast-truncated to cents (identical in both
+    engines, rule 6) and summed as BIGINT, so the total is exact and
+    immune to summation order (rule 11e).
+
+    Scale: one map-side-partial groupBy over all events, the only
+    corpus-sized work of the day-series operators; its output is
+    bounded by the calendar times the key domain."""
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy(*keys, F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("x"))
+        .agg(F.sum((F.col("value") * 100).cast("bigint")).alias("yc"))
+    )
+
+
+def day_series() -> Column:
+    """Aggregate: a group's ``daily_cents`` rows as one day-ordered
+    array ``s`` of (x, yc) structs, the input of the recurrence folds.
+    The array is calendar-bounded, never corpus-sized."""
+    return F.sort_array(F.collect_list(F.struct("x", "yc"))).alias("s")
+
+
 @query(
     "m_ts_theilsen",
     oracle="""
@@ -1255,34 +1279,26 @@ def m_ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is why telemetry/usage-trend pipelines prefer it for per-entity
     drift scoring.
 
-    Determinism (CLAUDE.md rule 11e): the daily total is a FLOAT sum, so
-    it is quantized per-event to integer cents (cast-truncate, identical
-    in both engines per rule 6) and summed as BIGINT — order-immune —
-    before any slope arithmetic; every slope is then the same exact
-    double in both engines, so the medians (both engines interpolate
-    even counts identically) and residuals agree bit-for-bit before the
-    1e-6 rounding. Slopes straddle zero, hence the oracle's `+ 0`
-    (rule 5b).
+    Determinism: the daily totals are ``daily_cents`` (exact integer
+    cents) before any slope arithmetic; every slope is then the same
+    exact double in both engines, so the medians (both engines
+    interpolate even counts identically) and residuals agree
+    bit-for-bit before the 1e-6 rounding. Slopes straddle zero, hence
+    the oracle's `+ 0` (rule 5b).
 
-    Scale: the daily rollup is one (user, day) shuffle with map-side
-    partials; the pair stage is a per-user self-join whose fan-out is
-    bounded by the CALENDAR (<= C(|days|, 2) pairs per user — 435 for a
-    30-day window — independent of event volume), shuffle-keyed on
-    user_id; medians are per-user exact aggregates over those bounded
+    Scale: the daily rollup is ``daily_cents`` keyed by user; the pair
+    stage is a per-user self-join whose fan-out is bounded by the
+    CALENDAR (<= C(|days|, 2) pairs per user — 435 for a 30-day window
+    — independent of event volume), shuffle-keyed on user_id; medians
+    are per-user exact aggregates over those bounded
     sets. 1000 executors partition users; no stage scales with raw event
     count beyond the first rollup. DuckDB SUM(BIGINT) is HUGEINT, hence
     the oracle's outer BIGINT cast (rule 10).
     """
-    ev = table(spark, sf_dir, "events")
     # the daily rollup feeds FOUR consumers (both pair sides, n_days,
     # residuals) — localCheckpoint (never persist, CLAUDE.md rule 11a)
     # so the events scan + (user, day) agg run once per invocation
-    daily = ev.groupBy(
-        "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("x"),
-    ).agg(
-        F.sum(F.expr("CAST(value * 100 AS BIGINT)")).alias("yc")
-    ).localCheckpoint()
+    daily = daily_cents(spark, sf_dir, "user_id").localCheckpoint()
     a = daily.toDF("user_id", "x1", "y1")
     b = daily.toDF("user_id", "x2", "y2")
     slopes = (
@@ -1489,9 +1505,9 @@ def m_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_ts_ewma, emitting the smoothed series plus the one-step-ahead
     forecast l_t + b_t per day.
 
-    Determinism: the daily total is exact integer cents (cast-truncate
-    per rule 6); the recurrence is inherently sequential, so both
-    engines replay the IDENTICAL iteration with level and trend
+    Determinism: the daily totals are ``daily_cents``; the recurrence
+    is inherently sequential, so both engines replay the IDENTICAL
+    iteration with level and trend
     re-quantized to 4 dp half-away EACH step (round(v*1e4)/1e4 —
     cent-scale magnitudes keep v*1e4 far below 2^53, so the quantizer
     is a true fixed-point clamp, not a no-op; the l_embedding_pca /
@@ -1503,19 +1519,11 @@ def m_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-first shape: the recurrence runs INSIDE Catalyst as an
     aggregate() higher-order function over the sort_array'd day series
     — zero Python, zero driver loops; DuckDB replays it as a recursive
-    CTE. The day series is BOUNDED (calendar days, ~30 on the fixture,
-    never corpus-sized), so the single-row array state is a constant;
-    the heavy work — the (day)-keyed cents rollup over all events —
-    is a distributed map-side-partial groupBy that scales to 100 TB
-    unchanged.
+    CTE. The ``day_series`` array is one row (~30 days on the
+    fixture), so the fold state is a constant; the corpus-scale work is
+    the ``daily_cents`` rollup.
     """
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("x")
-    ).agg(F.sum((F.col("value") * 100).cast("bigint")).alias("yc"))
-    srow = daily.agg(
-        F.sort_array(F.collect_list(F.struct("x", "yc"))).alias("s")
-    ).filter(F.size("s") >= 2)
+    srow = daily_cents(spark, sf_dir).agg(day_series()).filter(F.size("s") >= 2)
     prev = "element_at(acc, -1)"
     lvl_expr = (
         f"ROUND((2e-1 * CAST(e.yc AS DOUBLE)"
@@ -1616,7 +1624,7 @@ def m_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smoothed series from day 8 plus the one-step forecast
     l_t + b_t + s_(t-6).
 
-    Determinism: daily totals are exact integer cents (rule 6);
+    Determinism: daily totals are ``daily_cents``;
     level/trend/season are re-quantized to 4 dp half-away EACH step,
     so both engines replay the identical sequential recurrence (the
     m_ts_holt sanction); all outputs carry +0 against rule-5b -0.0
@@ -1627,20 +1635,12 @@ def m_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine, hash-compared.
 
     Spark-first shape: the recurrence runs INSIDE Catalyst as one
-    aggregate() higher-order fold over the sort_array'd day series —
-    zero Python, zero driver loops; the day series is calendar-bounded
-    (never corpus-sized) while the heavy (day)-keyed cents rollup is a
-    map-side-partial groupBy that scales to 100 TB unchanged
-    (m_ts_holt measured 0.26x of the single-process engine at x100 on
-    the same shape).
+    aggregate() higher-order fold over the ``day_series`` of the
+    ``daily_cents`` rollup — zero Python, zero driver loops (m_ts_holt
+    measured 0.26x of the single-process engine at x100 on the same
+    shape).
     """
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("x")
-    ).agg(F.sum((F.col("value") * 100).cast("bigint")).alias("yc"))
-    srow = daily.agg(
-        F.sort_array(F.collect_list(F.struct("x", "yc"))).alias("s")
-    ).filter(F.size("s") >= 14)
+    srow = daily_cents(spark, sf_dir).agg(day_series()).filter(F.size("s") >= 14)
     rec = "aggregate(slice(s, 8, size(s) - 7), transform(slice(s, 1, 7), u -> named_struct('init', true, 'x', u.x, 'yc', u.yc, 'lvl', CAST(aggregate(slice(s, 1, 7), CAST(0 AS BIGINT), (a, u) -> a + u.yc) AS DOUBLE) / CAST(7 AS DOUBLE), 'tr', ((CAST(aggregate(slice(s, 8, 7), CAST(0 AS BIGINT), (a, u) -> a + u.yc) AS DOUBLE) / CAST(7 AS DOUBLE)) - (CAST(aggregate(slice(s, 1, 7), CAST(0 AS BIGINT), (a, u) -> a + u.yc) AS DOUBLE) / CAST(7 AS DOUBLE))) / CAST(7 AS DOUBLE), 's', CAST(u.yc AS DOUBLE) - (CAST(aggregate(slice(s, 1, 7), CAST(0 AS BIGINT), (a, u) -> a + u.yc) AS DOUBLE) / CAST(7 AS DOUBLE)), 'fc', CAST(NULL AS DOUBLE))), (acc, e) -> concat(acc, array(named_struct('init', false, 'x', e.x, 'yc', e.yc, 'lvl', ROUND((2e-1 * (CAST(e.yc AS DOUBLE) - element_at(acc, -7).s) + 8e-1 * (element_at(acc, -1).lvl + element_at(acc, -1).tr)) * 1e4) / 1e4, 'tr', ROUND((1e-1 * ((ROUND((2e-1 * (CAST(e.yc AS DOUBLE) - element_at(acc, -7).s) + 8e-1 * (element_at(acc, -1).lvl + element_at(acc, -1).tr)) * 1e4) / 1e4) - element_at(acc, -1).lvl) + 9e-1 * element_at(acc, -1).tr) * 1e4) / 1e4, 's', ROUND((3e-1 * (CAST(e.yc AS DOUBLE) - (ROUND((2e-1 * (CAST(e.yc AS DOUBLE) - element_at(acc, -7).s) + 8e-1 * (element_at(acc, -1).lvl + element_at(acc, -1).tr)) * 1e4) / 1e4)) + 7e-1 * element_at(acc, -7).s) * 1e4) / 1e4, 'fc', ROUND(((ROUND((2e-1 * (CAST(e.yc AS DOUBLE) - element_at(acc, -7).s) + 8e-1 * (element_at(acc, -1).lvl + element_at(acc, -1).tr)) * 1e4) / 1e4) + (ROUND((1e-1 * ((ROUND((2e-1 * (CAST(e.yc AS DOUBLE) - element_at(acc, -7).s) + 8e-1 * (element_at(acc, -1).lvl + element_at(acc, -1).tr)) * 1e4) / 1e4) - element_at(acc, -1).lvl) + 9e-1 * element_at(acc, -1).tr) * 1e4) / 1e4) + element_at(acc, -6).s) * 1e4) / 1e4))))"
     return (
         srow.select(F.explode(F.expr(rec)).alias("e"))
@@ -1908,30 +1908,21 @@ def m_ts_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
     settles to the steady-state ratio — the optimal online denoiser a
     metrics pipeline runs over noisy daily series.
 
-    Determinism: daily totals are exact integer cents (rule 6
-    cast-truncate); the recurrence replays IDENTICALLY in both engines
-    with the gain quantized to the 1e-6 grid and level/variance to the
+    Determinism: daily totals are ``daily_cents``; the recurrence
+    replays IDENTICALLY in both engines with the gain quantized to the
+    1e-6 grid and level/variance to the
     1e-4 grid each step (the m_ts_holt bounded-iteration sanction);
     every float output adds +0 (rule 5b). Literals in e-notation
     (rule 12d).
 
     Spark-first shape: the recurrence runs INSIDE Catalyst as an
-    aggregate() higher-order fold over each type's sort_array'd day
-    series — zero Python, zero driver loops; DuckDB replays it as a
-    per-key recursive CTE. Series are BOUNDED (calendar days per event
-    type), so the per-group array state is a constant; the heavy work —
-    the (type, day)-keyed cents rollup over all events — is a
-    distributed map-side-partial groupBy that scales to 100 TB
-    unchanged. One event type = one fold task; the type domain is
-    bounded (|event_types| ~ 10), matching the m_ts_holt sanction."""
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("x"),
-    ).agg(F.sum((F.col("value") * 100).cast("bigint")).alias("yc"))
-    srow = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("x", "yc"))).alias("s")
-    )
+    aggregate() higher-order fold over each type's ``day_series`` of
+    the ``daily_cents`` rollup — zero Python, zero driver loops; DuckDB
+    replays it as a per-key recursive CTE. One event type = one fold
+    task; the type domain is bounded (|event_types| ~ 10), matching the
+    m_ts_holt sanction."""
+    daily = daily_cents(spark, sf_dir, "event_type")
+    srow = daily.groupBy("event_type").agg(day_series())
     prev = "element_at(acc, -1)"
     k_expr = (
         f"ROUND(({prev}.pv + 25e0) / ({prev}.pv + 25e0 + 1e4) * 1e6) / 1e6"
@@ -2014,7 +2005,7 @@ def m_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuning. The monitoring primitive a metrics pipeline runs where
     m_ts_changepoint does retrospective segmentation.
 
-    Determinism: daily totals are exact cents; mu is one int-ratio
+    Determinism: daily totals are ``daily_cents``; mu is one int-ratio
     division, sd one correctly-rounded sqrt over exact integer moments
     quantized to the 1e-4 grid; the recurrence replays identically in
     both engines with each chart re-quantized per step (the m_ts_holt
@@ -2022,18 +2013,13 @@ def m_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds +0 (rule 5b).
 
     Spark-first shape: reference moments ride the SAME per-type
-    groupBy that builds the day series (no second scan); the
-    recurrence is a zero-Python aggregate() fold over the bounded
-    calendar-day array; DuckDB replays it as a per-key recursive CTE.
-    The corpus-scale work — the (type, day) cents rollup — is a
-    distributed partial-agg groupBy, unchanged at 100 TB."""
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("x"),
-    ).agg(F.sum((F.col("value") * 100).cast("bigint")).alias("yc"))
+    groupBy that builds the ``day_series`` (no second scan); the
+    recurrence is a zero-Python aggregate() fold over it; DuckDB
+    replays it as a per-key recursive CTE. The corpus-scale work is
+    the ``daily_cents`` rollup."""
+    daily = daily_cents(spark, sf_dir, "event_type")
     srow = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("x", "yc"))).alias("s"),
+        day_series(),
         (
             F.sum("yc").cast("double")
             / F.count(F.lit(1)).cast("double")

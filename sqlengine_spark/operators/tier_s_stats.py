@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -1526,6 +1526,37 @@ def m_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def quality_signals() -> list[Column]:
+    """The three per-document signals of the composite quality vote,
+    from ``text``: ``len`` (chars), ``punct`` (chars outside
+    ``[a-z0-9 ]`` after lowercasing) and ``toks`` (space-split tokens),
+    each BIGINT."""
+    return [
+        F.length("text").cast("bigint").alias("len"),
+        F.length(F.regexp_replace(F.lower(F.col("text")), "[a-z0-9 ]", ""))
+        .cast("bigint")
+        .alias("punct"),
+        F.size(F.split("text", " ")).cast("bigint").alias("toks"),
+    ]
+
+
+def quality_votes() -> Column:
+    """The vote count (0-3) over ``quality_signals``: minimum length
+    (≥ 100 chars), punctuation density (≤ 5%) and mean token length
+    (3-12 chars); a document passes the gate with ≥ 2 votes. Ratio
+    thresholds are cross-multiplications (punct/len ≤ 0.05 becomes
+    punct·20 ≤ len), so no float ever feeds a comparison."""
+    return (
+        F.when(F.col("len") >= 100, 1).otherwise(0)
+        + F.when(F.col("punct") * 20 <= F.col("len"), 1).otherwise(0)
+        + F.when(
+            (F.col("toks") * 3 <= F.col("len"))
+            & (F.col("len") <= F.col("toks") * 12),
+            1,
+        ).otherwise(0)
+    )
+
+
 @query(
     "l_quality_composite_gate",
     oracle="""
@@ -1563,35 +1594,18 @@ def l_quality_composite_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reported as per-source keep rates, the mixture-shift audit run
     before and after every gate change.
 
-    Determinism: every signal and threshold is pure integer arithmetic
-    (ratio thresholds stated as cross-multiplications — punct/len ≤
-    0.05 becomes punct·20 ≤ len — so no float ever feeds a
-    comparison); one double division at output.
+    Determinism: the signals and the vote are ``quality_signals`` and
+    ``quality_votes`` (integer arithmetic, notes there); one double
+    division at output.
 
     Scale: single scan, codegen projections, source-keyed partial agg.
     The vote pattern extends to any signal set; expensive signals
     (entropy, novelty, model scores) join in as precomputed columns.
     """
     d = table(spark, sf_dir, "documents")
-    sig = d.select(
-        "source",
-        F.length("text").cast("bigint").alias("len"),
-        F.length(F.regexp_replace(F.lower(F.col("text")), "[a-z0-9 ]", ""))
-        .cast("bigint")
-        .alias("punct"),
-        F.size(F.split("text", " ")).cast("bigint").alias("toks"),
-    )
-    votes = (
-        F.when(F.col("len") >= 100, 1).otherwise(0)
-        + F.when(F.col("punct") * 20 <= F.col("len"), 1).otherwise(0)
-        + F.when(
-            (F.col("toks") * 3 <= F.col("len"))
-            & (F.col("len") <= F.col("toks") * 12),
-            1,
-        ).otherwise(0)
-    )
+    sig = d.select("source", *quality_signals())
     return (
-        sig.select("source", votes.alias("votes"))
+        sig.select("source", quality_votes().alias("votes"))
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),

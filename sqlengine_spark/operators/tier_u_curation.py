@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sqlengine_spark.functions import dround
+from sqlengine_spark.operators.tier_s_stats import quality_signals, quality_votes
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import scatter, table
 
@@ -1761,8 +1762,8 @@ def l_mixture_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     as its datasheet — each stage is the audited twin of its
     standalone operator.
 
-    Determinism: gate signals and thresholds are pure integer
-    arithmetic (cross-multiplied ratios); dedup keep set is a
+    Determinism: the gate is tier_s_stats' ``quality_signals`` and
+    ``quality_votes`` (integer arithmetic); dedup keep set is a
     rank-over-exact-BIGINT order; temperature weights quantize to
     1e15 fixed-point BEFORE normalizing (rule 11e) so targets are
     CEIL of identical double expressions over exact integers; the
@@ -1798,21 +1799,9 @@ def l_mixture_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_chars",
         F.md5("text").alias("h"),
-        F.length("text").cast("bigint").alias("len"),
-        F.length(F.regexp_replace(F.lower(F.col("text")), "[a-z0-9 ]", ""))
-        .cast("bigint")
-        .alias("punct"),
-        F.size(F.split("text", " ")).cast("bigint").alias("toks"),
+        *quality_signals(),
     )
-    votes = (
-        F.when(F.col("len") >= 100, 1).otherwise(0)
-        + F.when(F.col("punct") * 20 <= F.col("len"), 1).otherwise(0)
-        + F.when(
-            (F.col("toks") * 3 <= F.col("len"))
-            & (F.col("len") <= F.col("toks") * 12),
-            1,
-        ).otherwise(0)
-    )
+    votes = quality_votes()
     # r14 funnel restaging (guide §2.4; before-plan: 42 Exchanges, 17
     # parquet scans — every funnel column re-executed the scan+gate+
     # dedup chain). Three changes, output bit-identical (asserted

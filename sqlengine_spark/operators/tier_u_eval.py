@@ -27,10 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sqlengine_spark.functions import dround, round12
+from sqlengine_spark.functions import dround, ols_moments, ols_slope, round12
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import scatter, scratch, table
 from sqlengine_spark.operators.tier_j_streaming import FiniteStream
+from sqlengine_spark.operators.tier_l_llm import sampled_query_scores
 
 _BT_ITERS = 5
 
@@ -249,10 +250,10 @@ def l_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval half-width q (the finite-sample 90%-coverage guarantee),
     and emit [pred−q, pred+q] with a coverage flag per test doc.
 
-    Determinism: slope/intercept come from EXACT integer sums
-    (n, Σx, Σy, Σxy, Σx²) cast to double in the identical expression;
-    q is an exact order statistic under a (residual, doc_id) total
-    order (rule 5) — no quantile interpolation, so no float divergence.
+    Determinism: slope/intercept come from the exact ``ols_moments``
+    through ``ols_slope``; q is an exact order statistic under a
+    (residual, doc_id) total order (rule 5) — no quantile
+    interpolation, so no float divergence.
     The three scalars (a, b, q) are bounded driver-side state.
 
     Scale: one pass for the training sums (partial+final agg), one
@@ -267,20 +268,10 @@ def l_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").alias("y"),
         (F.col("doc_id") % 4).alias("fold"),
     )
-    tr = (
-        f.filter(F.col("fold").isin(0, 1))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        )
-        .collect()[0]  # bounded: 5 exact-integer scalars
-    )
-    n, sx, sy, sxy, sxx = tr["n"], tr["sx"], tr["sy"], tr["sxy"], tr["sxx"]
-    b = (n * sxy - sx * float(sy)) / (n * sxx - sx * float(sx))
-    a = (sy - b * sx) / float(n)
+    # bounded: 5 exact-integer scalars
+    tr = f.filter(F.col("fold").isin(0, 1)).agg(*ols_moments()).collect()[0]
+    b = ols_slope(tr)
+    a = (tr["sy"] - b * tr["sx"]) / float(tr["n"])
     cal = f.filter(F.col("fold") == 2).select(
         "doc_id", F.abs(F.col("y") - (F.lit(a) + F.lit(b) * F.col("x"))).alias("r")
     )
@@ -435,12 +426,12 @@ def m_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism (rule 11e end to end): event values are half-up
     quantized to cents at the ROW level, so per-user pre/post totals
-    are exact BIGINTs; θ and x̄ derive from five exact integer
-    aggregates cast to double in the identical expression; per-user
-    adjusted values are re-quantized to integer cents BEFORE the
-    per-variant sums, making every cross-row sum order-immune in both
-    engines; means and variances are then identical double expressions
-    over exact integers.
+    are exact BIGINTs; θ is ``ols_slope`` over ``ols_moments`` and x̄
+    one division of two of them; per-user adjusted values are
+    re-quantized to integer cents BEFORE the per-variant sums, making
+    every cross-row sum order-immune in both engines; means and
+    variances are then identical double expressions over exact
+    integers.
 
     Scale: one user-keyed partial+final agg builds the covariate table
     (conditional sums, single events scan); θ is one bounded reduce;
@@ -455,16 +446,8 @@ def m_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("ts") < cutoff, vfp).otherwise(F.lit(0))).alias("x"),
         F.sum(F.when(F.col("ts") >= cutoff, vfp).otherwise(F.lit(0))).alias("y"),
     ).withColumn("variant", F.col("user_id") % 2).localCheckpoint()
-    s = u.agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    ).collect()[0]  # bounded: 5 exact-integer scalars
-    theta = (s["n"] * s["sxy"] - s["sx"] * float(s["sy"])) / (
-        s["n"] * s["sxx"] - s["sx"] * float(s["sx"])
-    )
+    s = u.agg(*ols_moments()).collect()[0]  # bounded: 5 exact-integer scalars
+    theta = ols_slope(s)
     xbar = s["sx"] / float(s["n"])
     ya = F.floor(
         F.col("y") - F.lit(theta) * (F.col("x") - F.lit(xbar)) + 0.5
@@ -1748,47 +1731,21 @@ def l_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query rows are what an eval harness actually stores). Label =
     relevance is the standard proxy-eval when no click data exists.
 
-    Determinism: similarities quantize to the 1e6 half-up grid BEFORE
-    ranking; the rank is NOT a window sort — it is 1 + |{candidates
+    Determinism: similarities are ``sampled_query_scores``' integer
+    grid; the rank is NOT a window sort — it is 1 + |{candidates
     strictly better than the best relevant candidate}| under the
     total order (sim, -vec_id), computed as one conditional aggregate
     against a per-query max (both engines compare identical
     (BIGINT, BIGINT) struct keys). Integer ranks, one division per
     query, 1e-9 quantized.
 
-    Scale: the 20-query table broadcasts; sims are one map-side pass
-    over q×corpus; best-relevant and the rank count are two q_id-keyed
-    partial aggs — NO per-query window sort of the corpus (the
-    TakeOrdered/agg shape, not the rank-window shape). At 100 TB this
-    is 20 broadcast dot-product scans fused into one."""
-    e = table(spark, sf_dir, "embeddings")
-    from sqlengine_spark.functions import vdot
-
-    q = (
-        e.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qe"),
-            F.col("label").alias("ql"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "q_id")
-        .limit(20)
-        .drop("h")
-    )
-    s = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "ql",
-            "vec_id",
-            "label",
-            F.floor(vdot(F.col("embedding"), F.col("qe")) * 1e6 + 0.5)
-            .cast("bigint")
-            .alias("sq"),
-        )
-        .localCheckpoint()  # rule 11a: feeds best-relevant AND the count
-    )
+    Scale: sims are ``sampled_query_scores``; best-relevant and the
+    rank count are two q_id-keyed partial aggs — NO per-query window
+    sort of the corpus (the TakeOrdered/agg shape, not the rank-window
+    shape)."""
+    s = sampled_query_scores(
+        spark, sf_dir, F.col("vec_id") != F.col("q_id")
+    ).localCheckpoint()  # rule 11a: feeds best-relevant AND the count
     key = F.struct(F.col("sq").alias("sq"), (-F.col("vec_id")).alias("vid"))
     best = (
         s.filter(F.col("label") == F.col("ql"))

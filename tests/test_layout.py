@@ -10,6 +10,10 @@ may reach into private names.
 from __future__ import annotations
 
 import ast
+import hashlib
+import io
+import itertools
+import tokenize
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "sqlengine_spark"
@@ -149,3 +153,158 @@ def test_only_finite_stream_drives_streams():
         for path in sorted(root.rglob("*.py")):
             visit(ast.parse(path.read_text()), str(path.relative_to(root.parent)))
     assert not bad, bad
+
+
+#: Tokens in one window of the duplicated-block scan, and the number of
+#: shared windows at which two functions count as holding one block twice.
+WINDOW_TOKENS = 40
+MAX_SHARED_WINDOWS = 50
+
+_FUNCTIONS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+_LAYOUT_TOKENS = {
+    tokenize.COMMENT,
+    tokenize.NL,
+    tokenize.NEWLINE,
+    tokenize.INDENT,
+    tokenize.DEDENT,
+    tokenize.ENCODING,
+    tokenize.ENDMARKER,
+}
+
+
+def _functions(tree: ast.AST) -> list[tuple[int, int, str]]:
+    """Every function in ``tree`` as ``(first line, last line,
+    Class.function name)``."""
+    found = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.ClassDef, *_FUNCTIONS)):
+                name = scope + [child.name]
+                if isinstance(child, _FUNCTIONS):
+                    found.append((child.lineno, child.end_lineno, ".".join(name)))
+                visit(child, name)
+            else:
+                visit(child, scope)
+
+    visit(tree, [])
+    return found
+
+
+def function_windows(path: Path) -> dict[str, set[bytes]]:
+    """The hashed ``WINDOW_TOKENS``-token windows of each function in
+    ``path``, keyed by the function's name. Comments, layout tokens
+    and strings over 60 characters (docstrings, oracle SQL) are
+    dropped first, and each window belongs to the innermost function
+    that holds all of it."""
+    src = path.read_text()
+    funcs = _functions(ast.parse(src))
+    toks = [
+        t
+        for t in tokenize.generate_tokens(io.StringIO(src).readline)
+        if t.type not in _LAYOUT_TOKENS
+        and not (t.type == tokenize.STRING and len(t.string) > 60)
+    ]
+    windows: dict[str, set[bytes]] = {}
+    for i in range(len(toks) - WINDOW_TOKENS + 1):
+        first, last = toks[i].start[0], toks[i + WINDOW_TOKENS - 1].end[0]
+        owners = [f for f in funcs if f[0] <= first and last <= f[1]]
+        if owners:
+            text = "\0".join(t.string for t in toks[i : i + WINDOW_TOKENS])
+            name = max(owners)[2]
+            windows.setdefault(name, set()).add(hashlib.sha1(text.encode()).digest())
+    return windows
+
+
+def duplicated_blocks(pkg: Path = PKG) -> dict[tuple[str, str], int]:
+    """Every pair of different functions under ``pkg`` that shares at
+    least ``MAX_SHARED_WINDOWS`` token windows, with the count, as
+    ``{(file::function, file::function): shared}``."""
+    owners: dict[bytes, set[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg.parent)
+        for name, hashes in function_windows(path).items():
+            for h in hashes:
+                owners.setdefault(h, set()).add(f"{rel}::{name}")
+    shared: dict[tuple[str, str], int] = {}
+    for names in owners.values():
+        for pair in itertools.combinations(sorted(names), 2):
+            shared[pair] = shared.get(pair, 0) + 1
+    return {p: n for p, n in shared.items() if n >= MAX_SHARED_WINDOWS}
+
+
+def test_no_duplicated_operator_blocks():
+    """A building block is written once and called: no two functions in
+    the package share ``MAX_SHARED_WINDOWS`` or more
+    ``WINDOW_TOKENS``-token windows of code. When this fails, move the
+    shared code into a helper that takes only what its callers pass
+    differently."""
+    found = duplicated_blocks()
+    assert not found, "\n".join(f"{n} {a} {b}" for (a, b), n in found.items())
+
+
+def arrow_udfs_without_annotations(pkg: Path = PKG) -> list[str]:
+    """Build-notes pin 10: ``arrow_udf`` dispatches on real annotations,
+    and ``from __future__ import annotations`` turns them into strings.
+    In such a module, every function passed to ``arrow_udf(...)`` needs
+    a ``<fn>.__annotations__ = ...`` assignment in the same scope. A
+    function decorated with ``@arrow_udf`` is always reported there:
+    the decorator reads its annotations before any assignment runs."""
+    found = []
+
+    def is_arrow_udf(node) -> bool:
+        if isinstance(node, ast.Call):
+            node = node.func
+        return (isinstance(node, ast.Name) and node.id == "arrow_udf") or (
+            isinstance(node, ast.Attribute) and node.attr == "arrow_udf"
+        )
+
+    def scope_nodes(scope):
+        """The nodes of ``scope`` outside its nested functions."""
+        for child in ast.iter_child_nodes(scope):
+            yield child
+            if not isinstance(child, (*_FUNCTIONS, ast.Lambda)):
+                yield from scope_nodes(child)
+
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        if not any(
+            isinstance(n, ast.ImportFrom)
+            and n.module == "__future__"
+            and any(a.name == "annotations" for a in n.names)
+            for n in tree.body
+        ):
+            continue
+        rel = path.relative_to(pkg.parent)
+        scopes = [tree] + [n for n in ast.walk(tree) if isinstance(n, _FUNCTIONS)]
+        for scope in scopes:
+            nodes = list(scope_nodes(scope))
+            annotated = {
+                t.value.id
+                for n in nodes
+                if isinstance(n, ast.Assign)
+                for t in n.targets
+                if isinstance(t, ast.Attribute)
+                and t.attr == "__annotations__"
+                and isinstance(t.value, ast.Name)
+            }
+            for n in nodes:
+                if isinstance(n, _FUNCTIONS) and any(
+                    is_arrow_udf(d) for d in n.decorator_list
+                ):
+                    found.append(f"{rel}:{n.lineno} @arrow_udf {n.name}")
+                elif (
+                    isinstance(n, ast.Call)
+                    and is_arrow_udf(n.func)
+                    and n.args
+                    and isinstance(n.args[0], ast.Name)
+                    and n.args[0].id not in annotated
+                ):
+                    found.append(f"{rel}:{n.lineno} arrow_udf({n.args[0].id})")
+    return found
+
+
+def test_arrow_udf_functions_carry_real_annotations():
+    found = arrow_udfs_without_annotations()
+    assert not found, found

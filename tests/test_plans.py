@@ -5,16 +5,26 @@ partial aggregation. These guard the 100 TB story, not correctness.
 
 import functools
 
+from pyspark.sql.types import ArrayType, DataType, DateType, MapType, StructType
+
 from sqlengine_spark.engine import SQLEngine
 from sqlengine_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
 
 @functools.cache
+def _built(spark, qid) -> tuple[str, StructType]:
+    """Formatted plan and output schema of queries()[qid], built once
+    per session and shared by the targeted tests and the repo-wide
+    sweeps. The frame itself is not kept: a cached frame would pin its
+    localCheckpoint blocks in the session."""
+    eng = SQLEngine(SF_DIR, spark)
+    df = eng.run(qid)
+    return eng.explain(df), df.schema
+
+
 def _plan(spark, qid):
-    """Formatted plan of queries()[qid], built once per session and
-    shared by the targeted tests and the repo-wide ``plan_sweep``."""
-    return SQLEngine(SF_DIR, spark).explain(qid)
+    return _built(spark, qid)[0]
 
 
 def test_filter_pushed_to_parquet(spark):
@@ -444,6 +454,46 @@ def plan_sweep(spark):
         for qid in sorted(all_queries())
         if qid not in LINT_SKIP
     }
+
+
+def _types(dt: DataType, path: str):
+    """``(path, type)`` for ``dt`` and every type nested in it."""
+    yield path, dt
+    if isinstance(dt, StructType):
+        for f in dt.fields:
+            yield from _types(f.dataType, f"{path}.{f.name}")
+    elif isinstance(dt, ArrayType):
+        yield from _types(dt.elementType, f"{path}[]")
+    elif isinstance(dt, MapType):
+        yield from _types(dt.keyType, f"{path}{{key}}")
+        yield from _types(dt.valueType, f"{path}{{value}}")
+
+
+def _columns_of_type(spark, qids, kinds) -> list[str]:
+    """Every output column path of ``qids`` whose type, at any depth,
+    is one of ``kinds``, as ``qid:path type``."""
+    return [
+        f"{qid}:{path} {dt.simpleString()}"
+        for qid in qids
+        for f in _built(spark, qid)[1].fields
+        for path, dt in _types(f.dataType, f.name)
+        if isinstance(dt, kinds)
+    ]
+
+
+def test_no_nested_output_column_anywhere(spark, plan_sweep):
+    """Build-notes rule 2: pandas canonicalizers cannot hash list or map
+    cells, so no query (rows-only included) outputs an ArrayType or
+    MapType at any depth."""
+    bad = _columns_of_type(spark, plan_sweep, (ArrayType, MapType))
+    assert not bad, bad
+
+
+def test_no_date_output_column_anywhere(spark, plan_sweep):
+    """Build-notes rule 3: DuckDB and Spark derive DATE values with
+    different pandas dtypes, so dates leave as strings."""
+    bad = _columns_of_type(spark, plan_sweep, DateType)
+    assert not bad, bad
 
 
 def test_no_unexpected_cartesian_anywhere(plan_sweep):

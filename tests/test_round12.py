@@ -369,33 +369,27 @@ def test_source_overlap_matches_python_recompute(spark):
         assert abs(r["jaccard"] - shared / (na + nb - shared)) < 2e-6
 
 
-def test_parquet_bloom_pages_written(spark):
+def test_parquet_bloom_pages_written(spark, tmp_path):
     """a_sink_parquet_bloom depends on the all-column writer option
     actually producing bloom pages (the per-column '#col' form
     silently no-ops in this build). Pin the behavior: the bloom write
     must be materially larger than a plain write of the same data."""
-    import glob
-    import os
-
     from sqlengine_spark.session import table
 
     o = table(spark, SF_DIR_SMALL, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    o.write.mode("overwrite").parquet("/tmp/sqlengine_bloom_off")
+    o.write.parquet(str(tmp_path / "off"))
     (
-        o.write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled", "true")
+        o.write.option("parquet.bloom.filter.enabled", "true")
         .option("parquet.bloom.filter.expected.ndv", "20000")
-        .parquet("/tmp/sqlengine_bloom_on")
+        .parquet(str(tmp_path / "on"))
     )
 
     def sz(d):
-        return sum(
-            os.path.getsize(f) for f in glob.glob(f"{d}/*.parquet")
-        )
+        return sum(f.stat().st_size for f in (tmp_path / d).glob("*.parquet"))
 
-    off, on = sz("/tmp/sqlengine_bloom_off"), sz("/tmp/sqlengine_bloom_on")
+    off, on = sz("off"), sz("on")
     assert on > off * 1.5, (off, on)
 
 
