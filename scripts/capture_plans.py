@@ -7,11 +7,16 @@ Usage: python scripts/capture_plans.py OUT_DIR [qid ...]
   qids:    default = every registered query, in driver order.
 
 Plans are built with the engine session (``get_spark()``) against
-$SPARK_GRAFT_SF_DIR (default sf0.1). Four things vary between runs of
+$SPARK_GRAFT_SF_DIR (default sf0.1). Seven things vary between runs of
 the same code and are masked: expression ids (``#123``), ``plan_id=``
-numbers, the random suffix of ``tempfile.mkdtemp`` directories, and
-uuid4 hex file names (a Python data source's writer names its files
-that way).
+numbers, the random suffix of ``tempfile.mkdtemp`` directories, uuid4
+hex file names (a Python data source's writer names its files that
+way), the number PySpark appends to each lambda variable
+(``lambda x_10``) and the id of an existing RDD (``MapPartitionsRDD[291]``
+under a localCheckpoint) -- both count what the process built before, so
+they depend on the plans built earlier -- and the 10-hex-digit suffix
+``session.staged`` gives a staged directory (it hashes the application
+id).
 To show that a refactor keeps every plan, capture at both commits into
 two directories and ``diff -r`` them.
 
@@ -29,9 +34,13 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sqlengine_spark.registry import all_queries
-from sqlengine_spark.session import DEFAULT_SF_DIR, get_spark
+from sqlengine_spark.session import DEFAULT_SF_DIR, SCRATCH, get_spark
 
 _MASKS = (
+    # a staged directory, and a catalog table named after one
+    (re.compile(re.escape(SCRATCH) + r"/(\w+?)_[0-9a-f]{10}(?![0-9a-z])"),
+     SCRATCH + r"/\1_<staged>"),
+    (re.compile(r"(?<=\.)(\w+?)_[0-9a-f]{10}_"), r"\1_<staged>_"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     # mkdtemp names end in 8 random characters from [a-z0-9_].
@@ -39,6 +48,8 @@ _MASKS = (
      tempfile.gettempdir() + r"/\1XXXXXXXX"),
     (re.compile(r"(?<![0-9a-f])[0-9a-f]{12}4[0-9a-f]{3}[89ab][0-9a-f]{15}(?![0-9a-f])"),
      "<uuid4>"),
+    (re.compile(r"(lambda \w+?)_\d+(?=#)"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
 )
 
 

@@ -1,15 +1,17 @@
 #!/usr/bin/env python
 """Bounded-cluster dedup fixture (r10 verdict item 6).
 
-The four dedup/similarity keys skipped by the sf0.1 sweep
+Four dedup/similarity keys are skipped by the sf0.1 sweep
 (l_simjoin_jaccard, l_simjoin_containment, l_dedup_near_minhash,
-l_dedup_cluster) are skipped because the SYNTHETIC sf0.1 corpus is
+l_dedup_cluster) because the SYNTHETIC sf0.1 corpus is
 vocab-degenerate (~31 distinct tokens): every posting list spans the
 whole corpus, so the inverted-index join AND the answer itself go
 quadratic. That is a fixture artifact, not an operator property — so
 this script builds a corpus where near-dup structure is bounded BY
-CONSTRUCTION and hash-verifies the four keys on it at 100x the driver
-correctness scale (50,000 docs vs sf0.01's 500).
+CONSTRUCTION and hash-verifies those four keys on it at 100x the driver
+correctness scale (50,000 docs vs sf0.01's 500), plus l_simjoin_ngram:
+every similarity op runs here (build-notes pin 14f), since a
+degenerate-vocab fixture hides broadcast bugs.
 
 Corpus: N_CLUSTERS clusters x 5 members. Every cluster has its own
 41-token vocabulary — token k of cluster c is 't'+md5('t{c}_{k}')[:16]
@@ -40,13 +42,17 @@ algebra; the verified row counts were always right):
   containment(a->b) = (41-max(j_a,j_b)) / 41 >= 37/41 = 0.902
     -> all 20 ordered pairs pass the 0.9 gate.
 
-Answers are therefore exactly linear: 10 / 20 / 5 rows per cluster for
-jaccard / containment / cluster, zero cross-cluster pairs. Non-doc
-tables symlink from sf0.1 so scripts/driver_sim.py can run unchanged
-with SPARK_GRAFT_SIM_SF pointing here (it registers all ten tables).
+  word-3-gram Jaccard(j1<j2) = (39-j2) / (39+j2) >= 35/43 = 0.814
+    -> all 10 unordered pairs pass l_simjoin_ngram's 0.5 gate.
+
+Answers are therefore exactly linear: 10 / 20 / 5 / 10 rows per cluster
+for jaccard / containment / cluster / ngram, zero cross-cluster pairs.
+Non-doc tables symlink from sf0.1 so scripts/driver_sim.py can run
+unchanged with SPARK_GRAFT_SIM_SF pointing here (it registers all ten
+tables).
 
 Usage:
-    python scripts/dedup_fixture.py          # build + verify the 4 keys
+    python scripts/dedup_fixture.py          # build + verify the 5 keys
     python scripts/dedup_fixture.py --build-only
 """
 
@@ -70,6 +76,7 @@ KEYS = [
     "l_simjoin_containment",
     "l_dedup_cluster",
     "l_dedup_near_minhash",  # rows-only: ran-clean check
+    "l_simjoin_ngram",
 ]
 
 
@@ -138,7 +145,7 @@ def main() -> int:
     if "--build-only" in sys.argv:
         return 0
     env = dict(os.environ, SPARK_GRAFT_SIM_SF=DIR)
-    # One sim subprocess PER KEY (r12): at 50k docs the four keys in a
+    # One sim subprocess PER KEY (r12): at 50k docs the keys in a
     # single plain-1g session accumulate driver-side broadcast blocks
     # across queries and the LAST key's (legitimately bounded) runtime
     # broadcast can hit "not enough memory to build and broadcast" —

@@ -17,8 +17,12 @@ from pyspark.sql import functions as F
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import scratch, staged, table
 
+#: A lossless round-trip's oracle is its source table.
+_REGION_ORACLE = "SELECT * FROM region"
+_NATION_ORACLE = "SELECT * FROM nation"
 
-@query("a_scan_parquet", oracle="SELECT * FROM region")
+
+@query("a_scan_parquet", oracle=_REGION_ORACLE)
 def a_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scan, all columns/rows."""
     return table(spark, sf_dir, "region")
@@ -44,7 +48,7 @@ def a_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("a_scan_csv_roundtrip", oracle="SELECT * FROM nation")
+@query("a_scan_csv_roundtrip", oracle=_NATION_ORACLE)
 def a_scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write nation to CSV with header, read back with explicit schema.
     The round-trip must be lossless, so the oracle is simply the source
@@ -55,7 +59,7 @@ def a_scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(nation.schema).option("header", True).csv(path)
 
 
-@query("a_scan_json_roundtrip", oracle="SELECT * FROM region")
+@query("a_scan_json_roundtrip", oracle=_REGION_ORACLE)
 def a_scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write region to JSON lines, read back — lossless, so the oracle
     is the source table."""
@@ -643,7 +647,7 @@ def a_scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("a_scan_xml_roundtrip", oracle="SELECT * FROM nation")
+@query("a_scan_xml_roundtrip", oracle=_NATION_ORACLE)
 def a_scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native XML source/sink (Spark 4.0 — spark-xml folded into the
     engine): write nation as one <nation> element per row, read back

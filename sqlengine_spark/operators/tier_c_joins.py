@@ -22,14 +22,15 @@ from sqlengine_spark.registry import query
 from sqlengine_spark.session import load_tables, scratch, staged, table
 from sqlengine_spark.skew import salted_join
 
-
-@query(
-    "c_join_inner",
-    oracle="""
+#: Orders with their customer: one answer, two join strategies
+#: (c_join_inner, c_join_broadcast).
+_ORDERS_CUSTOMER_ORACLE = """
     SELECT o_orderkey, o_totalprice, c_name, c_mktsegment
     FROM orders JOIN customer ON o_custkey = c_custkey
-    """,
-)
+    """
+
+
+@query("c_join_inner", oracle=_ORDERS_CUSTOMER_ORACLE)
 def c_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
@@ -38,13 +39,7 @@ def c_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_join_broadcast",
-    oracle="""
-    SELECT o_orderkey, o_totalprice, c_name, c_mktsegment
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    """,
-)
+@query("c_join_broadcast", oracle=_ORDERS_CUSTOMER_ORACLE)
 def c_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same semantics as c_join_inner with an explicit broadcast hint —
     values must be identical; the plan (BroadcastHashJoin, no shuffle on

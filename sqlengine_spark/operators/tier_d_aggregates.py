@@ -21,6 +21,13 @@ from sqlengine_spark.functions import dround
 from sqlengine_spark.registry import query
 from sqlengine_spark.session import load_tables, table
 
+#: Exact distinct users per event type: one answer, two exact
+#: strategies (d_agg_salted, d_agg_bitmap_distinct).
+_DISTINCT_USERS_ORACLE = """
+    SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct
+    FROM events GROUP BY event_type
+    """
+
 
 @query(
     "d_agg_q1_pricing",
@@ -448,13 +455,7 @@ def d_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "d_agg_salted",
-    oracle="""
-    SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct
-    FROM events GROUP BY event_type
-    """,
-)
+@query("d_agg_salted", oracle=_DISTINCT_USERS_ORACLE)
 def d_agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted two-stage count-distinct (skew.salted_agg) registered as
     an engine operator: 5 hot event_type keys would each pin their whole
@@ -935,13 +936,7 @@ def d_agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "d_agg_bitmap_distinct",
-    oracle="""
-    SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct
-    FROM events GROUP BY event_type
-    """,
-)
+@query("d_agg_bitmap_distinct", oracle=_DISTINCT_USERS_ORACLE)
 def d_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distinct counting via mergeable BITMAPS (Spark 3.5+'s
     ``bitmap_bucket_number`` / ``bitmap_bit_position`` /

@@ -249,62 +249,27 @@ def events_stream(
     return reader.parquet(_stage_events(spark, sf_dir))
 
 
-@query(
-    "j_tumbling_1h",
-    oracle="""
+# Each answer below has a batch operator and a streaming twin (or two
+# streaming modes); a finite stream drained to completion must equal
+# the batch answer, so every member of a family hash-checks against
+# the one oracle of its answer.
+
+_HOURLY_BY_TYPE_ORACLE = """
     SELECT date_trunc('hour', ts) AS h, event_type,
            COUNT(*) AS cnt,
            ROUND(SUM(value) * 100, 0) / 100 AS sum_value
     FROM events GROUP BY h, event_type
-    """,
-)
-def j_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windows per event type. Spark hour windows are
-    epoch-aligned, so window.start ≡ date_trunc('hour'). The identical
-    expression runs over readStream in the harness and must produce the
-    same final table (asserted in tests/test_streaming.py)."""
-    # One spark.sql statement (round 5): shaves Py4J plan-build latency
-    # (paired interleaved at sf0.1: 0.232 → 0.211 s median); the
-    # streaming harness keeps the structurally identical expression.
-    from sqlengine_spark.session import load_tables
+    """
 
-    load_tables(spark, sf_dir, ("events",))
-    return spark.sql(
-        """
-        SELECT w.start AS h, event_type, cnt, sum_value FROM (
-            SELECT window(ts, '1 hour') AS w, event_type,
-                   COUNT(*) AS cnt,
-                   ROUND(SUM(value) * 100) / 100 + 0.0 AS sum_value
-            FROM events GROUP BY window(ts, '1 hour'), event_type)
-        """
-    )
-
-
-@query(
-    "j_sliding_1h_15m",
-    oracle="""
+_SLIDING_1H_15M_ORACLE = """
     SELECT w_start, COUNT(*) AS cnt FROM (
         SELECT time_bucket(INTERVAL 15 MINUTES, ts)
                - k.k * INTERVAL 15 MINUTES AS w_start
         FROM events, (SELECT unnest(generate_series(0, 3)) AS k) k
     ) GROUP BY w_start
-    """,
-)
-def j_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows: 1 h length, 15 min slide — each event lands in 4
-    overlapping windows. The oracle reconstructs the same windows with
-    time_bucket + 4 offsets."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("w_start"), "cnt")
-    )
+    """
 
-
-@query(
-    "j_session_30m",
-    oracle="""
+_SESSIONS_30M_ORACLE = """
     WITH flagged AS (
         SELECT user_id, ts,
                CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -323,15 +288,64 @@ def j_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(ts) + INTERVAL 30 MINUTES AS s_end,
            COUNT(*) AS n_events
     FROM islands GROUP BY user_id, island
-    """,
+    """
+
+_DISTINCT_IDS_ORACLE = "SELECT DISTINCT event_id FROM events"
+
+_USER_COUNTS_ORACLE = (
+    "SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id"
 )
-def j_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows with a 30-minute inactivity gap.
-    Semantics pin (both engines): an event exactly 30 min after the
-    previous one starts a NEW session (Spark's session end is exclusive
-    last_ts + gap); session end = last event + gap. The oracle is the
-    classic gaps-and-islands rewrite."""
-    ev = table(spark, sf_dir, "events")
+
+_CUSTOMER_EVENTS_ORACLE = """
+    SELECT event_id, event_type, c_name, c_mktsegment
+    FROM events JOIN customer ON user_id = c_custkey
+    """
+
+
+def hourly_by_type(ev: DataFrame) -> DataFrame:
+    """Events counted and value-summed per (1-hour tumbling window,
+    event_type), as (h, event_type, cnt, sum_value). Spark hour windows
+    are epoch-aligned, so window.start ≡ date_trunc('hour').
+
+    Scale: the shuffle is keyed (window, event_type). Over a stream the
+    state is one (window, event_type) counter pair per group; in
+    production a watermark (as in j_watermark_late_drop) bounds it to
+    the lateness horizon."""
+    return (
+        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
+        .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
+    )
+
+
+def sliding_1h_15m(ev: DataFrame) -> DataFrame:
+    """Event counts per sliding window of 1 h length and 15 min slide,
+    as (w_start, cnt): each event lands in 4 overlapping windows. The
+    oracle reconstructs the same windows with time_bucket + 4 offsets.
+
+    Scale: over a stream the state is one counter per open window (4x
+    the tumbling count); watermarks bound retention exactly as in the
+    tumbling case."""
+    return (
+        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
+        .agg(F.count("*").alias("cnt"))
+        .select(F.col("w.start").alias("w_start"), "cnt")
+    )
+
+
+def sessions_30m(ev: DataFrame) -> DataFrame:
+    """Per-user session windows with a 30-minute inactivity gap, as
+    (user_id, s_start, s_end, n_events). Semantics pin (both engines):
+    an event exactly 30 min after the previous one starts a NEW session
+    (Spark's session end is exclusive last_ts + gap); session end =
+    last event + gap. The oracle is the classic gaps-and-islands
+    rewrite.
+
+    Scale: the shuffle is keyed on user_id. Over a stream the state is
+    one open-session record per (user, session), merged on arrival,
+    including sessions that span micro-batch boundaries; a watermark
+    (j_watermark_late_drop) would bound retention in an unbounded
+    deployment."""
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
@@ -344,10 +358,55 @@ def j_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "j_stream_dedup",
-    oracle="SELECT DISTINCT event_id FROM events",
-)
+def enrich_customer(spark: SparkSession, sf_dir: str, ev: DataFrame) -> DataFrame:
+    """Events joined to the customer dimension, as (event_id,
+    event_type, c_name, c_mktsegment).
+
+    Scale: the static customer side is broadcast, so the events side
+    never shuffles and a stream keeps no state: each micro-batch joins
+    the broadcast dimension (cached after the first) and emits at once.
+    Dimension updates between batches are picked up because the static
+    plan is re-bound each trigger."""
+    c = table(spark, sf_dir, "customer")
+    return ev.join(F.broadcast(c), F.col("user_id") == F.col("c_custkey")).select(
+        "event_id", "event_type", "c_name", "c_mktsegment"
+    )
+
+
+@query("j_tumbling_1h", oracle=_HOURLY_BY_TYPE_ORACLE)
+def j_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour windows per event type: ``hourly_by_type`` over
+    the events table, written as one spark.sql statement."""
+    # One spark.sql statement (round 5): shaves Py4J plan-build latency
+    # (paired interleaved at sf0.1: 0.232 → 0.211 s median); the
+    # streaming twins run the structurally identical hourly_by_type.
+    from sqlengine_spark.session import load_tables
+
+    load_tables(spark, sf_dir, ("events",))
+    return spark.sql(
+        """
+        SELECT w.start AS h, event_type, cnt, sum_value FROM (
+            SELECT window(ts, '1 hour') AS w, event_type,
+                   COUNT(*) AS cnt,
+                   ROUND(SUM(value) * 100) / 100 + 0.0 AS sum_value
+            FROM events GROUP BY window(ts, '1 hour'), event_type)
+        """
+    )
+
+
+@query("j_sliding_1h_15m", oracle=_SLIDING_1H_15M_ORACLE)
+def j_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``sliding_1h_15m`` over the events table."""
+    return sliding_1h_15m(table(spark, sf_dir, "events"))
+
+
+@query("j_session_30m", oracle=_SESSIONS_30M_ORACLE)
+def j_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``sessions_30m`` over the events table."""
+    return sessions_30m(table(spark, sf_dir, "events"))
+
+
+@query("j_stream_dedup", oracle=_DISTINCT_IDS_ORACLE)
 def j_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-id elimination: the batch final set (streaming
     ``dropDuplicates`` within a watermark produces the same set for a
@@ -358,51 +417,21 @@ def j_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id").dropDuplicates(["event_id"])
 
 
-def hourly_type_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming form of j_tumbling_1h: the staged events read one
-    file per micro-batch, counted and value-summed per (1-hour tumbling
-    window, event_type), as (h, event_type, cnt, sum_value).
-
-    Scale: state = one (window, event_type) counter pair per group in
-    the state store; in production a watermark (as in
-    j_watermark_late_drop) bounds it to the lateness horizon. The
-    shuffle is keyed (window, event_type) exactly like the batch plan.
-    """
-    return (
-        events_stream(spark, sf_dir, per_trigger=1)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), dround(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("h"), "event_type", "cnt", "sum_value")
-    )
-
-
-@query(
-    "j_tumbling_1h_stream",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS h, event_type,
-           COUNT(*) AS cnt,
-           ROUND(SUM(value) * 100, 0) / 100 AS sum_value
-    FROM events GROUP BY h, event_type
-    """,
-)
+@query("j_tumbling_1h_stream", oracle=_HOURLY_BY_TYPE_ORACLE)
 def j_tumbling_1h_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL form of j_tumbling_1h: the same windowed aggregation
-    executed by the Structured Streaming engine — file source over the
-    staged events (one file per micro-batch), complete-mode memory sink,
-    final table returned. The driver's hash-match against the identical
-    batch SQL oracle verifies the streaming engine's final state, not a
-    batch stand-in. The stream and its scale notes are
-    ``hourly_type_stream``.
+    """INCREMENTAL form of j_tumbling_1h: ``hourly_by_type`` executed by
+    the Structured Streaming engine — file source over the staged
+    events (one file per micro-batch), complete-mode memory sink, final
+    table returned. The driver's hash-match against the batch SQL
+    oracle verifies the streaming engine's final state, not a batch
+    stand-in.
     """
-    stream = hourly_type_stream(spark, sf_dir)
+    stream = hourly_by_type(events_stream(spark, sf_dir, per_trigger=1))
     with FiniteStream(spark) as fs:
         return fs.run(stream, "complete")
 
 
-@query(
-    "j_stream_dedup_stream",
-    oracle="SELECT DISTINCT event_id FROM events",
-)
+@query("j_stream_dedup_stream", oracle=_DISTINCT_IDS_ORACLE)
 def j_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL form of j_stream_dedup: streaming ``dropDuplicates``
     across micro-batches (append-mode memory sink) — the state store
@@ -463,10 +492,7 @@ def j_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fs.run(stream, "append", waves=(first, second))
 
 
-@query(
-    "j_stateful_running",
-    oracle="SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id",
-)
+@query("j_stateful_running", oracle=_USER_COUNTS_ORACLE)
 def j_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final state of the keyed running-count operator. The incremental
     form maintains one counter per user in the state store and emits
@@ -478,23 +504,12 @@ def j_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id").agg(F.count("*").alias("n_events"))
 
 
-@query(
-    "j_stream_join_static",
-    oracle="""
-    SELECT event_id, event_type, c_name, c_mktsegment
-    FROM events JOIN customer ON user_id = c_custkey
-    """,
-)
+@query("j_stream_join_static", oracle=_CUSTOMER_EVENTS_ORACLE)
 def j_stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment: events joined to the customer
-    dimension. In streaming this is a broadcast of the static side into
-    every micro-batch (no state, no shuffle of the stream); the final
-    output equals the batch join (harness-asserted)."""
-    ev = table(spark, sf_dir, "events")
-    c = table(spark, sf_dir, "customer")
-    return ev.join(F.broadcast(c), ev.user_id == c.c_custkey).select(
-        "event_id", "event_type", "c_name", "c_mktsegment"
-    )
+    """Stream-static enrichment: ``enrich_customer`` over the events
+    table. Its streaming twin's final output equals this batch join
+    (harness-asserted)."""
+    return enrich_customer(spark, sf_dir, table(spark, sf_dir, "events"))
 
 
 @query(
@@ -552,10 +567,7 @@ def j_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fs.run(joined, "append")
 
 
-@query(
-    "j_stateful_stream",
-    oracle="SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id",
-)
+@query("j_stateful_stream", oracle=_USER_COUNTS_ORACLE)
 def j_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSTOM KEYED STATE executed by the streaming engine:
     applyInPandasWithState maintains one counter per user in the state
@@ -597,112 +609,43 @@ def j_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return updates.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
-@query(
-    "j_session_30m_stream",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         < INTERVAL 30 MINUTES
-                    THEN 0 ELSE 1 END AS new_s
-        FROM events
-    ),
-    islands AS (
-        SELECT user_id, ts,
-               SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS island
-        FROM flagged
-    )
-    SELECT user_id,
-           MIN(ts) AS s_start,
-           MAX(ts) + INTERVAL 30 MINUTES AS s_end,
-           COUNT(*) AS n_events
-    FROM islands GROUP BY user_id, island
-    """,
-)
+@query("j_session_30m_stream", oracle=_SESSIONS_30M_ORACLE)
 def j_session_30m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL form of j_session_30m: session windows computed BY THE
-    STREAMING ENGINE — the state store merges/extends open sessions as
-    micro-batches arrive, including sessions spanning micro-batch
+    """INCREMENTAL form of j_session_30m: ``sessions_30m`` computed BY
+    THE STREAMING ENGINE — the state store merges/extends open sessions
+    as micro-batches arrive, including sessions spanning micro-batch
     boundaries (the case the batch form can't exercise). Complete-mode
     memory sink; the final table must hash-match the same
     gaps-and-islands batch oracle as j_session_30m.
-
-    Scale: streaming session_window state is one open-session record
-    per (user, session) in the state store, merged on arrival; a
-    watermark (j_watermark_late_drop) would bound retention in an
-    unbounded deployment. Shuffle is keyed on user_id — identical to
-    the batch plan.
     """
-    stream = (
-        events_stream(spark, sf_dir, per_trigger=1)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("s_start"),
-            F.col("w.end").alias("s_end"),
-            "n_events",
-        )
-    )
+    stream = sessions_30m(events_stream(spark, sf_dir, per_trigger=1))
     with FiniteStream(spark) as fs:
         return fs.run(stream, "complete")
 
 
-@query(
-    "j_sliding_1h_15m_stream",
-    oracle="""
-    SELECT w_start, COUNT(*) AS cnt FROM (
-        SELECT time_bucket(INTERVAL 15 MINUTES, ts)
-               - k.k * INTERVAL 15 MINUTES AS w_start
-        FROM events, (SELECT unnest(generate_series(0, 3)) AS k) k
-    ) GROUP BY w_start
-    """,
-)
+@query("j_sliding_1h_15m_stream", oracle=_SLIDING_1H_15M_ORACLE)
 def j_sliding_1h_15m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL form of j_sliding_1h_15m: overlapping 1h/15min
-    windows maintained by the streaming engine across micro-batches
-    (each event updates 4 window states), complete-mode memory sink,
-    final table hash-matched to the same batch oracle.
-
-    Scale: state = one counter per open window (4x tumbling's count);
-    watermarks bound retention exactly as in the tumbling case.
+    """INCREMENTAL form of j_sliding_1h_15m: ``sliding_1h_15m``
+    maintained by the streaming engine across micro-batches (each event
+    updates 4 window states), complete-mode memory sink, final table
+    hash-matched to the same batch oracle.
     """
-    stream = (
-        events_stream(spark, sf_dir, per_trigger=1)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("w_start"), "cnt")
-    )
+    stream = sliding_1h_15m(events_stream(spark, sf_dir, per_trigger=1))
     with FiniteStream(spark) as fs:
         return fs.run(stream, "complete")
 
 
-@query(
-    "j_stream_join_static_stream",
-    oracle="""
-    SELECT event_id, event_type, c_name, c_mktsegment
-    FROM events JOIN customer ON user_id = c_custkey
-    """,
-)
+@query("j_stream_join_static_stream", oracle=_CUSTOMER_EVENTS_ORACLE)
 def j_stream_join_static_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL form of j_stream_join_static: the enrichment join
+    """INCREMENTAL form of j_stream_join_static: ``enrich_customer``
     executed BY the streaming engine — file-source micro-batches of
     events, static customer dimension joined into every batch,
-    append-mode memory sink. Stateless (no stream-side buffering): each
-    micro-batch broadcasts the dim and emits immediately, so the final
-    emitted set must equal the batch join, which the oracle verifies.
-
-    Scale: the dim re-broadcasts per micro-batch (cached after the
-    first); the stream side never shuffles. This is the standard
-    streaming feature-enrichment topology — dimension updates between
-    batches are picked up automatically because the static plan is
-    re-bound each trigger."""
-    c = table(spark, sf_dir, "customer")
-    stream = (
-        events_stream(spark, sf_dir, per_trigger=1)
-        .join(F.broadcast(c), F.col("user_id") == F.col("c_custkey"))
-        .select("event_id", "event_type", "c_name", "c_mktsegment")
+    append-mode memory sink. Stateless (no stream-side buffering), so
+    the final emitted set must equal the batch join, which the oracle
+    verifies. This is the standard streaming feature-enrichment
+    topology."""
+    stream = enrich_customer(
+        spark, sf_dir, events_stream(spark, sf_dir, per_trigger=1)
     )
     with FiniteStream(spark) as fs:
         return fs.run(stream, "append")
@@ -829,15 +772,7 @@ def j_tumbling_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fs.run(stream, "append")
 
 
-@query(
-    "j_tumbling_available_now",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS h, event_type,
-           COUNT(*) AS cnt,
-           ROUND(SUM(value) * 100, 0) / 100 AS sum_value
-    FROM events GROUP BY h, event_type
-    """,
-)
+@query("j_tumbling_available_now", oracle=_HOURLY_BY_TYPE_ORACLE)
 def j_tumbling_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hourly aggregation executed under ``Trigger.AvailableNow`` —
     the INCREMENTAL-BATCH operating mode between the always-on stream
@@ -849,10 +784,10 @@ def j_tumbling_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding a cluster 24/7. Final state hash-matches the same batch
     oracle as both siblings.
 
-    Scale: the state/shuffle shape of ``hourly_type_stream``; the
-    trigger only changes scheduling — each scheduled run resumes from
-    the checkpoint and processes the delta since the last run."""
-    stream = hourly_type_stream(spark, sf_dir)
+    Scale: the state/shuffle shape of ``hourly_by_type``; the trigger
+    only changes scheduling — each scheduled run resumes from the
+    checkpoint and processes the delta since the last run."""
+    stream = hourly_by_type(events_stream(spark, sf_dir, per_trigger=1))
     with FiniteStream(spark) as fs:
         return fs.run(stream, "complete", available_now=True)
 

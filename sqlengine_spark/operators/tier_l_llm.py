@@ -93,7 +93,7 @@ def _verify_jaccard(
     )
 
 
-def _prefix_postings(tok: DataFrame, tau_num: int = 3, tau_den: int = 5) -> DataFrame:
+def _prefix_postings(tok: DataFrame, tau_num: int, tau_den: int) -> DataFrame:
     """Prefix-filter pruning (τ = tau_num/tau_den): per doc of n
     distinct tokens, keep only its first n − ⌈τ·n⌉ + 1 tokens in the
     global (document-frequency asc, token asc) order. ⌈τ·n⌉ is exact
@@ -118,6 +118,46 @@ def _prefix_postings(tok: DataFrame, tau_num: int = 3, tau_den: int = 5) -> Data
         .filter(F.col("r") <= F.col("n") - ceil_tau_n + 1)
         .select("doc_id", "t")
     )
+
+
+def _prefix_jaccard_join(feats: DataFrame, tau_num: int, tau_den: int) -> DataFrame:
+    """Every pair (doc_a < doc_b) of ``feats`` (distinct (doc_id, t)
+    features per doc) with set-Jaccard ≥ τ = tau_num/tau_den, as
+    (doc_a, doc_b, jaccard): the prefix-filtered ssjoin (Chaudhuri'06 /
+    Xiao'08) behind l_simjoin_jaccard, l_simjoin_jaccard_hi's fallback,
+    l_simjoin_ngram and l_dedup_cluster.
+
+    - global feature order = (document frequency asc, feature asc);
+    - per doc of n distinct features, the prefix is its first
+      n − ⌈τ·n⌉ + 1 in that order (``_prefix_postings``, exact integer
+      ceiling);
+    - theorem: any pair with J ≥ τ shares ≥ 1 feature within BOTH
+      prefixes (overlap o ≥ τ·max(|a|,|b|) pigeonholes into the
+      prefix), so joining prefix × prefix postings loses nothing;
+    - exact verification (``_verify_jaccard``) on the distinct
+      candidates only, at threshold tau_num / tau_den (the same double
+      as the decimal literal).
+
+    Scale: a stopword (df → N) ranks LAST in the global order, so it
+    only enters prefixes of docs that consist almost entirely of
+    stopwords; posting-list self-join mass drops from Σ df² to Σ
+    prefix-df², and the verify is linear in surviving candidates. The
+    candidate self-join is pinned shuffle_hash (rule 14b) HERE, once
+    for all four callers: both posting sides are corpus-growing, and
+    fixture-scale stats must not statically broadcast a side that is
+    docs × prefix at 100 TB (unpinned, Catalyst broadcasts
+    l_simjoin_ngram's gram postings at sf0.01). tests/test_plans.py
+    asserts the pin."""
+    pref = _prefix_postings(feats, tau_num, tau_den)
+    pa = pref.select(F.col("doc_id").alias("doc_a"), "t")
+    pb = pref.select(F.col("doc_id").alias("doc_b"), "t")
+    cands = (
+        pa.join(pb.hint("shuffle_hash"), "t")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    return _verify_jaccard(cands, feats, threshold=tau_num / tau_den)
 
 
 @query(
@@ -162,45 +202,17 @@ def l_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def l_simjoin_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT token-Jaccard self-join (J ≥ 0.6) via PREFIX-FILTERED
-    inverted index (Chaudhuri'06 / Xiao'08 ssjoin family) — the answer
-    is identical to the naive inverted-index join (same oracle, same
-    hash), but candidate generation only joins each doc's PREFIX
-    postings:
+    """EXACT token-Jaccard self-join (J ≥ 0.6): ``_prefix_jaccard_join``
+    over the distinct tokens of each document (⌈0.6·n⌉ is the exact
+    integer (3n+4) div 5). The answer is identical to the naive
+    inverted-index join (same oracle, same hash); only candidate
+    generation is pruned, which is what bounds stopword skew at 100 TB.
 
-    - global token order = (document frequency asc, token asc);
-    - per doc of n distinct tokens, the prefix is its first
-      n − ⌈τ·n⌉ + 1 tokens in that order (⌈0.6·n⌉ computed as exact
-      integer (3n+4) div 5 — float ceil could overshoot and drop
-      true pairs);
-    - theorem: any pair with J ≥ τ shares ≥ 1 token within BOTH
-      prefixes (overlap o ≥ τ·max(|a|,|b|) pigeonholes into the
-      prefix), so joining prefix×prefix postings loses nothing;
-    - exact verification (_verify_jaccard) on the candidates only.
-
-    Scale: this is what bounds stopword skew at 100 TB — a stopword
-    (df → N) ranks LAST in the global order, so it only enters prefixes
-    of docs that consist almost entirely of stopwords; posting-list
-    self-join mass drops from Σ df² to Σ prefix-df², and the verify is
-    linear in surviving candidates. The df table is |vocab|-sized —
-    joined PLAIN (AQE broadcasts it only when actually small; vocab is
-    Heaps-law unbounded at 100 TB); prefix ranking is one shuffle
-    keyed doc_id."""
+    Scale: the df table is |vocab|-sized — joined PLAIN (AQE broadcasts
+    it only when actually small; vocab is Heaps-law unbounded at
+    100 TB); prefix ranking is one shuffle keyed doc_id."""
     d = table(spark, sf_dir, "documents")
-    tok = _tokens(d)
-    pref = _prefix_postings(tok)
-    pa = pref.select(F.col("doc_id").alias("doc_a"), "t")
-    pb = pref.select(F.col("doc_id").alias("doc_b"), "t")
-    # pair-generation self-join pinned shuffle_hash (r12, rule 14b):
-    # both posting sides are corpus-growing; fixture-scale stats must
-    # not statically broadcast a side that is docs x prefix at 100 TB.
-    cands = (
-        pa.join(pb.hint("shuffle_hash"), "t")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _verify_jaccard(cands, tok, threshold=0.6)
+    return _prefix_jaccard_join(_tokens(d), 3, 5)
 
 
 @query(
@@ -247,8 +259,8 @@ def l_simjoin_jaccard_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.89 M candidate pairs at sf0.1 (70 s), against a 35.6 k answer.
     The signature route is what a 100 TB near-dup pass does first
     anyway (exact-set dedup before any similarity machinery); the
-    general-τ prefix join (l_simjoin_jaccard) remains the fallback
-    branch when the data's n_max defeats the bound.
+    general-τ prefix join (``_prefix_jaccard_join``) remains the
+    fallback branch when the data's n_max defeats the bound.
 
     Single corpus scan (round-5 verdict item 3): the per-doc sorted
     distinct-token arrays are tokenized ONCE and local-checkpointed
@@ -281,16 +293,7 @@ def l_simjoin_jaccard_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
         )
     tok = per_doc.select("doc_id", F.explode("ts").alias("t"))
-    pref = _prefix_postings(tok, tau_num=tau_num, tau_den=tau_den)
-    pa = pref.select(F.col("doc_id").alias("doc_a"), "t")
-    pb = pref.select(F.col("doc_id").alias("doc_b"), "t")
-    cands = (
-        pa.join(pb, "t")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _verify_jaccard(cands, tok, threshold=tau_num / tau_den)
+    return _prefix_jaccard_join(tok, tau_num, tau_den)
 
 
 @query(
@@ -341,9 +344,9 @@ def l_sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "l_sim_join_threshold",
-    oracle="""
+#: Every vector pair (va < vb) with cosine ≥ 0.4: one contract, two
+#: physical strategies (l_sim_join_threshold, l_sim_join_gemm).
+_COSINE_PAIRS_ORACLE = """
     SELECT a.vec_id AS va, b.vec_id AS vb,
            ROUND((SELECT SUM(a.embedding[s.i]::DOUBLE * b.embedding[s.i]::DOUBLE)
                   FROM (SELECT unnest(generate_series(1, 64)) AS i) s)
@@ -351,25 +354,37 @@ def l_sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     WHERE (SELECT SUM(a.embedding[s.i]::DOUBLE * b.embedding[s.i]::DOUBLE)
            FROM (SELECT unnest(generate_series(1, 64)) AS i) s) >= 0.4
-    """,
-)
-def l_sim_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All vector pairs with cosine ≥ 0.4 (the data's max is 0.513, so
-    0.95 would be vacuous). Brute-force crossJoin is sanctioned ONLY
-    because the input is provably 500 rows (≤125k pairs); the 100 TB
-    plan is random-hyperplane LSH: sign-bucket each vector on ~16
-    hyperplanes, self-join per bucket (plus neighboring bands), verify
-    exact cosine on candidates — same shape as l_dedup_near_minhash."""
-    e = table(spark, sf_dir, "embeddings")
+    """
+
+
+def _cosine_pairs(e: DataFrame) -> DataFrame:
+    """Every pair of ``e``'s vectors with va < vb and cosine ≥ 0.4, as
+    (va, vb, raw): ``raw`` is the unrounded vdot (vectors are unit-norm,
+    so cosine ≡ dot), the sequential double fold the oracles replay.
+    The threshold fits this corpus (max cosine 0.513, so 0.95 would be
+    vacuous).
+
+    Scale: a brute-force pair join, sanctioned ONLY because the input is
+    provably 500 rows (≤125k pairs); the 100 TB plan is
+    random-hyperplane LSH (ann.lsh_sim_join: sign-bucket each vector,
+    self-join per band, verify exact cosine on candidates — same shape
+    as l_dedup_near_minhash)."""
     a = e.select(F.col("vec_id").alias("va"), F.col("embedding").alias("ea"))
     b = e.select(F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"))
-    sim = vdot(F.col("ea"), F.col("eb"))
     return (
         a.join(b, F.col("va") < F.col("vb"))
-        .withColumn("raw", sim)
+        .withColumn("raw", vdot(F.col("ea"), F.col("eb")))
         .filter(F.col("raw") >= 0.4)
-        .select("va", "vb", dround(F.col("raw"), 6).alias("sim"))
+        .select("va", "vb", "raw")
     )
+
+
+@query("l_sim_join_threshold", oracle=_COSINE_PAIRS_ORACLE)
+def l_sim_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All vector pairs with cosine ≥ 0.4: ``_cosine_pairs`` with the
+    similarity rounded to 6 dp."""
+    e = table(spark, sf_dir, "embeddings")
+    return _cosine_pairs(e).select("va", "vb", dround(F.col("raw"), 6).alias("sim"))
 
 
 @query(
@@ -392,7 +407,7 @@ def l_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     other vector (cosine). Output is integer-only (no float hash risk);
     the similarity ordering is the double-pinned dot, tiebroken by
     neighbor id. Same bounded-crossJoin caveat + LSH scale path as
-    l_sim_join_threshold."""
+    ``_cosine_pairs``."""
     e = table(spark, sf_dir, "embeddings")
     a = e.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("ea"))
     b = e.select(
@@ -846,18 +861,10 @@ def l_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — the greedy min-id canonicalization used by embedding
     dedup pipelines. Expressed as an anti-join against the thresholded
     pair set, so the survivors are exactly reproducible in SQL.
-    Threshold 0.4 fits this corpus (max cosine 0.513); the candidate
-    pair generation swaps to ann.lsh_sim_join at scale — the anti-join
-    stage is unchanged."""
+    The pair set is ``_cosine_pairs``; its generation swaps to
+    ann.lsh_sim_join at scale — the anti-join stage is unchanged."""
     e = table(spark, sf_dir, "embeddings")
-    a = e.select(F.col("vec_id").alias("va"), F.col("embedding").alias("ea"))
-    b = e.select(F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"))
-    dup_ids = (
-        a.join(b, F.col("va") < F.col("vb"))
-        .filter(vdot(F.col("ea"), F.col("eb")) >= 0.4)
-        .select(F.col("vb").alias("vec_id"))
-        .distinct()
-    )
+    dup_ids = _cosine_pairs(e).select(F.col("vb").alias("vec_id")).distinct()
     return e.select("vec_id").join(dup_ids, "vec_id", "left_anti")
 
 
@@ -1183,10 +1190,10 @@ def l_simjoin_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; 1-based element_at matches DuckDB's 1-based a[i]).
 
     Same scale shape as l_simjoin_jaccard and strictly better skew
-    behavior: the SAME prefix-filter + exact-verify stages run on the
-    gram postings, and 3-gram document frequencies are far more
-    discriminative than single-token dfs (stopword 3-grams are rare), so
-    prefix postings prune harder."""
+    behavior: ``_prefix_jaccard_join`` runs on the gram postings, and
+    3-gram document frequencies are far more discriminative than
+    single-token dfs (stopword 3-grams are rare), so prefix postings
+    prune harder."""
     d = table(spark, sf_dir, "documents")
     a = F.split("text", " ")
     grams3 = F.transform(
@@ -1206,16 +1213,7 @@ def l_simjoin_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("t"),
     )
-    pref = _prefix_postings(feats, tau_num=1, tau_den=2)
-    pa = pref.select(F.col("doc_id").alias("doc_a"), "t")
-    pb = pref.select(F.col("doc_id").alias("doc_b"), "t")
-    cands = (
-        pa.join(pb, "t")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _verify_jaccard(cands, feats, threshold=0.5)
+    return _prefix_jaccard_join(feats, 1, 2)
 
 
 @query(
@@ -1684,11 +1682,11 @@ def l_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTER assignment — the final step of a real
-    corpus dedup: pairwise matches (exact token-Jaccard >= 0.9, via the
-    same prefix-filtered ssjoin as l_simjoin_jaccard) are treated as an
-    undirected graph and every document gets its connected-component id
-    (min doc_id in the component), its cluster size, and a keep flag for
-    the one representative per cluster. Pair-level dedup alone
+    corpus dedup: pairwise matches (exact token-Jaccard >= 0.9, via
+    ``_prefix_jaccard_join``) are treated as an undirected graph and
+    every document gets its connected-component id (min doc_id in the
+    component), its cluster size, and a keep flag for the one
+    representative per cluster. Pair-level dedup alone
     under-deletes: A~B and B~C with A!~C must still collapse to ONE kept
     doc, which only the transitive closure gives.
 
@@ -1711,16 +1709,7 @@ def l_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     for alternating large-star/small-star (Kiveris et al., 2014) — same
     per-round join shape, O(log n) rounds unconditionally."""
     d = table(spark, sf_dir, "documents")
-    tok = _tokens(d)
-    pref = _prefix_postings(tok, tau_num=9, tau_den=10)
-    cands = (
-        pref.select(F.col("doc_id").alias("doc_a"), "t")
-        .join(pref.select(F.col("doc_id").alias("doc_b"), "t"), "t")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    pairs = _verify_jaccard(cands, tok, threshold=0.9).select("doc_a", "doc_b")
+    pairs = _prefix_jaccard_join(_tokens(d), 9, 10).select("doc_a", "doc_b")
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("id", "nbr")
@@ -2013,18 +2002,7 @@ def l_sim_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 GEMM_BLOCK_ROWS = 2500
 
 
-@query(
-    "l_sim_join_gemm",
-    oracle="""
-    SELECT a.vec_id AS va, b.vec_id AS vb,
-           ROUND((SELECT SUM(a.embedding[s.i]::DOUBLE * b.embedding[s.i]::DOUBLE)
-                  FROM (SELECT unnest(generate_series(1, 64)) AS i) s)
-                 * 1e6, 0) / 1e6 AS sim
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE (SELECT SUM(a.embedding[s.i]::DOUBLE * b.embedding[s.i]::DOUBLE)
-           FROM (SELECT unnest(generate_series(1, 64)) AS i) s) >= 0.4
-    """,
-)
+@query("l_sim_join_gemm", oracle=_COSINE_PAIRS_ORACLE)
 def l_sim_join_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT cosine threshold join via block-partitioned GEMM — the
     scale path for MODERATE thresholds, where banded LSH provably

@@ -9,11 +9,12 @@ partition-count tuning at 100 TB (SURVEY §4).
 Every file an operator writes lives under ``SCRATCH``, through one of
 two helpers. ``staged()`` builds an input the operator derives from
 the tables once, keyed by Spark application, name and full ``sf_dir``,
-and removes it at process exit. ``scratch()`` hands out a fixed-name
-store that each call empties, so a frame read from it stays valid
-until the next call of the same operator. Both names are fixed, so two
-processes that run operators at the same time need their own
-``SPARK_GRAFT_SCRATCH``.
+and removes it at process exit; the directory name carries the
+application, so processes that share ``SCRATCH`` never touch each
+other's builds. ``scratch()`` hands out a fixed-name store that each
+call empties, so a frame read from it stays valid until the next call
+of the same operator. Its names are fixed, so two processes that run
+operators at the same time need their own ``SPARK_GRAFT_SCRATCH``.
 """
 
 from __future__ import annotations
@@ -74,14 +75,17 @@ def staged(
     """The directory ``build`` fills with an input derived from
     ``sf_dir``, built once per (Spark application, ``name``, resolved
     ``sf_dir``) and rebuilt if it has gone. It sits under ``SCRATCH``,
-    named after ``name`` and a hash of the full ``sf_dir``: two data
-    dirs that share a basename never serve each other's files, and a
-    catalog table named after the directory is unique the same way.
-    ``build(path)`` gets an empty, existing ``path``. Every directory
-    built here is removed at process exit."""
+    named after ``name`` and a hash of the application id and the full
+    ``sf_dir``: two data dirs that share a basename never serve each
+    other's files, a catalog table named after the directory is unique
+    the same way, and a second process on the same ``SCRATCH`` never
+    rebuilds or removes the first one's directory. ``build(path)`` gets
+    an empty, existing ``path``. Every directory built here is removed
+    at process exit."""
+    app = spark.sparkContext.applicationId
     real = os.path.realpath(sf_dir)
-    key = (spark.sparkContext.applicationId, name, real)
-    digest = hashlib.sha1(real.encode()).hexdigest()[:10]
+    key = (app, name, real)
+    digest = hashlib.sha1(f"{app}\0{real}".encode()).hexdigest()[:10]
     path = os.path.join(SCRATCH, f"{name}_{digest}")
     if key not in _STAGED or not os.path.isdir(path):
         shutil.rmtree(path, ignore_errors=True)

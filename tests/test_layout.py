@@ -308,3 +308,38 @@ def arrow_udfs_without_annotations(pkg: Path = PKG) -> list[str]:
 def test_arrow_udf_functions_carry_real_annotations():
     found = arrow_udfs_without_annotations()
     assert not found, found
+
+
+def duplicated_oracles(pkg: Path = PKG) -> list[list[str]]:
+    """Every group of two or more ``oracle=`` string or f-string
+    literals in ``@query(...)`` calls under ``pkg`` that are equal once
+    whitespace runs are collapsed, each as ``file:line qid`` entries."""
+    groups: dict[str, list[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg.parent)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "query"
+            ):
+                continue
+            for kw in node.keywords:
+                lit = kw.value
+                literal = isinstance(lit, (ast.Constant, ast.JoinedStr))
+                if kw.arg != "oracle" or not literal:
+                    continue
+                text = lit.value if isinstance(lit, ast.Constant) else ast.unparse(lit)
+                qid = ast.unparse(node.args[0]) if node.args else "?"
+                groups.setdefault(" ".join(str(text).split()), []).append(
+                    f"{rel}:{lit.lineno} {qid}"
+                )
+    return [g for g in groups.values() if len(g) > 1]
+
+
+def test_oracle_sql_declared_once():
+    """Operators that share one answer (a batch operator and its stream
+    twin, two strategies for one contract) share one oracle constant:
+    no two ``@query`` oracle literals are equal up to whitespace."""
+    found = duplicated_oracles()
+    assert not found, "\n".join(", ".join(g) for g in found)

@@ -147,6 +147,18 @@ def test_verify_jaccard_stage_never_broadcasts(spark):
 
     for m in re.finditer(r"\(\d+\) BroadcastHashJoin[^(]*", plan):
         assert "doc_" not in m.group(0), m.group(0)
+    # the candidate self-join of every prefix-filtered ssjoin (the
+    # t-keyed join carrying doc_a < doc_b) is pinned too: on fixture
+    # stats the token and gram postings both looked broadcastable
+    for qid in ("l_simjoin_jaccard", "l_simjoin_ngram"):
+        cands = [
+            sec
+            for sec in re.split(r"\n(?=\(\d+\) )", _plan(spark, qid))
+            if re.search(r"Left keys \[1\]: \[t#", sec)
+            and re.search(r"Join condition: \(doc_a#\w+ < doc_b#\w+\)", sec)
+        ]
+        assert len(cands) == 1, (qid, cands)
+        assert re.match(r"\(\d+\) ShuffledHashJoin", cands[0]), (qid, cands[0])
 
 
 def test_simjoin_prefix_prunes_postings(spark):
@@ -161,7 +173,7 @@ def test_simjoin_prefix_prunes_postings(spark):
     from sqlengine_spark.session import table
 
     tok = _tokens(table(spark, SF_DIR, "documents"))
-    pref = _prefix_postings(tok)
+    pref = _prefix_postings(tok, 3, 5)
     n_tok, n_pref = tok.count(), pref.count()
     assert n_pref < 0.6 * n_tok
     # exact per-doc bound: prefix length == n - ceil(0.6 n) + 1
